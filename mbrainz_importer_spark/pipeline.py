@@ -17,6 +17,8 @@ golden-format parity only.
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -48,6 +50,8 @@ class Importer:
     basedir: str
     enums: DataFrame = field(init=False)
     supers: DataFrame = field(init=False)
+    # frames persisted by the open stage (None outside `stage()`)
+    _held: list[DataFrame] | None = field(init=False, default=None, repr=False)
 
     def __post_init__(self) -> None:
         self.enums = enums_dim(self.spark, f"{self.basedir}/entities/enums.edn").cache()
@@ -98,10 +102,34 @@ class Importer:
         return out
 
     # -- entity stages (distributed) --------------------------------------
+    @contextmanager
+    def stage(self) -> Iterator[None]:
+        """Scope of one entity stage. Inside it, `transformed` persists the
+        parsed source and the transformed frame, so every action of the
+        stage (miss guard, batching, load stats, write) reads each file's
+        parse once; on exit, by any path, both are released. Outside a
+        stage `transformed` returns the plain lazy plan."""
+        self._held = held = []
+        try:
+            yield
+        finally:
+            self._held = None
+            for df in reversed(held):  # dependents before their inputs
+                df.unpersist()
+
+    def _keep(self, df: DataFrame) -> DataFrame:
+        if self._held is None:
+            return df
+        self._held.append(df)
+        return df.persist()
+
     def transformed(self, type_name: str) -> DataFrame:
-        """EDN source -> per-type transform with dim resolution."""
-        raw = self.read_entities(type_name)
-        return TRANSFORMS[type_name](raw, self.enums, self.supers)
+        """EDN source -> per-type transform with dim resolution. Inside a
+        `stage()` both frames are persisted; a transform's miss guard, where
+        it has one, is the stage's first action and materializes the
+        source."""
+        raw = self._keep(self.read_entities(type_name))
+        return self._keep(TRANSFORMS[type_name](raw, self.enums, self.supers))
 
     def create_batches(
         self, type_name: str, batch_size: int = DEFAULT_BATCH_SIZE
@@ -139,7 +167,11 @@ class Importer:
         the hazard the reference README warns about ('Never import at
         different batch sizes into the same db'). The requested size is
         recorded at load START (so crashed runs are covered too) and any
-        mismatch raises instead of proceeding."""
+        mismatch raises instead of proceeding.
+
+        A cold load runs in one `stage()`: it persists the parsed source
+        and the transformed, guarded frame, and releases both when the
+        write returns or anything raises (an enum miss included)."""
         import json as _json
         import os
 
@@ -175,8 +207,9 @@ class Importer:
             with open(size_file, "w", encoding="utf-8") as fh:
                 _json.dump({"batch_size": batch_size}, fh)
 
-        env = self.create_batches(type_name, batch_size).drop("__first_rn")
-        result = load_envelopes(sink, env, self.spark)
+        with self.stage():
+            env = self.create_batches(type_name, batch_size).drop("__first_rn")
+            result = load_envelopes(sink, env, self.spark)
         n_batches = sink.done_ids(self.spark).count()
         with open(marker, "w", encoding="utf-8") as fh:
             _json.dump({"n_batches": n_batches, "batch_size": batch_size}, fh)
@@ -215,7 +248,8 @@ class Importer:
         [{batch_id, data: [tx-map, ...]}, ...] in batch order."""
         if type_name in DIM_STAGES:
             return self.dim_batches(type_name, batch_size)
-        env = self.create_batches(type_name, batch_size).orderBy("__first_rn").collect()
+        with self.stage():
+            env = self.create_batches(type_name, batch_size).orderBy("__first_rn").collect()
         return [
             {
                 "batch_id": r["batch_id"],

@@ -1,10 +1,14 @@
 """Distributed EDN file source (SURVEY.md §2.1 S1–S5).
 
 The reference streams EDN forms off a PushbackReader on a dedicated thread
-(src/cognitect/xform/async_edn.clj:27-51). Spark-first equivalent: each file
-becomes one row of `spark.read.text(..., wholetext=True)`, and an
-Arrow-batched `mapInPandas` generator parses forms executor-side, yielding
-bounded chunks — parallelism across files, bounded memory per chunk.
+(src/cognitect/xform/async_edn.clj:27-51). Spark-first equivalent: the
+driver lists the matched files into a literal (path, rank) relation, and an
+Arrow-batched `mapInPandas` generator opens each file executor-side and
+feeds it to the incremental form parser, yielding bounded chunks —
+parallelism across files, memory bounded by the largest form. With
+`whole_file=True`, or for a URI scheme no filesystem library can open,
+each file is instead one row of `spark.read.text(..., wholetext=True)`
+(same rows, memory bounded by the largest file).
 
 A `_row_idx` column captures form order within the file: the reference gets
 stable input order implicitly from the file stream; we materialize it
@@ -23,6 +27,8 @@ DataFrames.
 
 from __future__ import annotations
 
+import glob
+import os
 from collections.abc import Iterator
 
 import pandas as pd
@@ -31,6 +37,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..edn import iter_forms
+from ..operators.localrel import local_df
 
 CHUNK = 2048
 _FILE_STRIDE = 1 << 40  # max forms per file before ordinals collide
@@ -58,18 +65,52 @@ def _file_ranks(spark: SparkSession, path: str) -> dict[str, int]:
     return {f: i for i, f in enumerate(files)}
 
 
+def _hidden(name: str) -> bool:
+    """Names Spark's file listing skips: `_`/`.` prefixes (markers such as
+    _SUCCESS, dot-files) and in-flight `._COPYING_` files."""
+    return (
+        (name.startswith("_") and "=" not in name)
+        or name.startswith(".")
+        or name.endswith("._COPYING_")
+    )
+
+
+def _local_file_ranks(path: str) -> dict[str, int]:
+    """`_file_ranks` for a local path, listed on the driver with no Spark
+    job. Same files: a directory gives its direct non-hidden files, a glob
+    (Python glob syntax) its non-hidden matches, a matched directory its
+    direct files. Same sorted-path ranks. A missing path or a glob that
+    matches nothing raises, as Spark's reader does."""
+    local = os.path.abspath(_norm_path(path) if _uri_scheme(path) else path)
+    if any(w in local for w in _WILDCARDS):
+        matches = [m for m in glob.glob(local) if not _hidden(os.path.basename(m))]
+    else:
+        matches = [local] if os.path.exists(local) else []
+    if not matches:
+        raise FileNotFoundError(f"Path does not exist: {path}")
+    files = []
+    for m in matches:
+        if os.path.isdir(m):
+            files.extend(
+                os.path.join(m, n) for n in os.listdir(m)
+                if not _hidden(n) and os.path.isfile(os.path.join(m, n))
+            )
+        elif not _hidden(os.path.basename(m)):
+            files.append(m)
+    return {f: i for i, f in enumerate(sorted(files))}
+
+
 _READ_CHUNK = 1 << 20  # 1 MiB of text per incremental parser feed
 
 # ---------------------------------------------------------------------------
-# Object-store access (r11 verdict #1): the form-streaming path used a plain
-# POSIX open(), so only local paths streamed with form-bounded memory; a
-# 100 TB crawl lives on S3/GCS. The per-task open and the driver-side listing
-# now dispatch on the URI scheme: POSIX for local paths (unchanged fast
-# path), fsspec when installed, else PyArrow's pyarrow.fs (baked into this
-# environment, S3/GCS/HDFS support compiled in). Unknown schemes fall back
-# to the wholetext reader (Spark's own Hadoop connectors may still handle
-# them — e.g. s3a:// with hadoop-aws on a real cluster), which keeps results
-# identical at file-bounded memory instead of failing.
+# Object-store access. Invariant: every path whose scheme some filesystem
+# layer can open streams with form-bounded memory, and every other path
+# still reads with identical results. The per-task open and the
+# driver-side listing dispatch on the URI scheme: POSIX for local paths,
+# fsspec when it registers the scheme, else PyArrow's pyarrow.fs
+# (S3/GCS/HDFS). Unknown schemes fall back to the wholetext reader, whose
+# Hadoop connectors may still handle them (e.g. s3a:// with hadoop-aws),
+# at file-bounded memory.
 
 _LOCAL_SCHEMES = ("", "file")
 # Hadoop-ecosystem scheme names PyArrow spells differently.
@@ -248,12 +289,13 @@ def read_edn_entities(
     fs_mode = _resolve_fs_mode(path, filesystem)
     if fs_mode == "wholetext":
         whole_file = True
-    if not whole_file and fs_mode != "posix":
+    if whole_file:
+        ranks = _file_ranks(spark, path)
+    elif fs_mode == "posix":
+        rank_items = sorted(_local_file_ranks(path).items())
+    else:
         uris = sorted(_list_uri_files(path, fs_mode))
         rank_items = [(u, i) for i, u in enumerate(uris)]
-    else:
-        ranks = _file_ranks(spark, path)
-        rank_items = sorted(ranks.items())
 
     def rows_to_frames(forms, base, with_idx):
         rows: list[dict] = []
@@ -286,9 +328,11 @@ def read_edn_entities(
                         with_index,
                     )
 
-        files = spark.createDataFrame(
-            rank_items, "path string, rank long"
-        ).repartition(max(len(rank_items), 1), "path")
+        # a literal relation of up to defaultParallelism rows already
+        # scans one row per task; only a longer list needs the exchange
+        files = local_df(spark, rank_items, "path string, rank long")
+        if len(rank_items) > spark.sparkContext.defaultParallelism:
+            files = files.repartition(len(rank_items), "path")
         return files.mapInPandas(parse_stream, schema=out_schema)
 
     def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

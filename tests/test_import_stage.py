@@ -1,0 +1,232 @@
+"""Entity-stage import over a tiny inline corpus (no reference tree needed):
+loaded counts, no-op re-runs, the stage's Spark job budget, release of the
+frames a stage persists, and the driver-side POSIX file listing."""
+
+from __future__ import annotations
+
+import pytest
+from pyspark.errors import AnalysisException
+from pyspark.sql import types as T
+
+from mbrainz_importer_spark.operators.enums import MissingDimensionValue
+from mbrainz_importer_spark.pipeline import Importer
+from mbrainz_importer_spark.sources.edn_source import (
+    _file_ranks,
+    _local_file_ranks,
+    read_edn_entities,
+)
+
+NAME = T.StructType([T.StructField("name", T.StringType())])
+
+A1 = "00000000-0000-4000-8000-000000000001"
+A2 = "00000000-0000-4000-8000-000000000002"
+L1 = "00000000-0000-4000-8000-000000000011"
+L2 = "00000000-0000-4000-8000-000000000012"
+L3 = "00000000-0000-4000-8000-000000000013"
+G1 = "00000000-0000-4000-8000-000000000021"
+G2 = "00000000-0000-4000-8000-000000000022"
+R1 = "00000000-0000-4000-8000-000000000031"
+R2 = "00000000-0000-4000-8000-000000000032"
+
+CORPUS = {
+    "schema.edn": (
+        "[{:db/ident :artist/gid :db/valueType :db.type/uuid"
+        " :db/cardinality :db.cardinality/one}"
+        " {:db/ident :label/gid :db/valueType :db.type/uuid"
+        " :db/cardinality :db.cardinality/one}]\n"
+    ),
+    "enums.edn": (
+        '{artist_type {"Person" :artist.type/person}'
+        ' gender {"Female" :artist.gender/female}'
+        ' release_group_type {"Album" :release.type/album}'
+        ' release_packaging {"Jewel Case" :release.packaging/jewel-case}'
+        ' medium_format {"CD" :medium.format/cd}'
+        ' label_type {"Publisher" :label.type/publisher}}\n'
+    ),
+    "countries.edn": '{"GB" {:db/ident :country/GB :country/name "United Kingdom"}}\n',
+    "langs.edn": '{"eng" {:db/ident :language/eng :language/name "English"}}\n',
+    "scripts.edn": '{"Latn" {:db/ident :script/Latn :script/name "Latin"}}\n',
+    "artists.edn": (
+        f'{{:gid "{A1}" :name "Ann" :sortname "Ann" :type "Person"'
+        f' :gender "Female" :country "GB" :begin_date_year 1970}}\n'
+        f'{{:gid "{A2}" :name "Bo" :sortname "Bo"}}\n'
+    ),
+    "labels.edn": (
+        f'{{:gid "{L1}" :name "One" :type "Publisher" :country "GB"}}\n'
+        f'{{:gid "{L2}" :name "Two" :sort_name "two"}}\n'
+        f'{{:gid "{L3}" :name "Three" :begin_date_year 1999}}\n'
+    ),
+    "areleases.edn": (
+        f'{{:gid "{G1}" :name "First" :type "Album" :artist_credit "Ann"}}\n'
+        f'{{:gid "{G2}" :name "Second"}}\n'
+    ),
+    "releases.edn": (
+        f'{{:gid "{R1}" :name "First" :release_group "{G1}" :label "{L1}"'
+        f' :packaging "Jewel Case" :country "GB" :language "eng"'
+        f' :script "Latn" :date_year 2001 :acid 7}}\n'
+        f'{{:gid "{R2}" :name "Second" :release_group "{G2}"}}\n'
+    ),
+    "releases-artists.edn": (
+        f'{{:release "{R1}" :artist "{A1}"}}\n'
+        f'{{:release "{R2}" :artist "{A1}"}}\n'
+        f'{{:release "{R2}" :artist "{A2}"}}\n'
+    ),
+    "areleases-artists.edn": (
+        f'{{:release_group "{G1}" :artist "{A1}"}}\n'
+        f'{{:release_group "{G2}" :artist "{A2}"}}\n'
+    ),
+    # one row per track, clustered by medium id; track 1 of medium 1 has
+    # two artists, so media loads 3 media from 5 rows
+    "media.edn": (
+        f'{{:id 1 :release "{R1}" :position 1 :track_count 2 :format "CD"'
+        f' :name "T1" :tracknum 1 :artist "{A1}" :length 1000}}\n'
+        f'{{:id 1 :release "{R1}" :position 1 :track_count 2 :format "CD"'
+        f' :name "T1" :tracknum 1 :artist "{A2}" :length 1000}}\n'
+        f'{{:id 1 :release "{R1}" :position 1 :track_count 2 :format "CD"'
+        f' :name "T2" :tracknum 2 :artist "{A1}"}}\n'
+        f'{{:id 2 :release "{R1}" :position 2 :track_count 1'
+        f' :name "T3" :tracknum 1 :artist "{A1}"}}\n'
+        f'{{:id 3 :release "{R2}" :position 1 :track_count 1'
+        f' :name "T4" :tracknum 1 :artist "{A2}"}}\n'
+    ),
+}
+
+BATCH = 2  # small enough that most types span several batches
+EXPECTED = {
+    "artists": {"txes": 1, "datoms": 2},
+    "areleases": {"txes": 1, "datoms": 2},
+    "areleases-artists": {"txes": 1, "datoms": 2},
+    "labels": {"txes": 2, "datoms": 3},
+    "releases": {"txes": 1, "datoms": 2},
+    "releases-artists": {"txes": 2, "datoms": 3},
+    "media": {"txes": 2, "datoms": 3},
+}
+
+
+def _write_corpus(root, overrides=None) -> str:
+    ent = root / "entities"
+    ent.mkdir(parents=True)
+    for name, text in {**CORPUS, **(overrides or {})}.items():
+        (ent / name).write_text(text, encoding="utf-8")
+    return str(root)
+
+
+def _persisted(spark) -> int:
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
+@pytest.fixture(scope="module")
+def importer(spark, tmp_path_factory):
+    imp = Importer(spark, _write_corpus(tmp_path_factory.mktemp("corpus")))
+    imp.enums.count()  # materialize the dims' own caches up front, so the
+    imp.supers.count()  # persistent-RDD counts below see only stage frames
+    return imp
+
+
+def test_run_import_cold_then_noop(importer, tmp_path):
+    wh = str(tmp_path / "wh")
+    first = importer.run_import(wh, batch_size=BATCH)
+    assert first["schema"] == {"rows": 2}
+    assert first["enums"] == {"rows": 6}
+    assert first["super-enums"] == {"rows": 3}
+    assert {t: first[t] for t in EXPECTED} == EXPECTED
+    again = importer.run_import(wh, batch_size=BATCH)
+    assert {t: again[t] for t in EXPECTED} == {
+        t: {"txes": 0, "datoms": 0} for t in EXPECTED
+    }
+
+
+def test_cold_load_job_budget(importer, spark, tmp_path):
+    """The file list costs no Spark job and persisting the stage's frames
+    adds at most their own materialization. 25 jobs here; 26 before the
+    stage persisted its frames and listed files on the driver."""
+    sc = spark.sparkContext
+    group = "test-import-stage-cold-labels"
+    sc.setJobGroup(group, "cold load_type(labels)")
+    try:
+        assert importer.load_type("labels", str(tmp_path / "wh"), BATCH) == EXPECTED["labels"]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert 0 < jobs <= 25
+
+
+def test_stage_persists_source_and_transformed(importer, spark):
+    before = _persisted(spark)
+    with importer.stage():
+        assert importer.create_batches("labels", BATCH).count() == 2
+        assert _persisted(spark) == before + 2
+    assert _persisted(spark) == before
+
+
+def test_stage_frames_released_after_load(importer, spark, tmp_path):
+    before = _persisted(spark)
+    importer.load_type("releases", str(tmp_path / "wh"), BATCH)
+    assert _persisted(spark) == before
+
+
+def test_stage_frames_released_after_batch_tx_data(importer, spark):
+    before = _persisted(spark)
+    batches = importer.batch_tx_data("media", BATCH)
+    assert [b["batch_id"] for b in batches] == ["media-1", "media-2"]
+    assert _persisted(spark) == before
+
+
+def test_stage_frames_released_on_enum_miss(spark, tmp_path):
+    bad = f'{{:gid "{L1}" :name "One" :type "No Such Type"}}\n'
+    imp = Importer(spark, _write_corpus(tmp_path / "corpus", {"labels.edn": bad}))
+    imp.enums.count()
+    imp.supers.count()
+    before = _persisted(spark)
+    with pytest.raises(MissingDimensionValue, match="type"):
+        imp.load_type("labels", str(tmp_path / "wh"), BATCH)
+    assert _persisted(spark) == before
+    imp.enums.unpersist()
+    imp.supers.unpersist()
+
+
+# -------------------------------------------------------------------------
+# driver-side POSIX listing == the binaryFile listing
+# -------------------------------------------------------------------------
+
+@pytest.fixture
+def edn_dir(tmp_path):
+    d = tmp_path / "edn"
+    d.mkdir()
+    for name in ("b.edn", "a.edn", "c.txt", "_SUCCESS", ".a.edn.crc", ".hidden.edn"):
+        (d / name).write_text("{:name \"x\"}\n")
+    (d / "sub").mkdir()
+    (d / "sub" / "d.edn").write_text("{:name \"y\"}\n")
+    return d
+
+
+@pytest.mark.parametrize("form", [
+    "{d}/a.edn", "file:{d}/a.edn", "file://{d}/a.edn",
+    "{d}/*.edn", "{d}/[ab].edn", "{d}/*", "{d}", "file:{d}",
+])
+def test_local_listing_matches_binaryfile(spark, edn_dir, form):
+    path = form.format(d=edn_dir)
+    assert _local_file_ranks(path) == _file_ranks(spark, path)
+
+
+@pytest.mark.parametrize("form", ["{d}/missing.edn", "{d}/*.zzz"])
+def test_local_listing_missing_path_raises(spark, edn_dir, form):
+    path = form.format(d=edn_dir)
+    with pytest.raises(AnalysisException):
+        _file_ranks(spark, path)
+    with pytest.raises(FileNotFoundError):
+        _local_file_ranks(path)
+
+
+def test_stream_read_missing_path_raises(spark, edn_dir):
+    with pytest.raises(FileNotFoundError):
+        read_edn_entities(spark, f"{edn_dir}/*.zzz", NAME)
+
+
+def test_stream_read_plans_one_file_per_task(spark, edn_dir):
+    df = read_edn_entities(spark, f"{edn_dir}/*.edn", NAME)
+    assert "Exchange" not in df._jdf.queryExecution().executedPlan().toString()
+    assert df.rdd.getNumPartitions() == 2
+    assert sorted(r["name"] for r in df.collect()) == ["x", "x"]
