@@ -473,7 +473,7 @@ def resume_merge_swap(dest: str, stage: str | None = None) -> bool:
 
 def _swap_staged_partitions(
     stage: str, dest: str, touched: list[str], col: str = "a"
-) -> None:
+) -> dict:
     """Swap freshly-written staged partition directories into the store
     root by directory rename — the commit step of the write-once merge.
     Writes the recovery manifest first (staged = partitions present in
@@ -481,7 +481,8 @@ def _swap_staged_partitions(
     rows), then runs the same completion logic a crash recovery
     would, so there is exactly one code path for the moves. `col` is
     the hive partition column of both layouts (recorded in the
-    manifest so recovery needs no out-of-band knowledge)."""
+    manifest so recovery needs no out-of-band knowledge). Returns the
+    manifest."""
     import json
 
     staged = sorted(_staged_partition_dirs(stage, col))
@@ -498,10 +499,24 @@ def _swap_staged_partitions(
         json.dump(manifest, f)
     os.rename(final + ".tmp", final)
     resume_merge_swap(dest, stage)
+    return manifest
 
 
 def _stage_root(anchor: str) -> str:
     return anchor.rstrip("/") + ".__merge_staging"
+
+
+def _partition_bytes(root: str, attrs: list[str]) -> int:
+    """On-disk bytes of the `a=` partitions of `attrs` under `root` — a
+    driver-side directory listing, never a Spark job."""
+    dirs = _staged_partition_dirs(root)
+    parts = [os.path.join(root, dirs[a]) for a in attrs if a in dirs]
+    return sum(
+        os.path.getsize(os.path.join(d, f))
+        for d in parts
+        for f in os.listdir(d)
+        if os.path.isfile(os.path.join(d, f))
+    )
 
 
 def _read_swap_manifest(stage: str) -> dict | None:
@@ -622,103 +637,6 @@ def _increment_is_noop(existing: DataFrame, ops: DataFrame) -> bool:
     )
 
 
-def merge_datoms_increment(
-    spark,
-    path: str,
-    ops: DataFrame,
-    card_many: set[str] | frozenset[str] = frozenset(),
-    swap: bool = True,
-) -> None:
-    """Datomic's background INDEXING job, Spark-first: fold a tx-log
-    increment into the attribute-partitioned store at `path`, rewriting
-    ONLY the attribute partitions the increment touches. At 100 TB the
-    store is the engine and a full-store rewrite per batch is a
-    non-starter; this is O(touched partitions + increment) — untouched
-    attribute directories are never read, never written (file-identity
-    asserted in test_index_merge).
-
-    Write-once commit (default): the merged rows are written ONCE,
-    attribute-partitioned, into a staging sibling, and the staged
-    partition directories are renamed into the store
-    (`_swap_staged_partitions`). The previous design staged the merged
-    rows flat, read them back, and rewrote them through dynamic
-    partition overwrite — a second full write pass plus a read-back of
-    the merged content per merge. Measured honestly (PLAN_NOTES_r10.md
-    §17): the wall win is the eliminated pass (sf10 steady 1.3-1.4x),
-    NOT raw disk bytes on a cache-absorbing box — the deleted staging
-    file's writeback is largely CANCELLED there; on durable/remote
-    storage the second write is real I/O by construction. The swap is atomic per partition,
-    not across partitions; a crash mid-swap is healed by the manifest
-    (`resume_merge_swap`, called on entry here), and a crash mid-stage
-    leaves the store untouched. `swap=False` keeps the replaced
-    dynamic-overwrite path for A/B measurement.
-
-    Idempotent: re-merging the same increment is a no-op on content
-    (set semantics + max-tx displacement), so a crashed-and-retried
-    indexing job heals itself — the same redelivery contract as the
-    transactional sink (operators/idempotency.py; reference
-    cognitect/xform/batch.clj:42-60 restarts the same way).
-
-    An increment that retracts an attribute's every datom EMPTIES that
-    partition; the partitioned writer cannot express an empty
-    partition, so the emptied directory is removed explicitly (swap:
-    via the manifest's `emptied` set)."""
-    import shutil
-    from urllib.parse import unquote
-
-    # materialize the increment ONCE (the IVF/fulltext merges'
-    # discipline): ops is consumed by the touched-partition probe and
-    # again by current_datoms inside the staged write — without the cut
-    # each consumer re-derives the whole increment plan. O(increment)
-    # rows by contract (the tx-log batch), never store-scale — the
-    # _stage_merge caveat about checkpointing unbounded merged rows
-    # does not apply to the increment side.
-    ops = ops.localCheckpoint()
-    touched = sorted(r.a for r in ops.select("a").distinct().collect())
-    if not touched:
-        return
-    stage = _stage_root(path)
-    if swap:
-        if resume_merge_swap(path, stage):
-            spark.catalog.refreshByPath(path)
-        existing = read_datoms(spark, path).where(F.col("a").isin(touched))
-        # redelivery fast path: a provably inert increment (crash-retry
-        # or duplicate delivery) skips the touched-partition rewrite
-        if _increment_is_noop(existing, ops):
-            return
-        merged = current_datoms(existing, ops, card_many)
-        (
-            merged.select("e", "a", "v", "v_num")
-            .write.mode("overwrite")
-            .partitionBy("a")
-            .parquet(stage)
-        )
-        _swap_staged_partitions(stage, path, touched)
-        _drop_stage(path)
-        spark.catalog.refreshByPath(path)
-        return
-    existing = read_datoms(spark, path).where(F.col("a").isin(touched))
-    if _increment_is_noop(existing, ops):
-        return
-    merged = _stage_merge(
-        spark, current_datoms(existing, ops, card_many), path
-    )
-    remaining = {r.a for r in merged.select("a").distinct().collect()}
-    mode_key = "spark.sql.sources.partitionOverwriteMode"
-    prev = spark.conf.get(mode_key, "static")
-    spark.conf.set(mode_key, "dynamic")
-    try:
-        merged.write.mode("overwrite").partitionBy("a").parquet(path)
-    finally:
-        spark.conf.set(mode_key, prev)
-    emptied = set(touched) - remaining
-    if emptied:
-        for name in os.listdir(path):
-            if name.startswith("a=") and unquote(name[2:]) in emptied:
-                shutil.rmtree(os.path.join(path, name))
-    _drop_stage(path)
-
-
 def _stage_merge(
     spark,
     merged: DataFrame,
@@ -733,7 +651,7 @@ def _stage_merge(
     pinning them with an in-memory checkpoint stalls the executors
     (measured: a 30M-row localCheckpoint GC-stalled an 8g local[32]
     heap at the sf10 tier; the staged form runs in constant memory)."""
-    stage = anchor.rstrip("/") + ".__merge_staging"
+    stage = _stage_root(anchor)
     merged.select(*columns).write.mode("overwrite").parquet(stage)
     return spark.read.parquet(stage)
 
@@ -741,9 +659,179 @@ def _stage_merge(
 def _drop_stage(anchor: str) -> None:
     import shutil
 
-    stage = anchor.rstrip("/") + ".__merge_staging"
+    stage = _stage_root(anchor)
     if os.path.exists(stage):
         shutil.rmtree(stage)
+
+
+class _PathLayout:
+    """A datom store at a parquet path (`materialize_datoms`): staged in
+    the sibling `_stage_root(path)` directory, committed by refreshing
+    the path's cached file index."""
+
+    def __init__(self, spark, path: str):
+        self.spark, self.loc = spark, path
+
+    def heal(self) -> None:
+        if resume_merge_swap(self.loc, self.stage_dir()):
+            self.spark.catalog.refreshByPath(self.loc)
+        _drop_stage(self.loc)
+
+    def read(self) -> DataFrame:
+        return read_datoms(self.spark, self.loc)
+
+    def write_stage(self, df: DataFrame, first: bool) -> None:
+        (
+            df.select("e", "a", "v", "v_num")
+            .write.mode("overwrite" if first else "append")
+            .partitionBy("a")
+            .parquet(self.stage_dir())
+        )
+
+    def stage_dir(self) -> str:
+        return _stage_root(self.loc)
+
+    def commit(self, manifest: dict) -> None:
+        _drop_stage(self.loc)
+        self.spark.catalog.refreshByPath(self.loc)
+
+
+class _TableLayout:
+    """An entity-bucketed catalog table (`materialize_datoms_bucketed`):
+    staged in the table `table + suffix` with the identical bucket/sort
+    spec (bucket-file names encode the bucket id, so a renamed file
+    keeps its bucket identity), committed by re-syncing the catalog's
+    partition list."""
+
+    def __init__(self, spark, table: str, suffix: str = "__mergestage"):
+        self.spark, self.table = spark, table
+        self.stage_table = table + suffix
+        self.loc = _table_location(spark, table)
+        self.nb = _table_buckets(spark, table)
+
+    def heal(self) -> None:
+        # the stage table's LOCATION survives a process death (the
+        # catalog is in-memory): a manifest there means the predecessor
+        # died mid-swap, possibly before registering its partitions
+        stale = _warehouse_table_dir(self.spark, self.stage_table)
+        manifest = _read_swap_manifest(stale)
+        if resume_merge_swap(self.loc, stale):
+            _sync_partition_registrations(self.spark, self.table, manifest)
+        _drop_stale_table(self.spark, self.stage_table)
+
+    def read(self) -> DataFrame:
+        return self.spark.table(self.table).select("e", "a", "v", "v_num")
+
+    def write_stage(self, df: DataFrame, first: bool) -> None:
+        from ..sources.bucketed import writer_partitions
+
+        # pre-shuffle on (a, bucket-of-e): every (partition, bucket)
+        # lands in one task, so it is written as one sorted file
+        (
+            df.repartition(
+                writer_partitions(self.spark, self.nb),
+                F.col("a"), F.pmod(F.hash("e"), F.lit(self.nb)),
+            )
+            .select("e", "a", "v", "v_num")
+            .write.mode("overwrite" if first else "append")
+            .partitionBy("a")
+            .bucketBy(self.nb, "e")
+            .sortBy("e")
+            .format("parquet")
+            .saveAsTable(self.stage_table)
+        )
+
+    def stage_dir(self) -> str:
+        return _table_location(self.spark, self.stage_table)
+
+    def commit(self, manifest: dict) -> None:
+        # the swap moved files the catalog never saw: a new attribute's
+        # partition is invisible until registered, and an emptied one
+        # stays registered until dropped
+        _sync_partition_registrations(self.spark, self.table, manifest)
+        _drop_stale_table(self.spark, self.stage_table)
+
+
+def _merge_touched(
+    layout, ops: DataFrame, card_many: set[str] | frozenset[str]
+) -> None:
+    """The indexing job of both datom-store layouts: heal a half-done
+    swap, probe for a redelivery, stage the merged touched partitions,
+    swap them in, commit. `layout` (`_PathLayout`, `_TableLayout`)
+    says how the store is read, staged and committed."""
+    from ..sources.bucketed import _heap_bytes
+
+    # materialize the increment ONCE: the touched listing, the no-op
+    # probe and every staged write consume it. O(increment) rows by
+    # contract (the tx-log batch), never store-scale — the _stage_merge
+    # caveat about checkpointing unbounded merged rows does not apply.
+    ops = ops.localCheckpoint()
+    touched = sorted(r.a for r in ops.select("a").distinct().collect())
+    if not touched:
+        return
+    layout.heal()
+    existing = layout.read().where(F.col("a").isin(touched))
+    # redelivery fast path: a provably inert increment (crash-retry or
+    # duplicate delivery) skips the touched-partition rewrite
+    if _increment_is_noop(existing, ops):
+        return
+    # Split gate: above heap/4 bytes of touched partitions on disk,
+    # stage one write per touched attribute; at or below it, one write
+    # for all of them. Parquet expands ~3-5x into sort runs, so heap/4
+    # on disk is where one all-attributes sort reaches the heap's
+    # margin; per-attribute writes bound the peak to the largest
+    # partition, at one job's overhead per attribute. Either grouping
+    # is exact: current_datoms is keyed on (e, a), so restricting both
+    # inputs to a set of attributes partitions the same computation.
+    # Crash contract: the swap runs only after every group is staged,
+    # so a death mid-stage leaves the store untouched.
+    split = _partition_bytes(layout.loc, touched) > _heap_bytes() // 4
+    groups = [[a] for a in touched] if split else [touched]
+    for i, group in enumerate(groups):
+        in_group = F.col("a").isin(group)
+        layout.write_stage(
+            current_datoms(
+                existing.where(in_group), ops.where(in_group), card_many
+            ),
+            first=i == 0,
+        )
+    stage = layout.stage_dir()
+    layout.commit(_swap_staged_partitions(stage, layout.loc, touched))
+
+
+def merge_datoms_increment(
+    spark,
+    path: str,
+    ops: DataFrame,
+    card_many: set[str] | frozenset[str] = frozenset(),
+) -> None:
+    """Datomic's background INDEXING job, Spark-first: fold a tx-log
+    increment into the attribute-partitioned store at `path`, rewriting
+    ONLY the attribute partitions the increment touches. At 100 TB the
+    store is the engine and a full-store rewrite per batch is a
+    non-starter; this is O(touched partitions + increment) — untouched
+    attribute directories are never read, never written (file-identity
+    asserted in test_index_merge).
+
+    Write-once commit: the merged rows are written ONCE,
+    attribute-partitioned, into a staging sibling, and the staged
+    partition directories are renamed into the store
+    (`_swap_staged_partitions`). The swap is atomic per partition, not
+    across partitions; a crash mid-swap is healed by the manifest
+    (`resume_merge_swap`, called on entry here), and a crash mid-stage
+    leaves the store untouched.
+
+    Idempotent: re-merging the same increment is a no-op on content
+    (set semantics + max-tx displacement), so a crashed-and-retried
+    indexing job heals itself — the same redelivery contract as the
+    transactional sink (operators/idempotency.py; reference
+    cognitect/xform/batch.clj:42-60 restarts the same way).
+
+    An increment that retracts an attribute's every datom EMPTIES that
+    partition; the partitioned writer cannot express an empty
+    partition, so the swap removes the emptied directory (the
+    manifest's `emptied` set)."""
+    _merge_touched(_PathLayout(spark, path), ops, card_many)
 
 
 def merge_datoms_increment_bucketed(
@@ -751,7 +839,6 @@ def merge_datoms_increment_bucketed(
     table: str,
     ops: DataFrame,
     card_many: set[str] | frozenset[str] = frozenset(),
-    swap: bool = True,
 ) -> None:
     """The incremental indexing job over the ENTITY-BUCKETED store
     (`materialize_datoms_bucketed`) — same replay semantics as
@@ -761,18 +848,11 @@ def merge_datoms_increment_bucketed(
     Exchange-free (probe-verified and plan-asserted in
     test_index_merge).
 
-    Write-once commit (default): the merged rows are written ONCE into
-    a staging TABLE with the identical bucket/sort spec (bucket-file
-    names encode the bucket id, so a renamed file keeps its bucket
-    identity), then the staged partition directories swap into the
-    real table's location and the file index refreshes. The previous
-    design staged the merged rows flat and rewrote them through
-    `insertInto` with dynamic overwrite — a second full write pass plus
-    a read-back per merge (A/B in PLAN_NOTES_r10.md §17: sf10 steady
-    1.14x, sf100/24g steady 140.9s vs 245.4 = 1.74x;
-    `swap=False` keeps that path for measurement). Crash contract as
-    `merge_datoms_increment`: mid-stage leaves the store untouched,
-    mid-swap is healed by the manifest on the next merge's entry.
+    Write-once commit: the merged rows are written ONCE into a staging
+    TABLE with the identical bucket/sort spec, then the staged
+    partition directories swap into the real table's location and the
+    catalog's partition list re-syncs. Crash contract as
+    `merge_datoms_increment`.
 
     The write pre-shuffles on (a, bucket-of-e), so a touched partition
     comes back as exactly n_buckets single-file sorted buckets — the
@@ -781,173 +861,10 @@ def merge_datoms_increment_bucketed(
     outside this path, or a non-coalesced build, shows up in the
     census and `compact_store` repairs it).
 
-    A fully-retracted attribute's partition is dropped from the file
-    index explicitly (a partitioned writer cannot express an empty
-    partition), then the table's cached file index refreshes."""
-    import shutil
-    from urllib.parse import unquote
-
-    from ..sources.bucketed import writer_partitions
-
-    # materialize the increment ONCE (see merge_datoms_increment): the
-    # touched probe and every per-attribute staging job re-scan ops —
-    # on the split path that is 1 + len(touched) re-derivations of the
-    # increment plan without the cut. O(increment) rows by contract.
-    ops = ops.localCheckpoint()
-    touched = sorted(r.a for r in ops.select("a").distinct().collect())
-    if not touched:
-        return
-    loc = _table_location(spark, table)
-    nb = _table_buckets(spark, table)
-    if swap:
-        stage_table = table + "__mergestage"
-        # self-heal a crashed predecessor: the staging table's LOCATION
-        # survives a process death (the catalog is in-memory); a
-        # manifest there means the previous merge died mid-swap — and
-        # the predecessor may also have died before REGISTERING its
-        # partitions, so re-sync from its manifest after completing
-        stale_stage = _warehouse_table_dir(spark, stage_table)
-        stale_manifest = _read_swap_manifest(stale_stage)
-        if resume_merge_swap(loc, stale_stage):
-            _sync_partition_registrations(spark, table, stale_manifest)
-        _drop_stale_table(spark, stage_table)
-        # redelivery fast path, probed over the full touched set before
-        # any per-group staging (see _increment_is_noop)
-        if _increment_is_noop(
-            spark.table(table)
-            .where(F.col("a").isin(touched))
-            .select("e", "a", "v", "v_num"),
-            ops,
-        ):
-            return
-        # Stage PER ATTRIBUTE PARTITION when the touched mass is big
-        # (r12 verdict #3): one staged write job per touched attribute
-        # instead of one job over all of them. The all-attributes job
-        # sorted the union of every touched partition in a single stage
-        # — at sf100 that is one ~18 GB sort that sits exactly ON an 8g
-        # heap's margin (r12 measured it OOMing in two different places
-        # across attempts once the stage shape was perturbed;
-        # PLAN_NOTES_r12.md §7). Per-attribute jobs cut the peak staged
-        # mass to the LARGEST partition (~6 GB on the 3-fact-attribute
-        # store), so the merge clears the margin under any partitioning
-        # default. Cost: the increment (`ops`) is re-scanned once per
-        # touched attribute, and each job pays scheduling overhead — at
-        # a SMALL store that overhead dominates (sf0.1 A/B: 3.7s vs
-        # 2.5s, a 1.5x regression for nothing, since a few-MB sort is
-        # nowhere near any margin). The split therefore gates on the
-        # touched partitions' on-disk bytes: single job below heap/4
-        # (compressed parquet expands ~3-5x into sort runs, so heap/4
-        # on disk is roughly where the single sort starts brushing the
-        # margin), per-attribute jobs above it. Replay semantics are
-        # identical on both paths: current_datoms is keyed on (e, a),
-        # so restricting both inputs to one attribute partitions the
-        # same computation; the existing-store scan prunes to one
-        # attribute partition per job (a is the partition column).
-        # Crash contract unchanged either way: the swap happens only
-        # after ALL attributes are staged; a mid-stage death leaves the
-        # store untouched and the partial stage table is dropped on the
-        # next merge's entry.
-        from ..sources.bucketed import _heap_bytes
-
-        touched_set = set(touched)
-        touched_bytes = 0
-        if os.path.isdir(loc):
-            for name in os.listdir(loc):
-                d = os.path.join(loc, name)
-                if (name.startswith("a=") and os.path.isdir(d)
-                        and unquote(name[2:]) in touched_set):
-                    touched_bytes += sum(
-                        os.path.getsize(os.path.join(d, f))
-                        for f in os.listdir(d)
-                        if os.path.isfile(os.path.join(d, f))
-                    )
-        split = touched_bytes > _heap_bytes() // 4
-        stage_groups = (
-            [[a] for a in touched] if split and len(touched) > 1
-            else [touched]
-        )
-        for i, group in enumerate(stage_groups):
-            existing_g = (
-                spark.table(table)
-                .where(F.col("a").isin(group))
-                .select("e", "a", "v", "v_num")
-            )
-            merged_g = current_datoms(
-                existing_g, ops.where(F.col("a").isin(group)), card_many
-            )
-            (
-                merged_g.repartition(
-                    writer_partitions(spark, nb),
-                    F.col("a"), F.pmod(F.hash("e"), F.lit(nb)),
-                )
-                .select("e", "a", "v", "v_num")
-                .write.mode("overwrite" if i == 0 else "append")
-                .partitionBy("a")
-                .bucketBy(nb, "e")
-                .sortBy("e")
-                .format("parquet")
-                .saveAsTable(stage_table)
-            )
-        stage_loc = _table_location(spark, stage_table)
-        staged_attrs = sorted(_staged_partition_dirs(stage_loc))
-        _swap_staged_partitions(stage_loc, loc, touched)
-        # the swap moved files the catalog never saw: the in-memory
-        # catalog tracks a partitioned datasource table's PARTITIONS,
-        # so a merge introducing a new attribute would be silently
-        # invisible (found by probe, pinned in test_index_merge) and
-        # an emptied one would linger registered
-        _sync_partition_registrations(
-            spark, table,
-            {"staged": staged_attrs,
-             "emptied": sorted(set(touched) - set(staged_attrs))},
-        )
-        spark.sql(f"DROP TABLE IF EXISTS `{stage_table}`")
-        shutil.rmtree(stage_loc, ignore_errors=True)
-        return
-    existing = (
-        spark.table(table)
-        .where(F.col("a").isin(touched))
-        .select("e", "a", "v", "v_num")
-    )
-    if _increment_is_noop(existing, ops):
-        return
-    merged = _stage_merge(spark, current_datoms(existing, ops, card_many), loc)
-    remaining = {r.a for r in merged.select("a").distinct().collect()}
-    mode_key = "spark.sql.sources.partitionOverwriteMode"
-    prev = spark.conf.get(mode_key, "static")
-    spark.conf.set(mode_key, "dynamic")
-    try:
-        # insertInto is position-based; the catalog table stores the
-        # partition column last. The (a, bucket-of-e) repartition keeps
-        # the single-file-per-bucket invariant of
-        # materialize_datoms_bucketed through every merge: touched
-        # partitions come back as n_buckets sorted files, not
-        # (staging tasks x buckets) fragments, and Spark keeps trusting
-        # the bucket sort (no Sort under downstream merge joins)
-        cols = spark.table(table).columns
-        (
-            merged.repartition(
-                writer_partitions(spark, nb),
-                F.col("a"), F.pmod(F.hash("e"), F.lit(nb)),
-            )
-            .select(*cols)
-            .write.insertInto(table, overwrite=True)
-        )
-    finally:
-        spark.conf.set(mode_key, prev)
-    emptied = set(touched) - remaining
-    if emptied:
-        for name in os.listdir(loc):
-            if name.startswith("a=") and unquote(name[2:]) in emptied:
-                shutil.rmtree(os.path.join(loc, name))
-        # the rmtree alone leaves the partition REGISTERED against a
-        # missing directory (found by the r11 writer-catalog sweep —
-        # the same bug class as the swap path's invisible partitions,
-        # from the other direction)
-        _sync_partition_registrations(
-            spark, table, {"staged": [], "emptied": sorted(emptied)}
-        )
-    _drop_stage(loc)
+    A fully-retracted attribute's partition is removed by the swap and
+    deregistered from the catalog (a partitioned writer cannot express
+    an empty partition)."""
+    _merge_touched(_TableLayout(spark, table), ops, card_many)
 
 
 def excise_store(
@@ -1038,52 +955,24 @@ def compact_store(spark, table: str, n_buckets: int | None = None) -> None:
     (compaction repairs files, it doesn't resize the layout — pass a
     count explicitly to re-bucket).
 
-    Same-spec compaction (the maintenance-loop case) commits by the
-    write-once partition swap the merges use: one bucketed write into a
-    staging table, then directory renames — not the stage-flat /
-    read-back / full-rewrite cycle, which paid a second full write pass
-    plus a read-back of the whole store per compaction. A crashed swap is
-    content-safe here (old and new partitions hold identical rows) and
+    Same-spec compaction (the maintenance-loop case) commits through
+    the bucketed merge's table layout: one bucketed write into the
+    `__compactstage` table, then the write-once partition swap and a
+    catalog re-sync. A crashed swap is content-safe here (old and new partitions hold identical rows) and
     is healed on the next compaction's entry. Resizing still rebuilds
     through `materialize_datoms_bucketed` — a bucket-count change is a
     new catalog spec, which a file swap cannot express."""
-    import shutil
-
-    from ..sources.bucketed import writer_partitions
-
-    loc = _table_location(spark, table)
-    cur = _table_buckets(spark, table)
-    if n_buckets is None or n_buckets == cur:
-        stage_table = table + "__compactstage"
-        stale_stage = _warehouse_table_dir(spark, stage_table)
-        if resume_merge_swap(loc, stale_stage):
-            spark.catalog.refreshTable(table)
-        _drop_stale_table(spark, stage_table)
-        snapshot = spark.table(table).select("e", "a", "v", "v_num")
-        (
-            snapshot.repartition(
-                writer_partitions(spark, cur),
-                F.col("a"), F.pmod(F.hash("e"), F.lit(cur)),
-            )
-            .write.mode("overwrite")
-            .partitionBy("a")
-            .bucketBy(cur, "e")
-            .sortBy("e")
-            .format("parquet")
-            .saveAsTable(stage_table)
-        )
-        stage_loc = _table_location(spark, stage_table)
-        touched = sorted(_staged_partition_dirs(stage_loc))
-        _swap_staged_partitions(stage_loc, loc, touched)
-        spark.catalog.refreshTable(table)
-        spark.sql(f"DROP TABLE IF EXISTS `{stage_table}`")
-        shutil.rmtree(stage_loc, ignore_errors=True)
+    layout = _TableLayout(spark, table, "__compactstage")
+    if n_buckets is None or n_buckets == layout.nb:
+        layout.heal()
+        layout.write_stage(layout.read(), first=True)
+        stage = layout.stage_dir()
+        every = sorted(_staged_partition_dirs(stage))
+        layout.commit(_swap_staged_partitions(stage, layout.loc, every))
         return
-    snapshot = _stage_merge(
-        spark, spark.table(table).select("e", "a", "v", "v_num"), loc
-    )
+    snapshot = _stage_merge(spark, layout.read(), layout.loc)
     materialize_datoms_bucketed(snapshot, table, n_buckets)
-    _drop_stage(loc)
+    _drop_stage(layout.loc)
 
 
 def store_file_census(location: str) -> dict:

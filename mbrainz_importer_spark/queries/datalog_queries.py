@@ -1110,9 +1110,9 @@ def store_incremental_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Datomic's background INDEXING job end-to-end (plans/eav.py:
     merge_datoms_increment): the orders store materializes once per
     sf_dir, then a tx-log increment (_orders_log_increment) folds into
-    it with dynamic partition overwrite — only the two touched
-    attribute partitions rewrite; the o_orderkey identity partition is
-    never read or written. The merge is idempotent (set semantics +
+    it through the write-once staged partition swap — only the two
+    touched attribute partitions rewrite; the o_orderkey identity
+    partition is never read or written. The merge is idempotent (set semantics +
     max-tx displacement), so this gate re-merges the same increment on
     every run and the readback stays hash-stable. The oracle replays
     the same ops relationally (CASE over orders)."""

@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from mbrainz_importer_spark.plans.eav import (
@@ -140,7 +141,8 @@ def test_bucketed_merge_keeps_colocation_and_content(spark):
     entity-bucketed catalog table — content matches the plain merge,
     the untouched partition's files survive byte-identical, and the
     post-merge entity self-join between attribute partitions is STILL
-    Exchange-free (insertInto writes carry the table's bucket spec)."""
+    Exchange-free (the staged bucketed write carries the table's bucket
+    spec)."""
     import shutil
 
     from mbrainz_importer_spark.plans.eav import (
@@ -204,10 +206,9 @@ def test_merge_read_side_is_partition_pruned(spark, tmp_path):
 
 
 def test_compact_store_collapses_merge_files(spark):
-    """One merge writes up to (staging read tasks x buckets) files
-    into each touched partition; compact_store rewrites the table so
-    each (partition, bucket) collapses back, preserving content
-    exactly."""
+    """compact_store rewrites the table so each (partition, bucket)
+    holds at most one file, never more files than a merge left behind,
+    preserving content exactly."""
     import glob
     import shutil
 
@@ -237,8 +238,7 @@ def test_compact_store_collapses_merge_files(spark):
     compact_store(spark, table, n_buckets=4)
     after_files = len(glob.glob(os.path.join(loc, x_dir, "*.parquet")))
     # the contract: at most one file per bucket afterwards, never more
-    # than the merge left behind (how many that is depends on the
-    # staging read's split packing, so only the bound is asserted)
+    # than the merge left behind
     assert after_files <= 4 and after_files <= before_files
     got = sorted(tuple(r) for r in spark.table(table)
                  .select("e", "a", "v", "v_num").collect())
@@ -447,51 +447,137 @@ def test_compaction_cadence_policy(spark):
     shutil.rmtree(loc, ignore_errors=True)
 
 
-def test_merge_crash_mid_swap_heals_on_next_merge(spark, tmp_path, monkeypatch):
+class _Crash(Exception):
+    pass
+
+
+def _store_under_test(spark, kind, tmp_path, name):
+    """BASE materialized as a plain path store or as an entity-bucketed
+    catalog table, with its merge (card-many :t/tag), its sorted
+    read-back, its location, its merge staging directory and its
+    clean-up."""
+    import shutil
+    from types import SimpleNamespace
+
+    from mbrainz_importer_spark.plans import eav
+
+    if kind == "plain":
+        path = str(tmp_path / name)
+        materialize_datoms(_store(spark, BASE), path)
+        return SimpleNamespace(
+            merge=lambda ops: merge_datoms_increment(
+                spark, path, ops, card_many={":t/tag"}
+            ),
+            read=lambda: _sorted(read_datoms(spark, path)),
+            loc=path,
+            stage=path + ".__merge_staging",
+            drop=lambda: None,
+        )
+    eav.materialize_datoms_bucketed(_store(spark, BASE), name, n_buckets=2)
+    loc = eav._table_location(spark, name)
+
+    def drop():
+        spark.sql(f"DROP TABLE IF EXISTS `{name}`")
+        shutil.rmtree(loc, ignore_errors=True)
+
+    return SimpleNamespace(
+        merge=lambda ops: eav.merge_datoms_increment_bucketed(
+            spark, name, ops, card_many={":t/tag"}
+        ),
+        read=lambda: _sorted(spark.table(name)),
+        loc=loc,
+        stage=eav._warehouse_table_dir(spark, name + "__mergestage"),
+        drop=drop,
+    )
+
+
+@pytest.mark.parametrize("kind", ["plain", "bucketed"])
+def test_merge_crash_mid_swap_heals_on_next_merge(
+    spark, tmp_path, monkeypatch, kind
+):
     """The write-once merge's commit is per-partition renames; a crash
     between them must heal on the next merge's entry (resume_merge_swap
     from the staging manifest) and converge to the same content as an
     uninterrupted merge — the redelivery contract, extended to the
-    commit step."""
+    commit step. On the bucketed table the heal must also register a
+    NEW attribute's partition the crashed merge already moved in."""
     import json
-    import shutil
 
     from mbrainz_importer_spark.plans import eav
 
-    path = str(tmp_path / "store")
-    materialize_datoms(_store(spark, BASE), path)
+    st = _store_under_test(spark, kind, tmp_path, f"crash_heal_{kind}")
+    new = ("t:4", ":t/new", "n", None)
+    ops_rows = INCREMENT + [new + (10, True)]
 
-    # run the merge but "crash" before any directory move: the staged
-    # partitions and manifest exist, the store is untouched
-    monkeypatch.setattr(eav, "resume_merge_swap", lambda *a, **k: False)
-    monkeypatch.setattr(eav, "_drop_stage", lambda anchor: None)
-    merge_datoms_increment(
-        spark, path, _ops(spark, INCREMENT), card_many={":t/tag"}
-    )
+    # "crash" once the manifest is written, before any directory move:
+    # the staged partitions and manifest exist, the store is untouched
+    resume = eav.resume_merge_swap
+
+    def crash_when_staged(dest, stage):
+        if os.path.exists(os.path.join(stage, "_MERGE_MANIFEST.json")):
+            raise _Crash
+        return resume(dest, stage)
+
+    monkeypatch.setattr(eav, "resume_merge_swap", crash_when_staged)
+    with pytest.raises(_Crash):
+        st.merge(_ops(spark, ops_rows))
     monkeypatch.undo()
-    stage = path + ".__merge_staging"
-    manifest = json.load(open(os.path.join(stage, "_MERGE_MANIFEST.json")))
-    assert manifest["staged"], "staged partitions missing from manifest"
-    assert _sorted(read_datoms(spark, path)) == sorted(
-        (e, a, v, vn) for e, a, v, vn in BASE
-    ), "a crash before the first move must leave the store untouched"
-
-    # simulate partial progress: one staged partition already swapped
-    first = sorted(
-        n for n in os.listdir(stage)
-        if n.startswith("a=") and os.path.isdir(os.path.join(stage, n))
-    )[0]
-    if os.path.isdir(os.path.join(path, first)):
-        shutil.rmtree(os.path.join(path, first))
-    os.rename(os.path.join(stage, first), os.path.join(path, first))
-    spark.catalog.refreshByPath(path)
-
-    # redelivered merge heals the half-done swap, then applies its ops
-    merge_datoms_increment(
-        spark, path, _ops(spark, INCREMENT), card_many={":t/tag"}
+    manifest = json.load(open(os.path.join(st.stage, "_MERGE_MANIFEST.json")))
+    assert ":t/new" in manifest["staged"], manifest
+    assert st.read() == sorted(BASE), (
+        "a crash before the first move must leave the store untouched"
     )
-    assert _sorted(read_datoms(spark, path)) == EXPECTED
-    assert not os.path.exists(stage), "staging must be gone after a clean merge"
+
+    # simulate partial progress: the new attribute's partition moved
+    moved = eav._staged_partition_dirs(st.stage)[":t/new"]
+    os.rename(os.path.join(st.stage, moved), os.path.join(st.loc, moved))
+
+    # redelivered merge heals the half-done swap, then applies its ops;
+    # its no-op probe already sees the moved partition
+    seen = []
+    probe = eav._increment_is_noop
+
+    def spy(existing, ops):
+        seen.extend(_sorted(existing))
+        return probe(existing, ops)
+
+    monkeypatch.setattr(eav, "_increment_is_noop", spy)
+    st.merge(_ops(spark, ops_rows))
+    assert new in seen, "partition moved before the crash invisible after heal"
+    assert st.read() == sorted(EXPECTED + [new])
+    assert not os.path.exists(st.stage), "staging must be gone after a clean merge"
+    st.drop()
+
+
+@pytest.mark.parametrize("kind", ["plain", "bucketed"])
+@pytest.mark.parametrize(
+    "heap, split", [(1 << 40, False), (4, True)], ids=["single", "split"]
+)
+def test_merge_split_gate(spark, tmp_path, monkeypatch, kind, heap, split):
+    """Both sides of the merge's split gate, on both layouts: touched
+    partitions above heap/4 bytes on disk stage one write per touched
+    attribute; at or below it, one write for all of them. The merged
+    content is the same on both sides."""
+    from mbrainz_importer_spark.plans import eav
+    from mbrainz_importer_spark.sources import bucketed
+
+    st = _store_under_test(spark, kind, tmp_path, f"split_gate_{kind}_{heap}")
+    monkeypatch.setattr(bucketed, "_heap_bytes", lambda: heap)
+    layout = eav._PathLayout if kind == "plain" else eav._TableLayout
+    write_stage = layout.write_stage
+    firsts = []
+
+    def counting(self, df, first):
+        firsts.append(first)
+        write_stage(self, df, first)
+
+    monkeypatch.setattr(layout, "write_stage", counting)
+    st.merge(_ops(spark, INCREMENT))
+    touched = {r[1] for r in INCREMENT}
+    assert len(firsts) == (len(touched) if split else 1)
+    assert firsts[0] and not any(firsts[1:]), "only the first write overwrites"
+    assert st.read() == EXPECTED
+    st.drop()
 
 
 def test_resume_swap_never_deletes_an_already_swapped_partition(tmp_path):
@@ -515,27 +601,6 @@ def test_resume_swap_never_deletes_an_already_swapped_partition(tmp_path):
     )
     assert resume_merge_swap(str(dest), str(stage)) is True
     assert (dest / "a=%3At%2Fx" / "part-0.parquet").read_text() == "new data"
-
-
-def test_merge_swap_and_legacy_paths_agree(spark, tmp_path):
-    """swap=True (write-once + rename commit) and swap=False (the
-    replaced stage/read-back/dynamic-overwrite path, kept for A/B
-    measurement) produce identical store content, including emptied
-    partitions."""
-    ops_rows = INCREMENT + [("t:2", ":t/keep", "k", None, 20, False)]
-    stores = []
-    for swap in (True, False):
-        path = str(tmp_path / f"store_{swap}")
-        materialize_datoms(_store(spark, BASE), path)
-        merge_datoms_increment(
-            spark, path, _ops(spark, ops_rows),
-            card_many={":t/tag"}, swap=swap,
-        )
-        assert not any(
-            "keep" in n for n in os.listdir(path) if n.startswith("a=")
-        ), "emptied partition must disappear on both paths"
-        stores.append(_sorted(read_datoms(spark, path)))
-    assert stores[0] == stores[1]
 
 
 def test_bucketed_merge_new_attribute_is_visible(spark):
@@ -579,55 +644,6 @@ def test_bucketed_merge_new_attribute_is_visible(spark):
         .count()
         == 0
     ), "emptied partition still registered"
-    spark.sql(f"DROP TABLE IF EXISTS `{table}`")
-    shutil.rmtree(loc, ignore_errors=True)
-
-
-def test_legacy_merge_new_and_emptied_attribute_partitions(spark):
-    """Writer-catalog sweep (r10 verdict #5): the LEGACY swap=False
-    merge path writes through insertInto dynamic overwrite — its NEW
-    partitions must be registered by the insert, and its emptied-
-    partition rmtree must not leave a registered partition pointing at
-    a missing directory (a later scan would either miss rows silently
-    or die on the dangling path)."""
-    import shutil
-
-    from mbrainz_importer_spark.plans.eav import (
-        _table_location,
-        materialize_datoms_bucketed,
-        merge_datoms_increment_bucketed,
-    )
-
-    table = "merge_legacy_newattr"
-    materialize_datoms_bucketed(
-        _store(spark, [("t:1", ":t/x", "1", 1.0)]), table, n_buckets=2
-    )
-    loc = _table_location(spark, table)
-    merge_datoms_increment_bucketed(
-        spark, table,
-        _ops(spark, [("t:2", ":t/brand_new", "n", None, 10, True)]),
-        swap=False,
-    )
-    got = sorted(
-        tuple(r)
-        for r in spark.table(table).select("e", "a", "v", "v_num").collect()
-    )
-    assert ("t:2", ":t/brand_new", "n", None) in got, (
-        "legacy merge's new partition invisible"
-    )
-    merge_datoms_increment_bucketed(
-        spark, table,
-        _ops(spark, [("t:2", ":t/brand_new", "n", None, 20, False)]),
-        swap=False,
-    )
-    assert spark.table(table).where("a = ':t/brand_new'").count() == 0
-    assert spark.table(table).count() == 1  # the untouched row survives
-    assert (
-        spark.sql(f"SHOW PARTITIONS `{table}`")
-        .where("partition like '%brand_new%'")
-        .count()
-        == 0
-    ), "legacy merge left an emptied partition registered (dangling dir)"
     spark.sql(f"DROP TABLE IF EXISTS `{table}`")
     shutil.rmtree(loc, ignore_errors=True)
 
