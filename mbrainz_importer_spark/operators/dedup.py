@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .. import budget
 from .text import normalize_for_fingerprint, token_fingerprint_norm, tokens
 
 
@@ -664,16 +665,12 @@ def connected_components(
     )
     # ONE action initializes everything: counting lbl materializes both
     # lazy checkpoints (lbl computes through sym) and sizes the
-    # broadcast decision. The label frame is |V(pairs)|-sized; below
-    # the heap-derived cap (the graph operators' sizing: ~128B/row
-    # broadcast relation, 1/16th of heap) every per-round join
-    # broadcasts it — checkpointed frames are stats-less LogicalRDDs,
-    # so Catalyst would otherwise SMJ, re-shuffling the symmetric edge
-    # set every round. Past the cap the SMJ path stands unchanged.
-    from ..sources.bucketed import _heap_bytes
-
-    cap = _heap_bytes() // (16 * 128)
-    bcast = lbl.count() <= cap
+    # broadcast decision. The label frame is |V(pairs)|-sized; when the
+    # budget admits it every per-round join broadcasts it — checkpointed
+    # frames are stats-less LogicalRDDs, so Catalyst would otherwise
+    # SMJ, re-shuffling the symmetric edge set every round. Past the cap
+    # the SMJ path stands.
+    bcast = budget.broadcasts(budget.heap_bytes(lbl.sparkSession), lbl.count())
 
     def _b(df: DataFrame) -> DataFrame:
         return F.broadcast(df) if bcast else df

@@ -39,49 +39,37 @@ stays one lazy plan.
 
 from __future__ import annotations
 
-import os
-
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# The static edge prefix of every iterative operator checkpoints
-# DISK_ONLY at fact-scale tiers (r12, found by the degree-controlled
-# sf10g tier): the default MEMORY_AND_DISK blocks both PIN the unified
-# pool's storage fraction (starving the per-round aggregations — the
-# same AGGREGATE_OOM shape r11 fixed in the LSH shingle feed) and are
-# evictable, which is fatal after a lineage cut ("Block rdd_N does not
-# exist" cascades killed the plain-LPA sf10g run live). DISK_ONLY
-# blocks are never evicted by memory pressure, leave execution the
-# whole pool, and re-read at page-cache speed on a warm box. The small
-# per-round frames (labels / frontiers / distances — O(|V|) rows) keep
+from .. import budget
+from ..session import _corpus_fact_bytes
+
+# The static edge prefix of every iterative operator persists at the
+# level _edge_level picks. At fact-scale mass it is DISK_ONLY:
+# MEMORY_AND_DISK blocks pin the unified pool's storage fraction,
+# starving the per-round aggregations, and are evictable, which is
+# fatal after a lineage cut ("Block rdd_N does not exist"). DISK_ONLY
+# blocks are never evicted, leave execution the whole pool, and re-read
+# at page-cache speed. Below the budget's edges_in_memory gate the
+# prefix is memory-backed instead: every round re-scans it, and a
+# DISK_ONLY scan re-deserializes the blocks each time. The small
+# per-round frames (labels / frontiers / distances, O(|V|) rows) keep
 # the default level.
-#
-# The level is HEAP-GATED, not flat (r13): every iterative round
-# re-scans the prefix, and a DISK_ONLY scan re-deserializes the blocks
-# each time — at a small derived edge mass that is the round's dominant
-# per-task cost (pagerank/LPA steady ~0.9x at sf0.1 memory-backed) for
-# zero memory-pressure benefit. The gate prices the session's derived
-# edge mass from the corpus fact bytes (the same signal the AQE floor
-# uses, 16x headroom for derived mass) against 1/8th of the configured
-# heap: sf0.1 (~400 MB priced) stays memory-backed, the g-corpora
-# (multi-GB) keep the r12 DISK_ONLY posture unchanged.
-_EDGE_LEVEL = StorageLevel.DISK_ONLY
-
-
-def _edge_level() -> StorageLevel:
-    from ..session import _corpus_fact_bytes
-    from ..sources.bucketed import _heap_bytes
-
-    fact_bytes = _corpus_fact_bytes()
-    # Unknown corpus (env unset / dir absent => 0 bytes): the gate has
-    # no size signal, so take the SAFE side — DISK_ONLY is the posture
-    # that survives fact-scale edges; MEMORY_AND_DISK on an unpriced
-    # edge set re-exposes the r12 eviction cascade ("Block rdd_N does
-    # not exist") the flat level was introduced to fix (r13 ADVICE).
-    if fact_bytes > 0 and fact_bytes * 16 <= _heap_bytes() // 8:
+def _edge_level(heap: int) -> StorageLevel:
+    if budget.edges_in_memory(heap, _corpus_fact_bytes()):
         return StorageLevel.MEMORY_AND_DISK
-    return _EDGE_LEVEL
+    return StorageLevel.DISK_ONLY
+
+
+# The per-round frames (ranks, labels, frontiers, distances, degree and
+# adjacency lookups) are |V|-sized and, once checkpointed or persisted,
+# stats-less LogicalRDDs: Catalyst plans SMJ against them, re-shuffling
+# AND re-sorting the full edge prefix every round. Each operator
+# broadcasts them when the budget admits their measured row count, so
+# a round is one streamed pass over the edge prefix; past the cap the
+# SMJ path stands.
 
 PR_SCALE = 1_000_000_000_000
 
@@ -157,18 +145,16 @@ def _pagerank_statics(e: DataFrame):
     outd = e.groupBy(F.col("s").alias("v")).agg(
         F.count(F.lit(1)).cast("long").alias("od")
     )
-    # DISK_ONLY for the same reason as _EDGE_LEVEL: the edge prefix is
-    # fact-scale on the degree-controlled corpora and a MEMORY_AND_DISK
-    # pin starves the per-round contribution aggregations
-    e = e.persist(_edge_level())
+    level = _edge_level(budget.heap_bytes(e.sparkSession))
+    e = e.persist(level)
     e.count()
-    outd = outd.persist(_edge_level())
-    nodes = nodes.persist(_edge_level())
+    outd = outd.persist(level)
+    nodes = nodes.persist(level)
     n_nodes = nodes.count()
     outd.count()
     ew = e.join(outd.select(F.col("v").alias("s"), "od"), "s").select(
         "s", "t", "od"
-    ).persist(_edge_level())
+    ).persist(level)
     ew.count()
     # e itself is not read by the per-round plan anymore (ew carries
     # the edges); release its blocks now that ew is materialized
@@ -203,18 +189,9 @@ def _pagerank_with_handles(
     ew, outd, nodes, n_nodes = _pagerank_statics(e)
     base = PR_SCALE // n_nodes
     rank = nodes.select("v", F.lit(base).cast("long").alias("r"))
-    # Broadcast the |V|-sized per-round frames below the heap-derived
-    # cap (the SAME cap label_propagation uses — ~128B/row for a
-    # broadcast relation of two bigints, 1/16th of heap per relation):
-    # the rank frame is a LogicalRDD after a checkpoint cadence cut and
-    # Catalyst would plan SMJ, re-shuffling AND re-sorting the full
-    # cached edge prefix every round. Below the cap the round becomes
-    # one streamed pass over the DISK_ONLY prefix + the contribution
-    # aggregation's single exchange; past it (where a hash relation
-    # would not fit executor heaps) the SMJ path stands unchanged.
-    from ..sources.bucketed import _heap_bytes
-
-    bcast = n_nodes <= _heap_bytes() // (16 * 128)
+    # broadcast the rank and contribution frames (see the per-round
+    # frames note above)
+    bcast = budget.broadcasts(budget.heap_bytes(edges.sparkSession), n_nodes)
     for it in range(iters):
         rk = F.broadcast(rank) if bcast else rank
         contrib = (
@@ -338,11 +315,11 @@ def triangle_count(
         )
     # the caller's edge derivation is often a self-join + distinct —
     # cache it so the degree pass and the orientation join don't each
-    # recompute the upstream plan. DISK_ONLY, same reason as
-    # _EDGE_LEVEL: both cached frames here are |E|-sized, and pinning
-    # them in the memory store starved the intersection joins into a
-    # heap OOM at the honest sf10g edge mass (found by tier r12)
-    e = e.persist(_edge_level())
+    # recompute the upstream plan. Every cached frame here is |E|-sized,
+    # so all of them take the edge level.
+    heap = budget.heap_bytes(edges.sparkSession)
+    level = _edge_level(heap)
+    e = e.persist(level)
     n_e = e.count()
     # explode(array(s,t)) instead of union-of-projections: one scan of
     # the persisted edge blocks instead of two (measured 0.75x on this
@@ -351,18 +328,12 @@ def triangle_count(
         e.select(F.explode(F.array("s", "t")).alias("v"))
         .groupBy("v")
         .agg(F.count(F.lit(1)).cast("long").alias("d"))
-    ).persist(_edge_level())
-    # the degree lookup is |V|-sized: below the heap cap (the
-    # label_propagation sizing — ~128B/row broadcast relation, 1/16th
-    # of heap) broadcast BOTH lookups, so the orientation is a streamed
-    # pass over the persisted edge set instead of two full |E| shuffle
-    # + sort rounds (r13 optimization; past the cap SMJ stands, the
-    # pre-r13 plan). deg persists so the two broadcast builds don't
-    # each recompute the degree aggregation.
-    from ..sources.bucketed import _heap_bytes
-
+    ).persist(level)
+    # broadcast BOTH degree lookups (see the per-round frames note
+    # above); deg persists so the two broadcast builds don't each
+    # recompute the aggregation
     n_v = deg.count()
-    small_v = n_v <= _heap_bytes() // (16 * 128)
+    small_v = budget.broadcasts(heap, n_v)
     deg_s = deg.select(F.col("v").alias("s"), F.col("d").alias("ds"))
     deg_t = deg.select(F.col("v").alias("t"), F.col("d").alias("dt"))
     if small_v:
@@ -376,7 +347,7 @@ def triangle_count(
     oriented = et.select(
         F.when(s_first, F.col("s")).otherwise(F.col("t")).alias("u"),
         F.when(s_first, F.col("t")).otherwise(F.col("s")).alias("w"),
-    ).persist(_edge_level())
+    ).persist(level)
     # orientation is a BIJECTION on the (distinct) edge set, so
     # n_edges == the already-measured e.count() — no separate count
     # job; oriented's blocks materialize inside adj.count() below
@@ -389,49 +360,33 @@ def triangle_count(
         # orientation's sqrt(2|E|) out-degree bound
         adj = oriented.groupBy("u").agg(
             F.collect_list("w").alias("nbrs")
-        ).persist(_edge_level())
+        ).persist(level)
         n_src = adj.count()
         # e and deg fed the orientation join, which adj.count() has now
         # materialized through oriented's persist — release both here
         # (previously released after the separate oriented.count())
         e.unpersist()
         deg.unpersist()
-        # Bounded-spill batching (r12, found by the degree-controlled
-        # sf10g tier): the second intersection join sorts rows that
-        # already CARRY the first adjacency array — at the honest
-        # 120M-edge mass that sort spills ~|E| x avg_deg x 16B
-        # (~100+ GB raw; it filled this box's disk live, and a
-        # per-node disk budget is the reality on any cluster). The
-        # edges therefore process in K hash-of-w batches, each joined
-        # against the persisted adjacency: identical count (hash
+        # Bounded-spill batching: the second intersection join sorts
+        # rows that already CARRY the first adjacency array, so its
+        # spill is ~|E| x avg_deg x 16B (100+ GB at a 120M-edge mass).
+        # The edges therefore process in K hash-of-w batches, each
+        # joined against the persisted adjacency: identical count (hash
         # partitioning is exhaustive and disjoint), spill bounded by
-        # est/K, and K=1 keeps the original single-pass plan at small
-        # mass. Batch partials are scalar counts — the driver loop
+        # est/K, and K=1 keeps the single-pass plan at small mass.
+        # Batch partials are scalar counts — the driver loop
         # accumulates longs, never rows.
         avg_deg = n_edges / max(n_src, 1)
         est_bytes = int(n_edges * avg_deg * 16 * 2)
-        budget = int(os.environ.get(
-            "SPARK_GRAFT_TRIANGLE_SPILL_BUDGET", str(8 << 30)
-        ))
-        k_batches = min(64, max(1, -(-est_bytes // budget)))
+        k_batches = min(64, max(1, -(-est_bytes // budget.TRIANGLE_SPILL_BYTES)))
         au = adj.select(F.col("u").alias("ju"), F.col("nbrs").alias("nu"))
         aw = adj.select(F.col("u").alias("jw"), F.col("nbrs").alias("nw"))
-        # Broadcast the adjacency lists below a heap-derived cap (r13,
-        # guide §3.1): adj is a persisted LogicalRDD-backed frame with
-        # no stats, so Catalyst SMJs both intersection joins —
-        # re-shuffling AND re-sorting the |E|-mass oriented/adjacency
-        # rows. The whole adjacency is n_edges longs spread over n_src
-        # rows; priced at 16 B per edge + ~128 B per-row relation
-        # overhead, 1/16th of heap per relation (the same sizing as the
-        # label/rank frames). Below the cap the count job becomes ONE
-        # streamed pass over the persisted oriented set with two
-        # broadcast hash joins — zero exchanges; past it (or whenever
-        # the spill budget forces K batches, which only happens at a
-        # mass far past any broadcastable size) the SMJ path stands
-        # unchanged. Count-identical by join semantics (A/B'd at sf0.1:
-        # 1,884,488 both paths).
-        bcast_adj = k_batches == 1 and (
-            n_edges * 16 + n_src * 128 <= _heap_bytes() // 16
+        # broadcast the adjacency lists (see the per-round frames note
+        # above): the count job becomes ONE streamed pass over the
+        # oriented set with zero exchanges. K > 1 batches only happen at
+        # a mass far past any broadcastable size.
+        bcast_adj = k_batches == 1 and budget.adjacency_broadcasts(
+            heap, n_edges, n_src
         )
         if bcast_adj:
             au, aw = F.broadcast(au), F.broadcast(aw)
@@ -514,10 +469,11 @@ def bfs_hops(
     # round's frontier checkpoint re-executes the caller's whole edge
     # derivation (a fact-fact join at gate scale), and the re-planned
     # derivation is free to pick a driver-fatal broadcast each round
+    heap = budget.heap_bytes(edges.sparkSession)
     e = edges.select(
         F.col(src_col).cast("bigint").alias("s"),
         F.col(dst_col).cast("bigint").alias("t"),
-    ).localCheckpoint(eager=False, storageLevel=_edge_level())
+    ).localCheckpoint(eager=False, storageLevel=_edge_level(heap))
     seed_col = sources.columns[0]
     visited = (
         sources.select(F.col(seed_col).cast("bigint").alias("node"))
@@ -525,35 +481,22 @@ def bfs_hops(
         .withColumn("hop", F.lit(0).cast("bigint"))
         .localCheckpoint(eager=False)
     )
-    # Broadcast the per-round frontier/visited frames below the
-    # heap-derived cap (the label_propagation cap: ~128B/row broadcast
-    # relation, 1/16th of heap). Both frames are LogicalRDDs after
-    # their checkpoints — statless, so Catalyst plans SMJ and
-    # re-shuffles the FULL edge prefix every hop. Below the cap the
-    # expansion is one streamed pass over the DISK_ONLY prefix and the
-    # first-reach anti-join is a broadcast hash anti; past the cap
-    # (frontiers near |V| on a huge graph) the SMJ path stands. The
-    # per-round .count() replaces the old isEmpty() probe — both scan
-    # the checkpointed blocks, and the count doubles as the broadcast
-    # decision, so no extra job is paid. All checkpoints are LAZY
-    # (r13: the count is the materializing action, so one job per hop
-    # replaces the old eager-checkpoint + count pair; the visited
-    # union's checkpoint materializes inside the next hop's job — at
-    # ~90ms scheduling latency per job the eager pattern was paying
-    # two extra barriers per hop for nothing).
-    from ..sources.bucketed import _heap_bytes
-
-    cap = _heap_bytes() // (16 * 128)
+    # broadcast the frontier and visited frames (see the per-round
+    # frames note above). The per-round .count() doubles as the
+    # broadcast decision and the loop-termination read. All checkpoints
+    # are LAZY: the count is the materializing action, so each hop is
+    # one job, and the visited union's checkpoint materializes inside
+    # the next hop's.
     n_visited = visited.count()
     frontier, n_frontier = visited, n_visited
     for h in range(1, max_hops + 1):
-        fr = F.broadcast(frontier) if n_frontier <= cap else frontier
+        fr = F.broadcast(frontier) if budget.broadcasts(heap, n_frontier) else frontier
         reached = (
             fr.join(e, fr["node"] == e["s"])
             .select(F.col("t").alias("node"))
             .distinct()
         )
-        vi = F.broadcast(visited) if n_visited <= cap else visited
+        vi = F.broadcast(visited) if budget.broadcasts(heap, n_visited) else visited
         fresh = (
             reached.join(vi, "node", "left_anti")
             .withColumn("hop", F.lit(h).cast("bigint"))
@@ -591,10 +534,11 @@ def label_propagation(
     per-dst argmax — both keyed on the destination node so AQE reuses
     the exchange; the edge frame is the delta-independent prefix and
     localCheckpoints once. Returns (node BIGINT, label BIGINT)."""
+    heap = budget.heap_bytes(edges.sparkSession)
     e = edges.select(
         F.col(src_col).cast("bigint").alias("s"),
         F.col(dst_col).cast("bigint").alias("t"),
-    ).localCheckpoint(eager=False, storageLevel=_edge_level())
+    ).localCheckpoint(eager=False, storageLevel=_edge_level(heap))
     # explode(array(s,t)) instead of union-of-projections: one scan of
     # the checkpointed edge blocks instead of two (guide §2.4)
     nodes = e.select(
@@ -610,29 +554,11 @@ def label_propagation(
     labels = nodes.withColumn("label", F.col("node")).localCheckpoint(
         eager=False
     )
-    # label frames are LogicalRDDs after the per-round checkpoint, so
-    # Catalyst has no stats and plans SMJ — which re-shuffles AND
-    # re-sorts the FULL edge prefix every round (at the honest sf10g
-    # edge mass that join is what pushed an 8g heap over, found by
-    # tier r12). Below the cap, broadcast the |V|-sized label frame
-    # explicitly: the per-round cost becomes one streamed pass over
-    # the DISK_ONLY edge prefix + the partial aggregation — no
-    # edge-side shuffle at any scale. Past the cap (where a label hash
-    # relation would not fit executor heaps) the SMJ path stands.
+    # broadcast the label frame (see the per-round frames note above).
+    # Old rounds' relations become unreachable after each round's
+    # checkpoint and are reclaimed by the ContextCleaner on driver GC.
     n_nodes = labels.count()
-    # cap derived from the configured heap, not a flat row count: a
-    # broadcast LongHashedRelation of two bigints costs ~128B/row once
-    # UnsafeRow + map overhead are in (4-8x the naive 16B/row), and a
-    # fresh relation is built every round — at 1/16th of heap per
-    # relation even a few rounds of not-yet-GC'd predecessors stay well
-    # inside the pool on ANY profile, not just the 8g local posture
-    # (the previous 8M-row cap assumed 16B/row and could hand a ~1GB
-    # relation to a 2g executor). Old rounds' relations become
-    # unreachable after each round's checkpoint and are reclaimed by
-    # the ContextCleaner on driver GC.
-    from ..sources.bucketed import _heap_bytes
-
-    bcast_labels = n_nodes <= _heap_bytes() // (16 * 128)
+    bcast_labels = budget.broadcasts(heap, n_nodes)
     for _ in range(iters):
         lab = F.broadcast(labels) if bcast_labels else labels
         # ONE exchange per round (r14, verdict #5): the old two-step —
@@ -656,10 +582,8 @@ def label_propagation(
             .agg(F.mode("label", True).alias("new_label"))
         )
         labels = (
-            # `best` is |V|-bounded like the label frame: under the same
-            # heap cap it broadcasts, so the label update is a map-side
-            # hash join instead of an SMJ re-shuffling both |V| frames
-            # every round (r13 optimization; past the cap SMJ stands)
+            # `best` is |V|-bounded like the label frame and broadcasts
+            # under the same cap
             labels.join(
                 F.broadcast(best) if bcast_labels else best, "node", "left"
             )
@@ -700,11 +624,12 @@ def sssp_bounded(
     node — the textbook distributed Bellman-Ford step. Rounds are FIXED
     (the oracle-matched contract); distances only ever decrease, so a
     redelivered round is a no-op."""
+    heap = budget.heap_bytes(edges.sparkSession)
     e = edges.select(
         F.col(src_col).cast("bigint").alias("s"),
         F.col(dst_col).cast("bigint").alias("t"),
         F.col(weight_col).cast("bigint").alias("w"),
-    ).localCheckpoint(eager=False, storageLevel=_edge_level())
+    ).localCheckpoint(eager=False, storageLevel=_edge_level(heap))
     seed_col = sources.columns[0]
     dist = (
         sources.select(F.col(seed_col).cast("bigint").alias("node"))
@@ -712,19 +637,12 @@ def sssp_bounded(
         .withColumn("dist", F.lit(0).cast("bigint"))
         .localCheckpoint(eager=False)
     )
-    # Broadcast the distance frontier below the heap-derived cap (the
-    # label_propagation cap): dist is a LogicalRDD after its per-round
-    # checkpoint, so Catalyst would SMJ the relax join and re-shuffle
-    # the full edge prefix every round. Below the cap each relaxation
-    # is a streamed pass over the DISK_ONLY prefix; past it SMJ stands.
-    # The per-round count doubles as the broadcast decision (the
-    # checkpoint materializes the frame anyway).
-    from ..sources.bucketed import _heap_bytes
-
-    cap = _heap_bytes() // (16 * 128)
+    # broadcast the distance frame (see the per-round frames note
+    # above); the per-round count doubles as the broadcast decision (the
+    # checkpoint materializes the frame anyway)
     n_dist = dist.count()
     for _ in range(rounds):
-        db = F.broadcast(dist) if n_dist <= cap else dist
+        db = F.broadcast(dist) if budget.broadcasts(heap, n_dist) else dist
         relaxed = (
             db.join(e, db["node"] == e["s"])
             .select(F.col("t").alias("node"), (F.col("dist") + F.col("w")).alias("dist"))

@@ -113,6 +113,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .. import budget
+
 AGGS = {
     "count", "count-distinct", "sum", "min", "max",
     "avg", "median", "variance", "stddev", "distinct",
@@ -152,18 +154,12 @@ class DatalogError(ValueError):
 MAX_FIXPOINT_ITERS = 100
 
 
-def _bcast_row_cap() -> int:
-    """Row cap for broadcasting a fixpoint delta/total relation —
-    derived from the configured heap like the graph operators' cap, but
-    priced at ~512B/row (datalog rows carry string a0..aN columns plus
-    __num_aJ doubles, wider than the graph frames' two bigints). Below
-    the cap the per-round derivation joins stream the persisted prefix
-    instead of SMJ-re-shuffling it (checkpointed deltas are stats-less
-    LogicalRDDs, so Catalyst never broadcasts them on its own); past it
-    the SMJ path stands unchanged."""
-    from ..sources.bucketed import _heap_bytes
-
-    return _heap_bytes() // (16 * 512)
+def _broadcast_if_fits(heap: int, df: DataFrame, n_rows: int) -> DataFrame:
+    """Broadcast a fixpoint delta/total relation the budget admits, so
+    the per-round derivation joins stream the persisted prefix instead
+    of SMJ-re-shuffling it: checkpointed deltas are stats-less
+    LogicalRDDs, so Catalyst never broadcasts them on its own."""
+    return F.broadcast(df) if budget.wide_broadcasts(heap, n_rows) else df
 
 
 def _scan_calls(clauses: list, rules) -> list[tuple[str, bool]]:
@@ -1128,22 +1124,18 @@ def _compile_rule(
             .localCheckpoint(eager=False)
         )
         # the count both materializes the lazy checkpoint and sizes the
-        # broadcast decision below — checkpointed frames are stats-less
-        # LogicalRDDs, so without an explicit hint Catalyst plans SMJ
-        # and re-shuffles the cached prefix every round (the same trap,
-        # and the same measured-count fix, as the graph operators'
-        # per-round label/frontier frames)
+        # broadcast decisions below
         n_total = total.count()
-        cap = _bcast_row_cap()
+        heap = budget.heap_bytes(datoms.sparkSession)
         delta, n_delta = total, n_total
         for _ in range(MAX_FIXPOINT_ITERS):
             rounds = []
             for (args, body), run in zip(rec_defs, runners):
                 impl = dict(rec_impl)
                 if _self_calls(body, name) == 1:
-                    impl[name] = F.broadcast(delta) if n_delta <= cap else delta
+                    impl[name] = _broadcast_if_fits(heap, delta, n_delta)
                 else:
-                    impl[name] = F.broadcast(total) if n_total <= cap else total
+                    impl[name] = _broadcast_if_fits(heap, total, n_total)
                 rounds.append(run(impl))
             # lazy checkpoint + count: ONE action both materializes the
             # round's delta and answers the emptiness probe (the old
@@ -1153,7 +1145,7 @@ def _compile_rule(
                 _union_all(rounds)
                 .distinct()
                 .join(
-                    F.broadcast(total) if n_total <= cap else total,
+                    _broadcast_if_fits(heap, total, n_total),
                     on=key_cols,
                     how="left_anti",
                 )
@@ -1252,7 +1244,7 @@ def _compile_clique(
     # the direct-recursion loop (checkpointed frames are stats-less)
     n_totals: dict[str, int] = {}
     n_deltas: dict[str, int] = {}
-    cap = _bcast_row_cap()
+    heap = budget.heap_bytes(datoms.sparkSession)
     try:
         for r in order:
             if base[r]:
@@ -1287,21 +1279,15 @@ def _compile_clique(
                         s = in_clique[0]
                         if deltas[s] is None:
                             continue  # nothing new flowed into this def
-                        impl[s] = (
-                            F.broadcast(deltas[s])
-                            if n_deltas[s] <= cap
-                            else deltas[s]
-                        )
+                        impl[s] = _broadcast_if_fits(heap, deltas[s], n_deltas[s])
                     else:
                         if any(totals[s] is None for s in in_clique):
                             continue  # a referenced relation is still empty
                         if all(deltas[s] is None for s in set(in_clique)):
                             continue  # no referenced relation changed
                         for s in set(in_clique):
-                            impl[s] = (
-                                F.broadcast(totals[s])
-                                if n_totals[s] <= cap
-                                else totals[s]
+                            impl[s] = _broadcast_if_fits(
+                                heap, totals[s], n_totals[s]
                             )
                     rounds.append(
                         run(impl)
@@ -1317,9 +1303,7 @@ def _compile_clique(
                 new = _union_all(rounds).distinct()
                 if totals[r] is not None:
                     new = new.join(
-                        F.broadcast(totals[r])
-                        if n_totals[r] <= cap
-                        else totals[r],
+                        _broadcast_if_fits(heap, totals[r], n_totals[r]),
                         on=key_cols,
                         how="left_anti",
                     )

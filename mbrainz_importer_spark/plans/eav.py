@@ -31,6 +31,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .. import budget
+
 
 def table_datoms(df: DataFrame, table: str, id_col: str) -> DataFrame:
     """Unpivot one entity table into datoms. The id column itself is also
@@ -598,12 +600,9 @@ def _increment_is_noop(existing: DataFrame, ops: DataFrame) -> bool:
     # never hashes the store side). merge_datoms_increment's contract
     # only bounds ops as "the tx-log batch" — a bulk-sized increment
     # must not be forced through the broadcast-relation limit just to
-    # ask whether it is a redelivery: above a broadcast-safe cap
-    # (heap/16 at ~512 B per built row, the datalog pricing) skip the
-    # probe and go straight to the real merge (r13 ADVICE).
-    from ..sources.bucketed import _heap_bytes
-
-    if n_ops > _heap_bytes() // (16 * 512):
+    # ask whether it is a redelivery: past the budget's wide-row cap
+    # skip the probe and go straight to the real merge.
+    if not budget.wide_broadcasts(budget.heap_bytes(existing.sparkSession), n_ops):
         return False
     # the store side STREAMS and the increment broadcasts (the only
     # scalable orientation — any shape that preserves the increment
@@ -759,8 +758,6 @@ def _merge_touched(
     swap, probe for a redelivery, stage the merged touched partitions,
     swap them in, commit. `layout` (`_PathLayout`, `_TableLayout`)
     says how the store is read, staged and committed."""
-    from ..sources.bucketed import _heap_bytes
-
     # materialize the increment ONCE: the touched listing, the no-op
     # probe and every staged write consume it. O(increment) rows by
     # contract (the tx-log batch), never store-scale — the _stage_merge
@@ -775,17 +772,17 @@ def _merge_touched(
     # duplicate delivery) skips the touched-partition rewrite
     if _increment_is_noop(existing, ops):
         return
-    # Split gate: above heap/4 bytes of touched partitions on disk,
-    # stage one write per touched attribute; at or below it, one write
-    # for all of them. Parquet expands ~3-5x into sort runs, so heap/4
-    # on disk is where one all-attributes sort reaches the heap's
-    # margin; per-attribute writes bound the peak to the largest
-    # partition, at one job's overhead per attribute. Either grouping
-    # is exact: current_datoms is keyed on (e, a), so restricting both
-    # inputs to a set of attributes partitions the same computation.
-    # Crash contract: the swap runs only after every group is staged,
-    # so a death mid-stage leaves the store untouched.
-    split = _partition_bytes(layout.loc, touched) > _heap_bytes() // 4
+    # Split gate (budget.splits_merge): past it, stage one write per
+    # touched attribute; otherwise one write for all of them.
+    # Per-attribute writes bound the peak to the largest partition, at
+    # one job's overhead per attribute. Either grouping is exact:
+    # current_datoms is keyed on (e, a), so restricting both inputs to
+    # a set of attributes partitions the same computation. Crash
+    # contract: the swap runs only after every group is staged, so a
+    # death mid-stage leaves the store untouched.
+    split = budget.splits_merge(
+        budget.heap_bytes(layout.spark), _partition_bytes(layout.loc, touched)
+    )
     groups = [[a] for a in touched] if split else [touched]
     for i, group in enumerate(groups):
         in_group = F.col("a").isin(group)

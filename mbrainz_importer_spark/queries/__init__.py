@@ -1,7 +1,8 @@
 """Query registry: merges every domain module's (QUERIES, ORACLES) pair.
 
 The driver contract (__spark_entry__.py) exposes exactly this registry.
-Modules are imported lazily-but-eagerly here; each module defines
+Every module is imported here, so a module that fails to import fails the
+registry; each module defines
 ``QUERIES: dict[str, fn(spark, sf_dir) -> DataFrame]`` and
 ``ORACLES: dict[str, str]`` (DuckDB SQL). A query without an oracle entry is
 allowed (non-SQL-expressible ops get a rows-only check).
@@ -13,28 +14,20 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from . import core
+from . import (
+    core, datalog_queries, llm, streaming_queries, extra, fulltext_queries,
+    tpch_extra, tpch_full, history_queries, curation_queries, parity_queries,
+    pipeline_queries, client_queries, quantize_queries, linkage_queries,
+    pca_queries,
+)
 
-_MODULES = [core]
-
-
-def _load_optional() -> None:
-    global _MODULES
-    names = ["mbrainz", "datalog_queries", "llm", "streaming_queries", "extra",
-             "fulltext_queries", "tpch_extra", "tpch_full", "history_queries",
-             "curation_queries", "parity_queries", "pipeline_queries",
-             "client_queries", "quantize_queries", "linkage_queries",
-             "pca_queries"]
-    for name in names:
-        try:
-            mod = __import__(f"{__name__}.{name}", fromlist=[name])
-        except ImportError:
-            continue
-        if mod not in _MODULES:
-            _MODULES.append(mod)
-
-
-_load_optional()
+# all_queries() keeps this order
+_MODULES = [
+    core, datalog_queries, llm, streaming_queries, extra, fulltext_queries,
+    tpch_extra, tpch_full, history_queries, curation_queries, parity_queries,
+    pipeline_queries, client_queries, quantize_queries, linkage_queries,
+    pca_queries,
+]
 
 
 def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

@@ -206,7 +206,7 @@ def _bucketed_facts(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFr
         size_nb,
         min(
             shj_min_buckets(
-                os.path.join(sf_dir, "orders.parquet"), _BUCKETED_O_COLS
+                spark, os.path.join(sf_dir, "orders.parquet"), _BUCKETED_O_COLS
             ),
             4 * size_nb,
         ),

@@ -39,24 +39,19 @@ def _corpus_fact_bytes() -> int:
     return total
 
 
-def _initial_partition_floor(static_partitions: int) -> int:
-    """Tier-aware AQE initialPartitionNum (r12 verdict #4): the flat 256
-    floor was the right posture for the honest-degree graph corpora
-    (derived edge mass ~10x corpus bytes — plain LPA OOMed an 8g heap
-    when shuffles STARTED at 32) but taxed every multi-shuffle sf0.1
-    query with 256-task launch overhead per exchange (dedup_lsh_verified
-    1.38x, pagerank_topk 1.19x, store scans ~1.15x — the r12 regression
-    cluster). Size the floor from corpus bytes instead, with a 16x
-    headroom factor for derived mass (the g-corpus ratio, rounded up),
-    capped at the old 256: small corpora get a small floor (sf0.1 ->
-    the static count, regressions reclaimed), the g-corpora land back
-    on exactly 256 (sf10g: ~0.8 GB facts * 16 / 64 MB ~= 200 -> 256,
-    LPA stays green), and fact-scale tiers keep max(static, 256) —
-    bit-identical to the r12 behavior at sf10g/sf100 by construction.
-    SPARK_GRAFT_INITIAL_PARTITIONS still overrides everything."""
+def _initial_partition_floor(static_partitions: int, fact_bytes: int) -> int:
+    """Tier-aware AQE initialPartitionNum: sized from the corpus
+    `fact_bytes` with a 16x headroom factor for derived mass (the
+    graph corpora's ratio, rounded up) at ~64 MB per partition, capped
+    at 256, never below `static_partitions`. Small corpora keep the
+    static count (sf0.1), so multi-shuffle queries do not pay 256-task
+    launch overhead per exchange; the graph corpora and fact-scale
+    tiers start every shuffle at 256 (sf10g: ~1 GB facts * 16 / 64 MB
+    ~= 250 -> 256), where plain LPA OOMed an 8g heap when shuffles
+    started at 32. SPARK_GRAFT_INITIAL_PARTITIONS overrides it."""
     import math
 
-    need = _corpus_fact_bytes() * 16 // (64 << 20)
+    need = fact_bytes * 16 // (64 << 20)
     sized = 2 ** math.ceil(math.log2(need)) if need > 1 else 1
     return max(static_partitions, min(256, sized))
 
@@ -112,7 +107,7 @@ def get_spark(
             "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
             os.environ.get(
                 "SPARK_GRAFT_INITIAL_PARTITIONS",
-                str(_initial_partition_floor(static_partitions)),
+                str(_initial_partition_floor(static_partitions, _corpus_fact_bytes())),
             ),
         )
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))

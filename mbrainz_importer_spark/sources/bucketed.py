@@ -19,6 +19,8 @@ from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .. import budget
+
 # written LAST after a successful bucketed write, next to the data —
 # the on-disk twin of the catalog's bucket spec. A crash mid-write
 # leaves no spec, so a half-written layout is never adoptable (the
@@ -671,7 +673,7 @@ def adaptive_buckets(
 #
 #   per-task build bytes = rows_per_bucket * per_row_cost
 #   concurrent build bytes = per-task * min(n_buckets, cores)
-#   fits  <=>  concurrent build bytes <= 1/4 heap
+#   fits  <=>  concurrent build bytes <= budget.shj_budget(heap)
 #
 # per_row_cost models Spark's LongToUnsafeRowMap: an UnsafeRow
 # (8B null bitset + 8B per fixed-width field + 8-byte-aligned var-len
@@ -684,17 +686,6 @@ def adaptive_buckets(
 
 _SHJ_ROW_OVERHEAD = 32     # LongToUnsafeRowMap meta per key
 _SHJ_SAFETY = 1.5          # model-to-JVM slack
-_SHJ_BUDGET_FRACTION = 0.25  # of heap: conservative share of unified memory
-
-
-def _heap_bytes() -> int:
-    mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g").strip().lower()
-    mult = {"g": 1 << 30, "m": 1 << 20, "k": 1 << 10}.get(mem[-1], 1)
-    return int(float(mem[:-1] if mult > 1 else mem) * mult)
-
-
-def _cores() -> int:
-    return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
 def _parquet_row_stats(paths: list[str], columns: tuple | None) -> tuple[int, float]:
@@ -750,31 +741,30 @@ def shj_build_plan(
     on `fits` — an adopted layout built at a coarser bucket count by an
     older process correctly fails the bound and falls back to SMJ, the
     strategy that spills."""
-    heap = heap_bytes if heap_bytes is not None else _heap_bytes()
-    ncores = cores if cores is not None else _cores()
+    heap = heap_bytes if heap_bytes is not None else budget.heap_bytes(spark)
+    ncores = cores if cores is not None else budget.cores(spark)
     spec = read_bucket_spec(spark, table)
     nb = spec["n_buckets"]
     files = _data_files(table_location(spark, table))
     rows, per_row = _parquet_row_stats(files, None)
     per_bucket = rows / max(nb, 1)
     concurrent = per_bucket * per_row * min(nb, ncores)
-    budget = heap * _SHJ_BUDGET_FRACTION
+    limit = budget.shj_budget(heap)
     return {
-        "fits": concurrent <= budget,
+        "fits": concurrent <= limit,
         "rows": rows,
         "n_buckets": nb,
         "per_bucket_rows": int(per_bucket),
         "per_row_cost": round(per_row, 1),
         "concurrent_bytes": int(concurrent),
-        "budget_bytes": int(budget),
+        "budget_bytes": int(limit),
     }
 
 
 def shj_min_buckets(
+    spark: SparkSession,
     path: str,
     columns: tuple | None = None,
-    heap_bytes: int | None = None,
-    cores: int | None = None,
 ) -> int:
     """Smallest power-of-two bucket count at which a co-located SHJ
     build of the `columns` projection of the parquet data at `path`
@@ -784,12 +774,11 @@ def shj_min_buckets(
     exactly when its memory bound is real, not hoped."""
     import math
 
-    heap = heap_bytes if heap_bytes is not None else _heap_bytes()
-    ncores = cores if cores is not None else _cores()
     files = _data_files(path) if os.path.isdir(path) else [path]
     rows, per_row = _parquet_row_stats(files, columns)
-    budget = heap * _SHJ_BUDGET_FRACTION
-    max_rows_per_bucket = budget / (per_row * ncores)
+    max_rows_per_bucket = budget.shj_budget(budget.heap_bytes(spark)) / (
+        per_row * budget.cores(spark)
+    )
     if max_rows_per_bucket <= 0:
         return 1
     need = rows / max_rows_per_bucket

@@ -1,0 +1,117 @@
+"""The resource budget's gates on both sides of every boundary, and the
+heap and cores it reads from a session.
+
+The gate cells are the tier table of TIERS_r14.md at an 8 g heap (plus
+the 3 g heap that moves the sf10g graph across the broadcast cap)."""
+
+from __future__ import annotations
+
+from types import SimpleNamespace
+
+import pytest
+
+from mbrainz_importer_spark import budget
+from mbrainz_importer_spark.session import _initial_partition_floor
+
+G = 1 << 30
+
+
+@pytest.mark.parametrize("heap, n_rows, fits", [
+    (8 * G, 4_194_304, True),     # the cap at 8 g
+    (8 * G, 4_194_305, False),
+    (8 * G, 16_000, True),        # sf0.1 graph
+    (8 * G, 1_599_900, True),     # sf10g graph
+    (3 * G, 1_572_864, True),     # the cap at 3 g
+    (3 * G, 1_572_865, False),
+    (3 * G, 1_599_900, False),    # sf10g graph at 3 g: SMJ
+])
+def test_graph_broadcast_cap(heap, n_rows, fits):
+    assert budget.broadcasts(heap, n_rows) is fits
+
+
+@pytest.mark.parametrize("n_ops, probe", [
+    (1_048_576, True),    # the cap at 8 g
+    (1_048_577, False),
+    (17_000, True),       # sf0.1 increment
+    (1_700_000, False),   # sf10 increment: straight to the merge
+])
+def test_noop_probe_cap(n_ops, probe):
+    assert budget.wide_broadcasts(8 * G, n_ops) is probe
+
+
+@pytest.mark.parametrize("touched, split", [
+    (2 * G, False),       # heap/4 at 8 g
+    (2 * G + 1, True),
+    (1_000_000_000, False),   # sf10 touched partitions
+    (18 * G, True),           # sf100 touched partitions
+])
+def test_merge_split_gate(touched, split):
+    assert budget.splits_merge(8 * G, touched) is split
+
+
+@pytest.mark.parametrize("fact_bytes, in_memory", [
+    (12_000_000, True),       # sf0.1 facts
+    (900_000_000, False),     # sf10g facts
+    (G // 16, True),          # x16 == heap/8 at 8 g
+    (G // 16 + 1, False),
+    (0, False),               # unknown corpus takes the disk side
+])
+def test_edge_storage_level(fact_bytes, in_memory):
+    assert budget.edges_in_memory(8 * G, fact_bytes) is in_memory
+
+
+@pytest.mark.parametrize("n_edges, n_src, fits", [
+    ((1 << 25) - 8, 1, True),   # 16 B/edge + 128 B/row == heap/16 at 8 g
+    ((1 << 25) - 7, 1, False),
+])
+def test_triangle_adjacency_cap(n_edges, n_src, fits):
+    assert budget.adjacency_broadcasts(8 * G, n_edges, n_src) is fits
+
+
+def test_shj_budget_is_a_quarter_heap():
+    assert budget.shj_budget(8 * G) == 2 * G
+
+
+@pytest.mark.parametrize("fact_bytes, floor", [
+    (13_500_000, 32),         # sf0.1: the static count
+    (1_053_000_000, 256),     # sf10g
+    (12_800_000_000, 256),    # sf100: capped
+    (128 << 20, 32),          # sized floor == static
+    ((128 << 20) + (4 << 20), 64),
+])
+def test_aqe_initial_partition_floor(fact_bytes, floor):
+    assert _initial_partition_floor(32, fact_bytes) == floor
+
+
+def test_session_heap_and_cores(spark):
+    assert budget.heap_bytes(spark) == 8 << 30
+    assert budget.cores(spark) == spark.sparkContext.defaultParallelism
+
+
+def _session_with(spark, local: bool, **conf) -> SimpleNamespace:
+    """A stand-in session whose context is `local` or not and holds a
+    fresh JVM SparkConf with `conf` (dots spelled as underscores)."""
+    jconf = spark.sparkContext._jvm.org.apache.spark.SparkConf(False)
+    for key, value in conf.items():
+        jconf.set(key.replace("_", "."), value)
+    sc = SimpleNamespace(isLocal=lambda: local, conf=lambda: jconf)
+    jsc = SimpleNamespace(sc=lambda: sc)
+    return SimpleNamespace(sparkContext=SimpleNamespace(_jsc=jsc))
+
+
+@pytest.mark.parametrize("value", ["8g", "8gb", "8192", "8192m", "8388608k"])
+def test_heap_is_parsed_the_way_spark_sizes_it(spark, value):
+    """A bare number is MiB, as when Spark starts the driver."""
+    s = _session_with(spark, True, spark_driver_memory=value)
+    assert budget.heap_bytes(s) == 8 << 30
+
+
+def test_heap_reads_executor_memory_off_local(spark):
+    s = _session_with(
+        spark, False, spark_driver_memory="8g", spark_executor_memory="2g"
+    )
+    assert budget.heap_bytes(s) == 2 << 30
+
+
+def test_heap_defaults_to_spark_default(spark):
+    assert budget.heap_bytes(_session_with(spark, True)) == 1 << 30

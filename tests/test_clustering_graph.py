@@ -408,6 +408,7 @@ def test_triangle_batched_passes_equal_single_pass(spark, monkeypatch):
     break silently). Forced K>1 via a 1-byte spill budget."""
     from pyspark.sql import functions as F
 
+    from mbrainz_importer_spark import budget
     from mbrainz_importer_spark.operators.graph import triangle_count
     from mbrainz_importer_spark.tables import load
 
@@ -421,6 +422,6 @@ def test_triangle_batched_passes_equal_single_pass(spark, monkeypatch):
         .distinct()
     )
     single = triangle_count(edges).collect()[0]["n_triangles"]
-    monkeypatch.setenv("SPARK_GRAFT_TRIANGLE_SPILL_BUDGET", "1")
+    monkeypatch.setattr(budget, "TRIANGLE_SPILL_BYTES", 1)
     batched = triangle_count(edges).collect()[0]["n_triangles"]
     assert batched == single and single > 0

@@ -37,3 +37,14 @@ def test_entry_smoke(spark):
     df = e.entry(spark)
     rows = df.collect()
     assert len(rows) > 0
+
+
+def test_registry_lists_every_query_module():
+    """A query module missing from the registry would silently drop its
+    queries from the driver contract."""
+    import pkgutil
+
+    from mbrainz_importer_spark import queries
+
+    on_disk = {m.name for m in pkgutil.iter_modules(queries.__path__)}
+    assert on_disk == {m.__name__.rsplit(".", 1)[1] for m in queries._MODULES}

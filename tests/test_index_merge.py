@@ -558,11 +558,11 @@ def test_merge_split_gate(spark, tmp_path, monkeypatch, kind, heap, split):
     partitions above heap/4 bytes on disk stage one write per touched
     attribute; at or below it, one write for all of them. The merged
     content is the same on both sides."""
+    from mbrainz_importer_spark import budget
     from mbrainz_importer_spark.plans import eav
-    from mbrainz_importer_spark.sources import bucketed
 
     st = _store_under_test(spark, kind, tmp_path, f"split_gate_{kind}_{heap}")
-    monkeypatch.setattr(bucketed, "_heap_bytes", lambda: heap)
+    monkeypatch.setattr(budget, "heap_bytes", lambda spark: heap)
     layout = eav._PathLayout if kind == "plain" else eav._TableLayout
     write_stage = layout.write_stage
     firsts = []

@@ -114,7 +114,7 @@ def test_datom_probe_size_gate_skips_probe_above_cap(spark, monkeypatch):
     even a genuinely inert increment goes straight to the real merge
     (r13 ADVICE medium #2: a bulk-sized increment must never be forced
     through the broadcast-relation limit just to ask)."""
-    from mbrainz_importer_spark.sources import bucketed
+    from mbrainz_importer_spark import budget
 
     existing = _store(spark, BASE)
     inert = _ops(spark, [
@@ -123,7 +123,7 @@ def test_datom_probe_size_gate_skips_probe_above_cap(spark, monkeypatch):
     ])
     assert _increment_is_noop(existing, inert) is True
     # cap = heap // (16 * 512) == 1 row < n_ops == 2 -> probe skipped
-    monkeypatch.setattr(bucketed, "_heap_bytes", lambda: 16 * 512)
+    monkeypatch.setattr(budget, "heap_bytes", lambda spark: 16 * 512)
     assert _increment_is_noop(existing, inert) is False
 
 

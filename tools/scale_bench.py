@@ -513,9 +513,11 @@ def main() -> None:
         # measurements already taken
         if args.out:
             with open(args.out, "w") as f:
-                json.dump(_doc(args, sf, skipped, out, partial=True), f, indent=1)
+                json.dump(
+                    _doc(spark, args, sf, skipped, out, partial=True), f, indent=1
+                )
 
-    doc = _doc(args, sf, skipped, out)
+    doc = _doc(spark, args, sf, skipped, out)
     line = json.dumps(doc)
     if args.out:
         with open(args.out, "w") as f:
@@ -538,7 +540,9 @@ def _spread_pct(xs: list[float]) -> float:
     return round(100.0 * (max(xs) - min(xs)) / med, 1) if med else 0.0
 
 
-def _doc(args, sf, skipped, out, partial: bool = False) -> dict:
+def _doc(spark, args, sf, skipped, out, partial: bool = False) -> dict:
+    from mbrainz_importer_spark import budget
+
     doc = {
         "metric": "scale_tier_query_wall_seconds",
         "corpus": os.environ.get("SPARK_GRAFT_CORPUS", ""),
@@ -548,11 +552,12 @@ def _doc(args, sf, skipped, out, partial: bool = False) -> dict:
         "sf": sf,
         "runs": args.runs,
         "profile": args.profile,
-        "driver_mem": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
+        # the heap and cores every budget gate read from this session
+        "heap_bytes": budget.heap_bytes(spark),
         "shuffle_partitions": int(
             os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32")
         ),
-        "cpus": int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
+        "cores": budget.cores(spark),
         "protocol": (
             "build_run_seconds = run 1 (carries one-time layout/index "
             "builds); steady_seconds = median of the remaining runs — "
