@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .. import budget
+from .rounds import bcast, settle
 from .text import normalize_for_fingerprint, token_fingerprint_norm, tokens
 
 
@@ -647,45 +647,36 @@ def connected_components(
     rounds instead of 1M). Each round is two shuffle joins + a groupBy,
     all on (node, label) pairs — linear in edges, no component is ever
     materialized on one executor. localCheckpoint cuts lineage per round
-    (pointed at a checkpoint dir on a real cluster)."""
+    (pointed at a checkpoint dir on a real cluster). The seed settles and
+    every per-round label frame goes through bcast (operators/rounds.py)."""
     edges = pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
     sym = (
         edges.unionByName(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
         .distinct()
         .localCheckpoint(eager=False)
     )
-    lbl = (
+    # ONE action initializes everything: settling lbl materializes both
+    # lazy checkpoints (lbl computes through sym) and sizes every
+    # round's broadcasts; the label frame stays |V(pairs)|-sized
+    lbl, n_lbl = settle(
         sym.groupBy("u")
         .agg(F.min("v").alias("m"))
         .select(
             F.col("u").alias("node"),
             F.least(F.col("u"), F.col("m")).alias("label"),
         )
-        .localCheckpoint(eager=False)
     )
-    # ONE action initializes everything: counting lbl materializes both
-    # lazy checkpoints (lbl computes through sym) and sizes the
-    # broadcast decision. The label frame is |V(pairs)|-sized; when the
-    # budget admits it every per-round join broadcasts it — checkpointed
-    # frames are stats-less LogicalRDDs, so Catalyst would otherwise
-    # SMJ, re-shuffling the symmetric edge set every round. Past the cap
-    # the SMJ path stands.
-    bcast = budget.broadcasts(budget.heap_bytes(lbl.sparkSession), lbl.count())
-
-    def _b(df: DataFrame) -> DataFrame:
-        return F.broadcast(df) if bcast else df
-
     for _ in range(max_iters):
         nbr = (
             sym.alias("e")
-            .join(_b(lbl.alias("l")), F.col("e.v") == F.col("l.node"))
+            .join(bcast(lbl.alias("l"), n_lbl), F.col("e.v") == F.col("l.node"))
             .groupBy(F.col("e.u").alias("node"))
             .agg(F.min("l.label").alias("nmin"))
         )
         ptr = (
             lbl.alias("x")
             .join(
-                _b(lbl.alias("y")),
+                bcast(lbl.alias("y"), n_lbl),
                 F.col("x.label") == F.col("y.node"),
                 "left",
             )
@@ -696,19 +687,16 @@ def connected_components(
             )
         )
         # the update can only LOWER a label (least() includes the old
-        # one), so "changed" is new < old — computed inline instead of
-        # the old separate join-against-previous probe, and the count
-        # below both materializes the round's lazy checkpoint and
-        # answers convergence: ONE job per round where the eager
-        # checkpoint + join + take(1) pattern paid two jobs and an
-        # extra |V| join
+        # one), so "changed" is new < old, computed inline; counting the
+        # changed rows materializes the round's lazy checkpoint and
+        # answers convergence in ONE action per round
         upd = F.least(
             F.col("label"),
             F.coalesce(F.col("pmin"), F.col("label")),
             F.coalesce(F.col("nmin"), F.col("label")),
         )
         new = (
-            ptr.join(_b(nbr), "node", "left")
+            ptr.join(bcast(nbr, n_lbl), "node", "left")
             .select(
                 "node",
                 upd.alias("new_label"),

@@ -39,37 +39,11 @@ stays one lazy plan.
 
 from __future__ import annotations
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .. import budget
-from ..session import _corpus_fact_bytes
-
-# The static edge prefix of every iterative operator persists at the
-# level _edge_level picks. At fact-scale mass it is DISK_ONLY:
-# MEMORY_AND_DISK blocks pin the unified pool's storage fraction,
-# starving the per-round aggregations, and are evictable, which is
-# fatal after a lineage cut ("Block rdd_N does not exist"). DISK_ONLY
-# blocks are never evicted, leave execution the whole pool, and re-read
-# at page-cache speed. Below the budget's edges_in_memory gate the
-# prefix is memory-backed instead: every round re-scans it, and a
-# DISK_ONLY scan re-deserializes the blocks each time. The small
-# per-round frames (labels / frontiers / distances, O(|V|) rows) keep
-# the default level.
-def _edge_level(heap: int) -> StorageLevel:
-    if budget.edges_in_memory(heap, _corpus_fact_bytes()):
-        return StorageLevel.MEMORY_AND_DISK
-    return StorageLevel.DISK_ONLY
-
-
-# The per-round frames (ranks, labels, frontiers, distances, degree and
-# adjacency lookups) are |V|-sized and, once checkpointed or persisted,
-# stats-less LogicalRDDs: Catalyst plans SMJ against them, re-shuffling
-# AND re-sorting the full edge prefix every round. Each operator
-# broadcasts them when the budget admits their measured row count, so
-# a round is one streamed pass over the edge prefix; past the cap the
-# SMJ path stands.
+from .rounds import bcast, edge_level, edge_prefix, settle
 
 PR_SCALE = 1_000_000_000_000
 
@@ -103,19 +77,14 @@ def pagerank(
 # across CALLS per distinct edge plan — size-ONE by design: a new edge
 # set evicts and unpersists the previous one, so the footprint is
 # bounded at three frames regardless of how many graphs a session
-# touches. Before r9's hygiene pass this reuse happened silently
-# through Spark's CacheManager (re-persisting an identical plan hits
-# the same cache) and nothing ever released it; now the lifecycle is
-# explicit — release_pagerank_statics() drops everything (asserted in
-# test_pagerank_topk_releases_statics_on_demand) and repeated runs
-# still amortize the static build the way the gates measure.
+# touches. Repeated runs on one graph amortize the static build, and
+# release_pagerank_statics() drops everything on demand.
 _PR_STATICS: dict = {}
 
 
 def release_pagerank_statics() -> None:
     """Unpersist every cached PageRank static frame. Call when the
-    graph workload is done and the executor memory should go back —
-    the explicit handle the r9 verdict asked for."""
+    graph workload is done and the executor memory should go back."""
     for frames in _PR_STATICS.values():
         for f in frames[:3]:
             f.unpersist()
@@ -128,8 +97,8 @@ def _pagerank_statics(e: DataFrame):
     already cached. `ew` is the edge list PRE-JOINED with the source
     out-degree, (s, t, od): the out-degree join is delta-independent,
     so folding it into the cached prefix removes one |E|-sized join
-    from EVERY PageRank round (r13 optimization, guide §2.4 — the
-    rank-side join is the only per-round join left)."""
+    from EVERY PageRank round: the rank-side join is the only per-round
+    join."""
     key = e._jdf.queryExecution().analyzed().semanticHash()
     if key in _PR_STATICS:
         return _PR_STATICS[key]
@@ -145,7 +114,7 @@ def _pagerank_statics(e: DataFrame):
     outd = e.groupBy(F.col("s").alias("v")).agg(
         F.count(F.lit(1)).cast("long").alias("od")
     )
-    level = _edge_level(budget.heap_bytes(e.sparkSession))
+    level = edge_level(e.sparkSession)
     e = e.persist(level)
     e.count()
     outd = outd.persist(level)
@@ -176,8 +145,7 @@ def _pagerank_with_handles(
     size-one _PR_STATICS cache: repeated runs on the same graph reuse
     them (the delta-independent prefix, same trick as datalog's
     semi-naive cache), a new graph evicts them, and
-    release_pagerank_statics() drops everything on demand (r9 verdict
-    #6 — the cache is documented and releasable, not a silent leak)."""
+    release_pagerank_statics() drops everything on demand."""
     if dangling not in ("drop", "redistribute"):
         raise ValueError(
             f"dangling must be 'drop' or 'redistribute', got {dangling!r}"
@@ -189,18 +157,16 @@ def _pagerank_with_handles(
     ew, outd, nodes, n_nodes = _pagerank_statics(e)
     base = PR_SCALE // n_nodes
     rank = nodes.select("v", F.lit(base).cast("long").alias("r"))
-    # broadcast the rank and contribution frames (see the per-round
-    # frames note above)
-    bcast = budget.broadcasts(budget.heap_bytes(edges.sparkSession), n_nodes)
+    # rank and contrib are |V|-sized: bcast (operators/rounds.py)
     for it in range(iters):
-        rk = F.broadcast(rank) if bcast else rank
+        rk = bcast(rank, n_nodes)
         contrib = (
             ew.join(rk, ew["s"] == rk["v"])
             .select("t", F.expr("r DIV od").alias("c"))
             .groupBy("t")
             .agg(F.sum("c").cast("long").alias("c"))
         )
-        cb = F.broadcast(contrib) if bcast else contrib
+        cb = bcast(contrib, n_nodes)
         joined = nodes.join(cb, nodes["v"] == cb["t"], "left")
         if dangling == "redistribute":
             dm = (
@@ -317,8 +283,7 @@ def triangle_count(
     # cache it so the degree pass and the orientation join don't each
     # recompute the upstream plan. Every cached frame here is |E|-sized,
     # so all of them take the edge level.
-    heap = budget.heap_bytes(edges.sparkSession)
-    level = _edge_level(heap)
+    level = edge_level(edges.sparkSession)
     e = e.persist(level)
     n_e = e.count()
     # explode(array(s,t)) instead of union-of-projections: one scan of
@@ -329,15 +294,12 @@ def triangle_count(
         .groupBy("v")
         .agg(F.count(F.lit(1)).cast("long").alias("d"))
     ).persist(level)
-    # broadcast BOTH degree lookups (see the per-round frames note
-    # above); deg persists so the two broadcast builds don't each
-    # recompute the aggregation
+    # both degree lookups go through bcast (operators/rounds.py); deg
+    # persists so the two broadcast builds don't each recompute the
+    # aggregation
     n_v = deg.count()
-    small_v = budget.broadcasts(heap, n_v)
-    deg_s = deg.select(F.col("v").alias("s"), F.col("d").alias("ds"))
-    deg_t = deg.select(F.col("v").alias("t"), F.col("d").alias("dt"))
-    if small_v:
-        deg_s, deg_t = F.broadcast(deg_s), F.broadcast(deg_t)
+    deg_s = bcast(deg.select(F.col("v").alias("s"), F.col("d").alias("ds")), n_v)
+    deg_t = bcast(deg.select(F.col("v").alias("t"), F.col("d").alias("dt")), n_v)
     et = e.join(deg_s, "s").join(deg_t, "t")
     # s-first iff (deg, id) of s sorts below t's; input has s < t so the
     # equal-degree tie keeps the canonical direction
@@ -351,7 +313,6 @@ def triangle_count(
     # orientation is a BIJECTION on the (distinct) edge set, so
     # n_edges == the already-measured e.count() — no separate count
     # job; oriented's blocks materialize inside adj.count() below
-    # (r13: one fewer |E|-sized synchronous job per call)
     n_edges = n_e
     adj = None
     try:
@@ -364,7 +325,6 @@ def triangle_count(
         n_src = adj.count()
         # e and deg fed the orientation join, which adj.count() has now
         # materialized through oriented's persist — release both here
-        # (previously released after the separate oriented.count())
         e.unpersist()
         deg.unpersist()
         # Bounded-spill batching: the second intersection join sorts
@@ -381,12 +341,12 @@ def triangle_count(
         k_batches = min(64, max(1, -(-est_bytes // budget.TRIANGLE_SPILL_BYTES)))
         au = adj.select(F.col("u").alias("ju"), F.col("nbrs").alias("nu"))
         aw = adj.select(F.col("u").alias("jw"), F.col("nbrs").alias("nw"))
-        # broadcast the adjacency lists (see the per-round frames note
-        # above): the count job becomes ONE streamed pass over the
-        # oriented set with zero exchanges. K > 1 batches only happen at
-        # a mass far past any broadcastable size.
+        # broadcast the adjacency lists under their own price: the
+        # count job becomes ONE streamed pass over the oriented set with
+        # zero exchanges. K > 1 batches only happen at a mass far past
+        # any broadcastable size.
         bcast_adj = k_batches == 1 and budget.adjacency_broadcasts(
-            heap, n_edges, n_src
+            budget.heap_bytes(edges.sparkSession), n_edges, n_src
         )
         if bcast_adj:
             au, aw = F.broadcast(au), F.broadcast(aw)
@@ -455,54 +415,40 @@ def bfs_hops(
     FRONTIER joins the edge list on `src` — work is O(frontier-incident
     edges), never O(all paths) — and a left-anti join against the
     visited set keeps first reach only, which IS the minimum hop since
-    rounds advance in hop order. The visited set localCheckpoints each
-    round: loop-termination reads it anyway, so the checkpoint is free
-    and the plan stays flat at any depth (the measured trade from the
-    PageRank cadence A/B does not apply — BFS reads its delta per
-    round). Frontiers empty out early on bounded-diameter graphs; the
-    loop stops at the first empty frontier.
+    rounds advance in hop order. Each hop settles its frontier
+    (operators/rounds.py): the termination probe reads it anyway, so
+    the cut is free and the plan stays flat at any depth, where
+    PageRank, which reads nothing per round, cuts on a cadence.
+    Frontiers empty out early on bounded-diameter graphs; the loop
+    stops at the first empty frontier.
 
     The caller dedups edges; seeds outside the edge set are still
     reported at hop 0 (they are reachable from themselves)."""
-    # the edge list is the delta-independent prefix: checkpoint it ONCE
-    # (same discipline as label_propagation) — without this every
-    # round's frontier checkpoint re-executes the caller's whole edge
-    # derivation (a fact-fact join at gate scale), and the re-planned
-    # derivation is free to pick a driver-fatal broadcast each round
-    heap = budget.heap_bytes(edges.sparkSession)
-    e = edges.select(
+    # edge_prefix / settle / bcast: operators/rounds.py. Each hop runs
+    # one action (its settle); the visited union's lazy cut materializes
+    # inside the next hop's.
+    e = edge_prefix(edges.select(
         F.col(src_col).cast("bigint").alias("s"),
         F.col(dst_col).cast("bigint").alias("t"),
-    ).localCheckpoint(eager=False, storageLevel=_edge_level(heap))
+    ))
     seed_col = sources.columns[0]
-    visited = (
+    visited, n_visited = settle(
         sources.select(F.col(seed_col).cast("bigint").alias("node"))
         .distinct()
         .withColumn("hop", F.lit(0).cast("bigint"))
-        .localCheckpoint(eager=False)
     )
-    # broadcast the frontier and visited frames (see the per-round
-    # frames note above). The per-round .count() doubles as the
-    # broadcast decision and the loop-termination read. All checkpoints
-    # are LAZY: the count is the materializing action, so each hop is
-    # one job, and the visited union's checkpoint materializes inside
-    # the next hop's.
-    n_visited = visited.count()
     frontier, n_frontier = visited, n_visited
     for h in range(1, max_hops + 1):
-        fr = F.broadcast(frontier) if budget.broadcasts(heap, n_frontier) else frontier
+        fr = bcast(frontier, n_frontier)
         reached = (
             fr.join(e, fr["node"] == e["s"])
             .select(F.col("t").alias("node"))
             .distinct()
         )
-        vi = F.broadcast(visited) if budget.broadcasts(heap, n_visited) else visited
-        fresh = (
-            reached.join(vi, "node", "left_anti")
+        frontier, n_frontier = settle(
+            reached.join(bcast(visited, n_visited), "node", "left_anti")
             .withColumn("hop", F.lit(h).cast("bigint"))
         )
-        frontier = fresh.localCheckpoint(eager=False)
-        n_frontier = frontier.count()
         if not n_frontier:
             break
         visited = visited.unionByName(frontier).localCheckpoint(eager=False)
@@ -530,73 +476,43 @@ def label_propagation(
     structure, while the MODE rule finds dense neighborhoods inside a
     component. Pass a symmetric edge list for the undirected semantics.
 
-    Scale shape: two shuffles per round — (dst, label) count, then the
-    per-dst argmax — both keyed on the destination node so AQE reuses
-    the exchange; the edge frame is the delta-independent prefix and
-    localCheckpoints once. Returns (node BIGINT, label BIGINT)."""
-    heap = budget.heap_bytes(edges.sparkSession)
-    e = edges.select(
+    Scale shape: ONE shuffle per round. mode(label, deterministic=True)
+    is the built-in count-map aggregate: ObjectHashAggregate builds a
+    label->count map per destination node map-side and merges the maps
+    across a single Exchange on the node. deterministic=True breaks ties
+    to the smallest label (pinned with adversarial ties in
+    test_clustering_graph). The edge frame is the delta-independent
+    prefix (edge_prefix, operators/rounds.py). Returns (node BIGINT,
+    label BIGINT)."""
+    e = edge_prefix(edges.select(
         F.col(src_col).cast("bigint").alias("s"),
         F.col(dst_col).cast("bigint").alias("t"),
-    ).localCheckpoint(eager=False, storageLevel=_edge_level(heap))
+    ))
     # explode(array(s,t)) instead of union-of-projections: one scan of
-    # the checkpointed edge blocks instead of two (guide §2.4)
+    # the checkpointed edge blocks instead of two
     nodes = e.select(
         F.explode(F.array("s", "t")).alias("node")
     ).distinct()
-    # checkpoint the INITIAL label frame and let the sizing count below
-    # materialize it (the same discipline bfs_hops/sssp_bounded apply to
-    # their seed frames): round 1 consumes `labels` twice — the
-    # broadcast build and the update join's left side — and without the
-    # cut each consumer recomputes the |V| distinct from the edge
-    # prefix (measured at sf0.1: two extra 2|E|-scan + distinct stages,
-    # ~11.6s of the round's 31s task time)
-    labels = nodes.withColumn("label", F.col("node")).localCheckpoint(
-        eager=False
-    )
-    # broadcast the label frame (see the per-round frames note above).
-    # Old rounds' relations become unreachable after each round's
-    # checkpoint and are reclaimed by the ContextCleaner on driver GC.
-    n_nodes = labels.count()
-    bcast_labels = budget.broadcasts(heap, n_nodes)
+    # round 1 reads the initial label frame twice (the broadcast build
+    # and the update join's left side); settling it computes the |V|
+    # distinct once instead of per consumer
+    labels, n_nodes = settle(nodes.withColumn("label", F.col("node")))
     for _ in range(iters):
-        lab = F.broadcast(labels) if bcast_labels else labels
-        # ONE exchange per round (r14, verdict #5): the old two-step —
-        # groupBy(t, label).count() then a per-t argmax — shuffled
-        # twice (once on (t, label) partials, once on t carrying the
-        # already-aggregated counts). mode(label, deterministic=True)
-        # is the built-in count-map aggregate: ObjectHashAggregate
-        # builds a label->count map per t MAP-SIDE and merges maps
-        # across the single Exchange on t — the same partial-combined
-        # bytes as the first shuffle, and the second shuffle is gone
-        # (per-round plan: 2 Exchange -> 1, plans/r14/
-        # graph_label_propagation_*). deterministic=True resolves ties
-        # to the SMALLEST label — exactly the old
-        # min(struct(-cnt, label)) order, proved equal on the full
-        # sf0.1 graph (exceptAll both ways = 0) and pinned with
-        # adversarial ties in test_clustering_graph; the DuckDB oracle
-        # re-certifies every consumer.
+        lab = bcast(labels, n_nodes)
         best = (
             e.join(lab, e["s"] == lab["node"])
             .groupBy(F.col("t").alias("node"))
             .agg(F.mode("label", True).alias("new_label"))
         )
         labels = (
-            # `best` is |V|-bounded like the label frame and broadcasts
-            # under the same cap
-            labels.join(
-                F.broadcast(best) if bcast_labels else best, "node", "left"
-            )
+            labels.join(bcast(best, n_nodes), "node", "left")
             .select(
                 "node",
                 F.coalesce("new_label", "label").alias("label"),
             )
-            # lazy: rounds run no driver action (fixed iters, no
-            # termination probe), so the eager per-round checkpoint was
-            # one synchronous job per round purely to cut lineage. The
-            # lazy cut bounds plan depth identically and materializes
-            # inside the next round's broadcast build (or the caller's
-            # action) — each round's RDD still computes exactly once.
+            # rounds run no action (fixed iters, no termination probe):
+            # the lazy cut bounds plan depth and materializes inside the
+            # next round's broadcast build or the caller's action
             .localCheckpoint(eager=False)
         )
     return labels
@@ -624,36 +540,27 @@ def sssp_bounded(
     node — the textbook distributed Bellman-Ford step. Rounds are FIXED
     (the oracle-matched contract); distances only ever decrease, so a
     redelivered round is a no-op."""
-    heap = budget.heap_bytes(edges.sparkSession)
-    e = edges.select(
+    e = edge_prefix(edges.select(
         F.col(src_col).cast("bigint").alias("s"),
         F.col(dst_col).cast("bigint").alias("t"),
         F.col(weight_col).cast("bigint").alias("w"),
-    ).localCheckpoint(eager=False, storageLevel=_edge_level(heap))
+    ))
     seed_col = sources.columns[0]
-    dist = (
+    # edge_prefix / settle / bcast: operators/rounds.py
+    dist, n_dist = settle(
         sources.select(F.col(seed_col).cast("bigint").alias("node"))
         .distinct()
         .withColumn("dist", F.lit(0).cast("bigint"))
-        .localCheckpoint(eager=False)
     )
-    # broadcast the distance frame (see the per-round frames note
-    # above); the per-round count doubles as the broadcast decision (the
-    # checkpoint materializes the frame anyway)
-    n_dist = dist.count()
     for _ in range(rounds):
-        db = F.broadcast(dist) if budget.broadcasts(heap, n_dist) else dist
+        db = bcast(dist, n_dist)
         relaxed = (
             db.join(e, db["node"] == e["s"])
             .select(F.col("t").alias("node"), (F.col("dist") + F.col("w")).alias("dist"))
         )
-        dist = (
+        dist, n_dist = settle(
             dist.unionByName(relaxed)
             .groupBy("node")
             .agg(F.min("dist").cast("bigint").alias("dist"))
-            # lazy: the count below is the materializing action — one
-            # job per round instead of the eager-checkpoint + count pair
-            .localCheckpoint(eager=False)
         )
-        n_dist = dist.count()
     return dist

@@ -22,20 +22,20 @@ Covers the query surface the reference actually exercises
     semantics); each def compiles to a distinct subplan projected onto
     the head vars (with numeric projections carried across the rule
     boundary);
-  - recursive rules (Datomic graph-walk rules, e.g. ancestor) via
-    semi-naive fixpoint: base (non-recursive) defs seed the relation;
-    each iteration re-derives the recursive defs against only the
-    PREVIOUS iteration's delta (defs with several recursive calls fall
-    back to naive whole-relation substitution — still correct, just
-    re-derives more), anti-joins out known tuples, and stops when the
-    delta is empty. Every iteration localCheckpoints to cut lineage (on
-    a cluster you'd point this at a checkpoint dir); the iteration
-    count is bounded by MAX_FIXPOINT_ITERS (the depth of the data graph
-    in practice — ~log2(N) for trees). MUTUAL recursion (a->b->a, the
-    even/odd pattern) evaluates the whole strongly-connected clique of
-    rules together under the same stratified semi-naive scheme
-    (_compile_clique); recursion through (not ...) is rejected as
-    non-stratified, not mis-answered;
+  - recursive rules (Datomic graph-walk rules, e.g. ancestor, and
+    mutual recursion such as the even/odd pattern) via one stratified
+    semi-naive fixpoint over the rule's strongly-connected clique
+    (_compile_clique; direct recursion is a clique of one): base
+    (non-recursive) defs seed the relations; each iteration re-derives
+    the recursive defs against only the PREVIOUS iteration's delta
+    (defs with several recursive calls fall back to naive
+    whole-relation substitution — still correct, just re-derives
+    more), anti-joins out known tuples, and stops when every delta is
+    empty. Every iteration localCheckpoints to cut lineage (on a
+    cluster you'd point this at a checkpoint dir); the iteration count
+    is bounded by MAX_FIXPOINT_ITERS (the depth of the data graph in
+    practice — ~log2(N) for trees). Recursion through (not ...) is
+    rejected as non-stratified, not mis-answered;
   - (not clause+) negation — [("not", [e a v], ...)]: bindings
     satisfying the inner clauses are subtracted via a left-anti join on
     the variables shared with the outer plan (Datomic unification;
@@ -113,7 +113,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .. import budget
+from ..operators.rounds import bcast, settle
 
 AGGS = {
     "count", "count-distinct", "sum", "min", "max",
@@ -154,14 +154,6 @@ class DatalogError(ValueError):
 MAX_FIXPOINT_ITERS = 100
 
 
-def _broadcast_if_fits(heap: int, df: DataFrame, n_rows: int) -> DataFrame:
-    """Broadcast a fixpoint delta/total relation the budget admits, so
-    the per-round derivation joins stream the persisted prefix instead
-    of SMJ-re-shuffling it: checkpointed deltas are stats-less
-    LogicalRDDs, so Catalyst never broadcasts them on its own."""
-    return F.broadcast(df) if budget.wide_broadcasts(heap, n_rows) else df
-
-
 def _scan_calls(clauses: list, rules) -> list[tuple[str, bool]]:
     """Every rule invocation in a clause list as (rule_name, negated),
     with multiplicity — descending into (not ...)/(not-join ...) bodies
@@ -188,19 +180,6 @@ def _scan_calls(clauses: list, rules) -> list[tuple[str, bool]]:
         elif isinstance(head, str) and head in rules:
             out.append((head, False))
     return out
-
-
-def _self_calls(body: list, name: str) -> int:
-    """Count invocations of rule `name` in a rule body, including inside
-    (or ...) legs (semi-naive substitution reaches them through the impl
-    dict). A self-call under (not ...) is recursion through negation —
-    not stratified — and raises."""
-    calls = _scan_calls(body, {name})
-    if any(neg for _, neg in calls):
-        raise DatalogError(
-            f"rule {name!r} recurses through negation (not stratified)"
-        )
-    return len(calls)
 
 
 def _recursive_clique(name: str, rules: dict) -> set[str]:
@@ -997,8 +976,8 @@ def _cached_runner(
     cached: list,
 ):
     """Semi-naive PREFIX CACHE: when a recursive def's single recursive
-    call (into `call_names` — the rule itself, or its whole mutual
-    clique) is a top-level clause at index k>0, the body splits as
+    call (into `call_names`, the rule's recursion clique) is a
+    top-level clause at index k>0, the body splits as
     [static prefix][call + tail]. Every prefix clause is
     delta-independent, so its subplan (for transitive closure, the edge
     relation) compiles ONCE and persists across fixpoint rounds instead
@@ -1060,114 +1039,25 @@ def _compile_rule(
     positional columns a0..aN (plus __num_aJ numeric projections, null
     where a def binds the var non-numerically), unioned across defs.
 
-    Directly recursive rules evaluate by semi-naive fixpoint: the
-    non-recursive defs seed `total`; each round re-derives the
-    recursive defs with the self-call bound to the previous round's
-    `delta` (naive whole-`total` substitution when a def has several
-    self-calls), anti-joins already-known tuples, and terminates on an
-    empty delta. `rec_impl` carries the in-progress relation down the
-    compile so the self-invocation resolves to a DataFrame instead of
-    recursing. MUTUAL recursion (a clique of rules calling each other)
-    dispatches to _compile_clique — the same semi-naive machinery
-    iterating every rule of the strongly-connected component together."""
+    A recursive rule, direct (a clique of one) or mutual, evaluates by
+    the semi-naive fixpoint of its strongly-connected clique
+    (_compile_clique). `rec_impl` carries the in-progress relations
+    down the compile, so a recursive invocation resolves to a DataFrame
+    instead of recursing."""
     rec_impl = rec_impl or {}
     if name in rec_impl:
         return rec_impl[name]
     clique = _recursive_clique(name, rules)
-    if len(clique) > 1:
+    if clique:
         return _compile_clique(name, clique, datoms, rules, stack, rec_impl, dbs)
     if name in stack:
         # unreachable in normal flow (cycles resolve via rec_impl or the
         # clique path above); kept as a recursion-safety backstop
         raise DatalogError(f"unresolved recursive invocation of rule {name!r}")
-    defs = rules[name]
-
-    def branch(args, body, impl):
-        return _rule_branch(name, args, body, datoms, rules, stack, impl, dbs)
-
-    base_defs = [d for d in defs if not _self_calls(d[1], name)]
-    rec_defs = [d for d in defs if _self_calls(d[1], name)]
-
-    if not rec_defs:
-        return _union_all([branch(a, b, rec_impl) for a, b in defs]).distinct()
-
-    if not base_defs:
-        raise DatalogError(
-            f"recursive rule {name!r} has no non-recursive def to seed the fixpoint"
-        )
-    key_cols = [f"a{j}" for j in range(len(defs[0][0]))]
-
-    # Semi-naive PREFIX CACHE (_cached_runner): a recursive def whose
-    # single recursive call is a top-level clause compiles its
-    # delta-independent prefix once and persists it across rounds.
-    cached: list[DataFrame] = []
-    runners: list = []  # one per rec_def: callable(impl) -> branch frame
-    for args, body in rec_defs:
-        run = (
-            _cached_runner(
-                name, args, body, {name}, datoms, rules, stack, rec_impl,
-                dbs, cached,
-            )
-            if _self_calls(body, name) == 1
-            else None
-        )
-        runners.append(
-            run
-            if run is not None
-            else (lambda impl, a=args, b=body: branch(a, b, impl))
-        )
-
-    try:
-        total = (
-            _union_all([branch(a, b, rec_impl) for a, b in base_defs])
-            .distinct()
-            .localCheckpoint(eager=False)
-        )
-        # the count both materializes the lazy checkpoint and sizes the
-        # broadcast decisions below
-        n_total = total.count()
-        heap = budget.heap_bytes(datoms.sparkSession)
-        delta, n_delta = total, n_total
-        for _ in range(MAX_FIXPOINT_ITERS):
-            rounds = []
-            for (args, body), run in zip(rec_defs, runners):
-                impl = dict(rec_impl)
-                if _self_calls(body, name) == 1:
-                    impl[name] = _broadcast_if_fits(heap, delta, n_delta)
-                else:
-                    impl[name] = _broadcast_if_fits(heap, total, n_total)
-                rounds.append(run(impl))
-            # lazy checkpoint + count: ONE action both materializes the
-            # round's delta and answers the emptiness probe (the old
-            # eager checkpoint + take(1) paid a second job per round —
-            # the same fusion bfs_hops documents)
-            new = (
-                _union_all(rounds)
-                .distinct()
-                .join(
-                    _broadcast_if_fits(heap, total, n_total),
-                    on=key_cols,
-                    how="left_anti",
-                )
-                .localCheckpoint(eager=False)
-            )
-            n_new = new.count()
-            if not n_new:
-                return total
-            # total is a union of already-checkpointed frames (base + each
-            # round's delta): lineage stays shallow without re-materializing
-            # the WHOLE relation every round (which would make round cost
-            # O(|total|) instead of O(|delta| + anti-join))
-            total = total.unionByName(new)
-            n_total += n_new
-            delta, n_delta = new, n_new
-    finally:
-        for c in cached:
-            c.unpersist()
-    raise DatalogError(
-        f"rule {name!r} did not reach a fixpoint within {MAX_FIXPOINT_ITERS} "
-        "iterations (raise datalog.MAX_FIXPOINT_ITERS for deeper graphs)"
-    )
+    return _union_all([
+        _rule_branch(name, a, b, datoms, rules, stack, rec_impl, dbs)
+        for a, b in rules[name]
+    ]).distinct()
 
 
 def _compile_clique(
@@ -1179,9 +1069,11 @@ def _compile_clique(
     rec_impl: dict[str, DataFrame],
     dbs: dict[str, DataFrame] | None,
 ) -> DataFrame:
-    """Stratified semi-naive fixpoint over a MUTUAL-recursion clique
-    (e.g. even-hop/odd-hop reachability): every rule of the
-    strongly-connected component iterates together.
+    """Stratified semi-naive fixpoint over a recursion clique: the
+    strongly-connected component of the rule-call graph, {name} for a
+    directly recursive rule, larger for mutual recursion (e.g.
+    even-hop/odd-hop reachability). Every rule of the clique iterates
+    together.
 
     Each rule's defs split on whether they invoke a clique member: the
     clique-free defs seed that rule's relation; every round re-derives
@@ -1190,12 +1082,15 @@ def _compile_clique(
     derivable from older inputs were derived in older rounds), a def
     with several runs against the full totals (naive re-derivation,
     still correct) — then anti-joins the already-known tuples per rule.
-    The loop ends when every rule's delta is empty. Rules with no seed
-    defs start EMPTY (None) and populate once a rule they read from
-    produces tuples, so only part of the clique needs ground defs (the
-    even/odd pattern). Each round localCheckpoints per-rule deltas to
-    cut lineage, exactly like the direct-recursion path. A clique call
-    under (not ...) is recursion through negation and raises (not
+    The loop ends when every rule's delta is empty, so a seed that
+    derives nothing runs no round. Rules with no seed defs start EMPTY
+    (None) and populate once a rule they read from produces tuples, so
+    only part of the clique needs ground defs (the even/odd pattern).
+    Every seed and per-round delta settles, and the deltas and totals
+    the round reads go through bcast (wide rows; operators/rounds.py).
+    A total is a union of settled deltas, so lineage stays shallow
+    without re-materializing the whole relation each round. A clique
+    call under (not ...) is recursion through negation and raises (not
     stratified — Datomic rejects it too)."""
     base: dict[str, list] = {}
     rec: dict[str, list] = {}
@@ -1214,130 +1109,86 @@ def _compile_clique(
         base[r], rec[r] = b, rc
     if not any(base.values()):
         raise DatalogError(
-            f"mutually recursive rules {order} have no non-recursive def "
+            f"recursive rules {order} have no non-recursive def "
             "to seed the fixpoint"
         )
 
-    # per-(rule, def) prefix-cache runners — same mechanism as the
-    # direct-recursion path (_cached_runner); a def qualifies when its
-    # single clique call is a top-level clause after at least one
-    # static clause
+    # per-(rule, def) round runners: callable(impl) -> branch frame. A
+    # def whose single clique call is a top-level clause after at least
+    # one static clause runs on the prefix cache (_cached_runner)
     cached: list[DataFrame] = []
-    runners: dict[str, list] = {}
-    for r in order:
-        rs = []
-        for args, body, in_clique in rec[r]:
-            run = (
-                _cached_runner(
-                    r, args, body, clique, datoms, rules, stack, rec_impl,
-                    dbs, cached,
-                )
-                if len(in_clique) == 1
-                else None
-            )
-            rs.append(run)
-        runners[r] = rs
 
-    totals: dict[str, DataFrame | None] = {}
-    deltas: dict[str, DataFrame | None] = {}
-    # measured row counts drive the broadcast decisions, exactly like
-    # the direct-recursion loop (checkpointed frames are stats-less)
-    n_totals: dict[str, int] = {}
-    n_deltas: dict[str, int] = {}
-    heap = budget.heap_bytes(datoms.sparkSession)
+    def runner(r, args, body, in_clique):
+        run = len(in_clique) == 1 and _cached_runner(
+            r, args, body, clique, datoms, rules, stack, rec_impl, dbs, cached
+        )
+        return run or (lambda impl: _rule_branch(
+            r, args, body, datoms, rules, stack, impl, dbs
+        ))
+
+    runners = {r: [runner(r, *d) for d in rec[r]] for r in order}
+
+    # (frame, row count) per rule, None while empty; the counts drive
+    # every bcast since settled frames are stats-less
+    totals: dict[str, tuple[DataFrame, int] | None] = {}
+    deltas: dict[str, tuple[DataFrame, int] | None] = {}
     try:
         for r in order:
+            totals[r] = deltas[r] = None
             if base[r]:
-                t = (
-                    _union_all([
-                        _rule_branch(r, a, b, datoms, rules, stack, rec_impl, dbs)
-                        for a, b, _ in base[r]
-                    ])
-                    .distinct()
-                    .localCheckpoint(eager=False)
-                )
-                n_t = t.count()
-                totals[r] = t
-                deltas[r] = t if n_t else None
-                n_totals[r] = n_t
-                n_deltas[r] = n_t
-            else:
-                totals[r] = None
-                deltas[r] = None
-                n_totals[r] = 0
-                n_deltas[r] = 0
-
+                totals[r] = settle(_union_all([
+                    _rule_branch(r, a, b, datoms, rules, stack, rec_impl, dbs)
+                    for a, b, _ in base[r]
+                ]).distinct())
+                deltas[r] = totals[r] if totals[r][1] else None
         for _ in range(MAX_FIXPOINT_ITERS):
-            new_deltas: dict[str, DataFrame | None] = {}
-            n_new_deltas: dict[str, int] = {}
+            new_deltas: dict[str, tuple[DataFrame, int] | None] = {}
             for r in order:
-                key_cols = [f"a{j}" for j in range(len(rules[r][0][0]))]
                 rounds = []
-                for (args, body, in_clique), run in zip(rec[r], runners[r]):
-                    impl = dict(rec_impl)
+                for (_, _, in_clique), run in zip(rec[r], runners[r]):
+                    calls = set(in_clique)
                     if len(in_clique) == 1:
-                        s = in_clique[0]
-                        if deltas[s] is None:
-                            continue  # nothing new flowed into this def
-                        impl[s] = _broadcast_if_fits(heap, deltas[s], n_deltas[s])
+                        reads = deltas  # semi-naive: the previous round's delta
+                    elif any(totals[s] is None for s in calls):
+                        continue  # naive: wait until every called relation exists
                     else:
-                        if any(totals[s] is None for s in in_clique):
-                            continue  # a referenced relation is still empty
-                        if all(deltas[s] is None for s in set(in_clique)):
-                            continue  # no referenced relation changed
-                        for s in set(in_clique):
-                            impl[s] = _broadcast_if_fits(
-                                heap, totals[s], n_totals[s]
-                            )
-                    rounds.append(
-                        run(impl)
-                        if run is not None
-                        else _rule_branch(
-                            r, args, body, datoms, rules, stack, impl, dbs
-                        )
-                    )
+                        reads = totals
+                    if all(deltas[s] is None for s in calls):
+                        continue  # nothing new flowed into this def
+                    impl = dict(rec_impl)
+                    impl.update((s, bcast(*reads[s], wide=True)) for s in calls)
+                    rounds.append(run(impl))
+                new_deltas[r] = None
                 if not rounds:
-                    new_deltas[r] = None
-                    n_new_deltas[r] = 0
                     continue
                 new = _union_all(rounds).distinct()
                 if totals[r] is not None:
                     new = new.join(
-                        _broadcast_if_fits(heap, totals[r], n_totals[r]),
-                        on=key_cols,
+                        bcast(*totals[r], wide=True),
+                        on=[f"a{j}" for j in range(len(rules[r][0][0]))],
                         how="left_anti",
                     )
-                # lazy checkpoint + count — one action materializes and
-                # probes emptiness (see the direct-recursion loop)
-                new = new.localCheckpoint(eager=False)
-                n_new = new.count()
+                new, n_new = settle(new)
                 if n_new:
-                    new_deltas[r] = new
-                    n_new_deltas[r] = n_new
-                    totals[r] = (
-                        new if totals[r] is None else totals[r].unionByName(new)
+                    new_deltas[r] = (new, n_new)
+                    totals[r] = (new, n_new) if totals[r] is None else (
+                        totals[r][0].unionByName(new), totals[r][1] + n_new
                     )
-                    n_totals[r] += n_new
-                else:
-                    new_deltas[r] = None
-                    n_new_deltas[r] = 0
             deltas = new_deltas
-            n_deltas = n_new_deltas
             if all(d is None for d in deltas.values()):
-                out = totals[name]
-                if out is not None:
-                    return out
+                if totals[name] is not None:
+                    return totals[name][0]
                 # the invoked rule derived nothing — a typed empty relation
-                arity = len(rules[name][0][0])
                 fields = ", ".join(
-                    f"a{j} string, __num_a{j} double" for j in range(arity)
+                    f"a{j} string, __num_a{j} double"
+                    for j in range(len(rules[name][0][0]))
                 )
                 return datoms.sparkSession.createDataFrame([], fields)
     finally:
         for c in cached:
             c.unpersist()
     raise DatalogError(
-        f"mutually recursive rules {order} did not reach a fixpoint within "
+        f"recursive rules {order} did not reach a fixpoint within "
         f"{MAX_FIXPOINT_ITERS} iterations (raise datalog.MAX_FIXPOINT_ITERS "
         "for deeper graphs)"
     )

@@ -432,8 +432,9 @@ _PARITY_RULES = [
 def datalog_mutual_recursion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MUTUALLY recursive rules (the even/odd pattern): ancestors at
     EVEN distance in the floor(k/2) tree. even-hop and odd-hop call
-    each other, so the whole clique iterates together under stratified
-    semi-naive evaluation (plans/datalog._compile_clique); even-hop has
+    each other, so their two-rule clique iterates together under the
+    stratified semi-naive fixpoint that also runs direct recursion
+    (plans/datalog._compile_clique); even-hop has
     no base def and seeds empty. Oracle: DuckDB WITH RECURSIVE carrying
     a parity flag."""
     datoms = _tree_datoms(spark, sf_dir)

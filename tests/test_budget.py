@@ -11,6 +11,7 @@ from types import SimpleNamespace
 import pytest
 
 from mbrainz_importer_spark import budget
+from mbrainz_importer_spark.operators import rounds
 from mbrainz_importer_spark.session import _initial_partition_floor
 
 G = 1 << 30
@@ -81,6 +82,22 @@ def test_shj_budget_is_a_quarter_heap():
 ])
 def test_aqe_initial_partition_floor(fact_bytes, floor):
     assert _initial_partition_floor(32, fact_bytes) == floor
+
+
+
+@pytest.mark.parametrize("wide, n_rows, hinted", [
+    (False, 4_194_304, True),     # the narrow cap at 8 g
+    (False, 4_194_305, False),
+    (True, 1_048_576, True),      # the wide cap at 8 g
+    (True, 1_048_577, False),
+])
+def test_round_bcast_crosses_the_cap(spark, monkeypatch, wide, n_rows, hinted):
+    """rounds.bcast hints a per-round frame exactly when the budget
+    admits its measured row count."""
+    monkeypatch.setattr(budget, "heap_bytes", lambda spark: 8 * G)
+    df = rounds.bcast(spark.range(3), n_rows, wide=wide)
+    analyzed = df._jdf.queryExecution().analyzed().toString()
+    assert ("strategy=broadcast" in analyzed) is hinted
 
 
 def test_session_heap_and_cores(spark):

@@ -1045,20 +1045,31 @@ def test_min_max_str_aggregates(spark):
     assert [(r["g"], r["min_str_n"]) for r in rows] == [("g1", "a"), ("g2", "z")]
 
 
-def test_single_recursion_skips_clique_machinery(spark, monkeypatch):
-    """A directly-recursive rule (no mutual recursion) must evaluate on
-    the direct semi-naive path — the mutual-recursion clique evaluator
-    is strictly more bookkeeping per round, and the round-7 bench
-    regression suspicion was exactly that the fixpoint refactor had
-    routed single recursion through it. Pin the dispatch."""
-    from mbrainz_importer_spark.plans import datalog as dl
+def _jobs(spark) -> int:
+    return spark.sparkContext._jsc.sc().statusStore().jobsList(None).size()
 
-    def boom(*a, **kw):
-        raise AssertionError("single recursion dispatched to _compile_clique")
 
-    monkeypatch.setattr(dl, "_compile_clique", boom)
-    datoms = _chain_datoms(spark, [("a", "b"), ("b", "c")])
+def test_recursive_rule_job_budget(spark):
+    """Direct recursion runs on the clique fixpoint (a clique of one)
+    within a fixed Spark job budget: a linear 8-chain closure in at
+    most 48 jobs, and a seed that derives nothing runs no round at all
+    (the base settle and the query's own jobs only)."""
+    datoms = _chain_datoms(spark, [(chr(97 + i), chr(98 + i)) for i in range(8)])
+    j0 = _jobs(spark)
     out = q({"find": ["?x", "?y"], "rules": _ANC,
-             "where": [[("anc", "?x", "?y")]]}, datoms)
-    got = {(r["x"], r["y"]) for r in out.collect()}
-    assert got == {("a", "b"), ("a", "c"), ("b", "c")}
+             "where": [[("anc", "?x", "?y")]]}, datoms).collect()
+    assert _jobs(spark) - j0 <= 48
+    assert len(out) == 36  # C(9, 2) ordered pairs along the chain
+
+    empty_seed = [
+        [("anc", "?x", "?y"),
+         ["?e", ":node/id", "?x"], ["?e", ":node/parent", "?y"],
+         [("=", "?x", "zz")]],
+        _ANC[1],
+    ]
+    datoms = _chain_datoms(spark, [("a", "b"), ("b", "c"), ("c", "d")])
+    j0 = _jobs(spark)
+    out = q({"find": ["?x", "?y"], "rules": empty_seed,
+             "where": [[("anc", "?x", "?y")]]}, datoms).collect()
+    assert _jobs(spark) - j0 <= 6
+    assert out == []
