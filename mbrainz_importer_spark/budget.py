@@ -22,20 +22,23 @@ Prices, each against a share of the heap:
   heap's margin.
 - Shuffled-hash-join build: it does not spill; the concurrent build
   must fit heap/4, a conservative share of unified memory.
-- Edge storage level: derived edge mass is 16x the corpus fact bytes;
-  the edge prefix stays memory-backed only within heap/8. Unknown
-  corpus bytes (0) take the disk side.
+- Edge storage level: derived edge mass is DERIVED_MASS (16x) the
+  input-leaf bytes; an unsized leaf takes the disk side. The edge
+  prefix stays memory-backed only within heap/8.
 - Triangle spill: the intersection sort spills at most
   TRIANGLE_SPILL_BYTES per batch.
 """
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import SparkSession
 
 NARROW_ROW_BYTES = 128
 WIDE_ROW_BYTES = 512
 TRIANGLE_SPILL_BYTES = 8 << 30
+DERIVED_MASS = 16
 
 
 def heap_bytes(spark: SparkSession) -> int:
@@ -71,6 +74,17 @@ def shj_budget(heap: int) -> float:
     return heap / 4
 
 
-def edges_in_memory(heap: int, fact_bytes: int) -> bool:
+def edges_in_memory(heap: int, input_bytes: int) -> bool:
     """The static edge prefix may persist MEMORY_AND_DISK."""
-    return fact_bytes > 0 and fact_bytes * 16 <= heap // 8
+    return input_bytes > 0 and input_bytes * DERIVED_MASS <= heap // 8
+
+
+def initial_partition_floor(static_partitions: int, fact_bytes: int) -> int:
+    """AQE initialPartitionNum for a tier of `fact_bytes`, never below
+    `static_partitions`: a small tier keeps the static count, so a
+    multi-shuffle query does not pay 256-task launch overhead per
+    exchange; the fact-scale and graph tiers start every shuffle at 256,
+    where plain LPA OOMed an 8g heap at 32."""
+    need = fact_bytes * DERIVED_MASS // (64 << 20)
+    sized = 2 ** math.ceil(math.log2(need)) if need > 1 else 1
+    return max(static_partitions, min(256, sized))

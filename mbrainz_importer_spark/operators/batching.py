@@ -137,6 +137,20 @@ def _bucketed_with_stats(
     return bucketed, rows
 
 
+def _bucket_offsets(totals: dict, zero, cast: str | None = None) -> Column:
+    """Each bucket's exclusive prefix sum of the per-bucket `totals` (a
+    null total adds nothing), looked up by `__bkt` as a literal map;
+    every literal is cast to `cast` when given."""
+    lit = (lambda v: F.lit(v).cast(cast)) if cast else F.lit
+    if not totals:
+        return lit(0)
+    entries, acc = [], zero
+    for b in sorted(totals):
+        entries += [F.lit(b), lit(acc)]
+        acc += totals[b] or 0
+    return F.element_at(F.create_map(*entries), F.col("__bkt"))
+
+
 def stable_row_number(
     df: DataFrame,
     order_cols: list[str],
@@ -157,19 +171,7 @@ def stable_row_number(
     lead = order_cols[0]
     numeric = isinstance(df.schema[lead].dataType, _NUMERIC)
     bucketed, rows = _bucketed_with_stats(df, lead, k, numeric, boundary_strategy, None)
-    counts = {r["__bkt"]: r["cnt"] for r in rows}
-    offsets, acc = {}, 0
-    for b in sorted(counts):
-        offsets[b] = acc
-        acc += counts[b]
-
-    if offsets:
-        offset_expr = F.element_at(
-            F.create_map(*[F.lit(x) for b in offsets for x in (b, offsets[b])]),
-            F.col("__bkt"),
-        )
-    else:
-        offset_expr = F.lit(0)
+    offset_expr = _bucket_offsets({r["__bkt"]: r["cnt"] for r in rows}, 0)
     w = Window.partitionBy("__bkt").orderBy(*[F.col(c) for c in order_cols])
     return (
         bucketed.withColumn(out_col, (F.row_number().over(w) + offset_expr).cast("long"))
@@ -204,25 +206,9 @@ def stable_cumsum(
     bucketed, rows = _bucketed_with_stats(
         df, lead, k, numeric, boundary_strategy, value_expr
     )
-    sums = {r["__bkt"]: r["s"] for r in rows}
-    offsets, acc = {}, 0 if integral else 0.0
-    for b in sorted(sums):
-        offsets[b] = acc
-        acc += sums[b] or 0
-
-    if offsets:
-        offset_expr = F.element_at(
-            F.create_map(
-                *[
-                    x
-                    for b in offsets
-                    for x in (F.lit(b), F.lit(offsets[b]).cast(sum_type))
-                ]
-            ),
-            F.col("__bkt"),
-        )
-    else:
-        offset_expr = F.lit(0).cast(sum_type)
+    offset_expr = _bucket_offsets(
+        {r["__bkt"]: r["s"] for r in rows}, 0 if integral else 0.0, sum_type
+    )
     w = (
         Window.partitionBy("__bkt")
         .orderBy(*[F.col(c) for c in order_cols])

@@ -114,7 +114,7 @@ def _pagerank_statics(e: DataFrame):
     outd = e.groupBy(F.col("s").alias("v")).agg(
         F.count(F.lit(1)).cast("long").alias("od")
     )
-    level = edge_level(e.sparkSession)
+    level = edge_level(e)
     e = e.persist(level)
     e.count()
     outd = outd.persist(level)
@@ -235,21 +235,20 @@ def triangle_count(
     edges: DataFrame,
     src_col: str = "src",
     dst_col: str = "dst",
-    degree_ordered: bool = True,
 ) -> DataFrame:
     """Count triangles of an undirected graph given as CANONICAL edges
     (src < dst, deduped — the caller's contract). Returns one row
     (n_triangles BIGINT).
 
-    Degree-ordered orientation (the default, and the skew-proof
-    formulation): every edge points from its lower-(degree, id)
-    endpoint to the higher, so each triangle is counted exactly once
-    via the edge between its two LOWEST vertices in that total order,
-    and per-vertex out-degree is capped near sqrt(2|E|) — a hub of
-    degree d points only at its >= d-degree neighbors, of which there
-    can be at most 2|E|/d. Total intersection work is O(|E|^1.5) on
-    ANY degree distribution (Schank & Wagner's forward algorithm),
-    where id-canonical orientation is Theta(d^2) at a low-id hub.
+    Degree-ordered orientation (the skew-proof formulation): every edge
+    points from its lower-(degree, id) endpoint to the higher, so each
+    triangle is counted exactly once via the edge between its two
+    LOWEST vertices in that total order, and per-vertex out-degree is
+    capped near sqrt(2|E|) — a hub of degree d points only at its
+    >= d-degree neighbors, of which there can be at most 2|E|/d.
+    Total intersection work is O(|E|^1.5) on ANY degree distribution
+    (Schank & Wagner's forward algorithm), where id-canonical
+    orientation is Theta(d^2) at a low-id hub.
 
     The counting core is the EDGE-ITERATOR, not the wedge join: the
     oriented out-neighbor lists group once (one shuffle of |E| rows,
@@ -263,27 +262,16 @@ def triangle_count(
     Orientation and plan shape are invisible in the count — the gate's
     DuckDB oracle enumerates id-sorted triangles and must hash-match,
     the same certification discipline as `skew_salted_join` (salting
-    invisible in results). `degree_ordered=False` keeps the classic
-    id-canonical wedge-join plan; an equality test pins the two to the
-    same count."""
+    invisible in results)."""
     e = edges.select(
         F.col(src_col).cast("long").alias("s"),
         F.col(dst_col).cast("long").alias("t"),
     )
-    if not degree_ordered:
-        ab = e.select(F.col("s").alias("a"), F.col("t").alias("b"))
-        bc = e.select(F.col("s").alias("b"), F.col("t").alias("c"))
-        ac = e.select(F.col("s").alias("a"), F.col("t").alias("c"))
-        wedges = ab.join(bc, "b")
-        closed = wedges.join(ac, ["a", "c"])
-        return closed.agg(
-            F.count(F.lit(1)).cast("long").alias("n_triangles")
-        )
     # the caller's edge derivation is often a self-join + distinct —
     # cache it so the degree pass and the orientation join don't each
     # recompute the upstream plan. Every cached frame here is |E|-sized,
     # so all of them take the edge level.
-    level = edge_level(edges.sparkSession)
+    level = edge_level(e)
     e = e.persist(level)
     n_e = e.count()
     # explode(array(s,t)) instead of union-of-projections: one scan of

@@ -3,9 +3,11 @@ counting, bfs, label propagation and sssp (operators/graph.py),
 connected components (operators/dedup.py) and the datalog fixpoint
 (plans/datalog.py). Each helper exists for one reason:
 
-- `edge_level(spark)`: the storage level of an operator's static edge
-  prefix. At fact-scale mass it is DISK_ONLY: MEMORY_AND_DISK blocks
-  pin the unified pool's storage fraction, starving the per-round
+- `edge_level(df)`: the storage level of an operator's static edge
+  prefix `df`, priced from the bytes of its own input (`input_bytes`:
+  the optimized plan's leaf estimates, not the root's, which multiplies
+  a join's inputs). At fact-scale mass it is DISK_ONLY: MEMORY_AND_DISK
+  blocks pin the unified pool's storage fraction, starving the per-round
   aggregations, and are evictable, which is fatal after a lineage cut
   ("Block rdd_N does not exist"). DISK_ONLY blocks are never evicted,
   leave execution the whole pool, and re-read at page-cache speed.
@@ -36,21 +38,33 @@ connected components (operators/dedup.py) and the datalog fixpoint
 from __future__ import annotations
 
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .. import budget
-from ..session import _corpus_fact_bytes
 
 
-def edge_level(spark: SparkSession) -> StorageLevel:
-    if budget.edges_in_memory(budget.heap_bytes(spark), _corpus_fact_bytes()):
+def input_bytes(df: DataFrame) -> int:
+    """Catalyst's size estimate summed over the distinct leaves of `df`'s
+    optimized plan: a relation a self-join or union scans twice counts
+    once. A leaf without statistics (a createDataFrame or checkpoint
+    LogicalRDD) reports spark.sql.defaultSizeInBytes."""
+    leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
+    sizes = {}
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        sizes[leaf.semanticHash()] = int(str(leaf.stats().sizeInBytes()))
+    return sum(sizes.values())
+
+
+def edge_level(df: DataFrame) -> StorageLevel:
+    if budget.edges_in_memory(budget.heap_bytes(df.sparkSession), input_bytes(df)):
         return StorageLevel.MEMORY_AND_DISK
     return StorageLevel.DISK_ONLY
 
 
 def edge_prefix(df: DataFrame) -> DataFrame:
-    return df.localCheckpoint(eager=False, storageLevel=edge_level(df.sparkSession))
+    return df.localCheckpoint(eager=False, storageLevel=edge_level(df))
 
 
 def settle(df: DataFrame) -> tuple[DataFrame, int]:

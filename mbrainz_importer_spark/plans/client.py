@@ -293,17 +293,15 @@ class Connection:
 
     def basis_t(self) -> int:
         """Latest transaction in the durable log (d/basis-t)."""
-        row = self.log().agg(F.max("tx").alias("t")).first()
-        return int(row["t"]) if row["t"] is not None else 0
+        return basis_t(self.log())
 
     # ---- write path ----------------------------------------------
 
-    def transact(self, tx_data: list, fns=None, many_attrs=frozenset()) -> dict:
+    def _expand(self, tx_data: list, fns, many_attrs) -> tuple[int, DataFrame]:
         """Expand tx_data (plans/tx_fns form grammar: :db/add,
         :db/retract, :db/cas, :db.fn/retractEntity, installed fns)
-        against the CURRENT db value, stamp tx = basis_t + 1, append
-        the ops durably. Returns {"tx", "n_ops"} — the report shape;
-        aborts (TxAbort) append nothing."""
+        against the CURRENT db value; returns (t, the ops stamped
+        tx = t = basis_t + 1). Aborts raise TxAbort."""
         from .tx_fns import transact as _transact
 
         t = self.basis_t() + 1
@@ -317,11 +315,17 @@ class Connection:
         extended = _transact(
             pseudo, tx_data, t, fns=fns, value_col="v", many_attrs=many_attrs
         )
-        ops = extended.where(F.col("tx") == t).select(
+        return t, extended.where(F.col("tx") == t).select(
             "e", "a", "v",
             F.col("v").try_cast("double").alias("v_num"),
             "tx", "added",
         )
+
+    def transact(self, tx_data: list, fns=None, many_attrs=frozenset()) -> dict:
+        """Expand tx_data against the current db value and append the
+        ops durably. Returns {"tx", "n_ops"} — the report shape; aborts
+        (TxAbort) append nothing."""
+        t, ops = self._expand(tx_data, fns, many_attrs)
         ops.write.mode("append").parquet(self.log_path)
         n = self.log().where(F.col("tx") == t).count()
         return {"tx": t, "n_ops": n}
@@ -332,22 +336,8 @@ class Connection:
         nothing is appended; the returned frame is the would-be db()
         and the durable connection is untouched."""
         from .eav import current_datoms
-        from .tx_fns import transact as _transact
 
-        t = self.basis_t() + 1
-        pseudo = self.db().select(
-            "e", "a", "v",
-            F.lit(0).cast("long").alias("tx"),
-            F.lit(True).alias("added"),
-        )
-        extended = _transact(
-            pseudo, tx_data, t, fns=fns, value_col="v", many_attrs=many_attrs
-        )
-        ops = extended.where(F.col("tx") == t).select(
-            "e", "a", "v",
-            F.col("v").try_cast("double").alias("v_num"),
-            "tx", "added",
-        )
+        _, ops = self._expand(tx_data, fns, many_attrs)
         return current_datoms(self.db(), ops, many_attrs)
 
     # ---- read path -----------------------------------------------
@@ -420,9 +410,8 @@ class Connection:
 
         hi = self._last_indexed()
         fresh = self.log().where(F.col("tx") > F.lit(hi))
-        top_row = self.log().agg(F.max("tx").alias("t")).first()
-        top = int(top_row["t"]) if top_row["t"] is not None else hi
-        if top == hi:
+        top = basis_t(self.log())
+        if top <= hi:
             return hi
         if os.path.exists(os.path.join(self.store_path, "_SUCCESS")):
             merge_datoms_increment(self.spark, self.store_path, fresh)

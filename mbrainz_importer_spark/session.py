@@ -18,44 +18,6 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
 
-def _corpus_fact_bytes() -> int:
-    """On-disk bytes of the session corpus's fact tables (lineitem +
-    orders parquet under $SPARK_GRAFT_SF_DIR) — the same signal
-    tools/scale_bench.py sizes spark.sql.shuffle.partitions from, read
-    here so the AQE floor can be tier-aware (see get_spark). Zero when
-    the dir is absent (pure in-memory/test sessions)."""
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    total = 0
-    for name in ("lineitem.parquet", "orders.parquet"):
-        p = os.path.join(sf_dir, name)
-        if os.path.isdir(p):
-            total += sum(
-                os.path.getsize(os.path.join(p, f))
-                for f in os.listdir(p)
-                if not f.startswith(("_", "."))
-            )
-        elif os.path.exists(p):
-            total += os.path.getsize(p)
-    return total
-
-
-def _initial_partition_floor(static_partitions: int, fact_bytes: int) -> int:
-    """Tier-aware AQE initialPartitionNum: sized from the corpus
-    `fact_bytes` with a 16x headroom factor for derived mass (the
-    graph corpora's ratio, rounded up) at ~64 MB per partition, capped
-    at 256, never below `static_partitions`. Small corpora keep the
-    static count (sf0.1), so multi-shuffle queries do not pay 256-task
-    launch overhead per exchange; the graph corpora and fact-scale
-    tiers start every shuffle at 256 (sf10g: ~1 GB facts * 16 / 64 MB
-    ~= 250 -> 256), where plain LPA OOMed an 8g heap when shuffles
-    started at 32. SPARK_GRAFT_INITIAL_PARTITIONS overrides it."""
-    import math
-
-    need = fact_bytes * 16 // (64 << 20)
-    sized = 2 ** math.ceil(math.log2(need)) if need > 1 else 1
-    return max(static_partitions, min(256, sized))
-
-
 def get_spark(
     app_name: str = "mbrainz_importer_spark",
     shuffle_partitions: int | None = None,
@@ -89,26 +51,10 @@ def get_spark(
         # turns with data volume (brief: "size spark.sql.shuffle.partitions
         # so partitions fit in executor memory at the target SF")
         .config("spark.sql.shuffle.partitions", str(static_partitions))
-        # decouple SHUFFLE mass from the static partition count: every
-        # shuffle STARTS at initialPartitionNum and AQE coalesces down
-        # to ~advisory-sized partitions, so an aggregation whose input
-        # is far larger than the corpus-bytes heuristic predicted (the
-        # degree-controlled graph corpora: 117M derived edge rows over
-        # a 1.1 GB corpus — plain LPA OOMed an 8g heap at a static 32)
-        # still gets memory-sized tasks, while small shuffles fold back
-        # to few partitions at runtime. This is the cluster posture: a
-        # 1000-executor deployment never starts a shuffle at 32. The
-        # static spark.sql.shuffle.partitions stays the non-AQE floor.
-        # The floor is TIER-AWARE (r13): sized from corpus fact bytes
-        # like scale_bench sizes shuffle.partitions, so a small corpus
-        # does not pay 256-task launch overhead per exchange — see
-        # _initial_partition_floor.
+        # a tier's AQE floor overrides the static count (budget.initial_partition_floor)
         .config(
             "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-            os.environ.get(
-                "SPARK_GRAFT_INITIAL_PARTITIONS",
-                str(_initial_partition_floor(static_partitions, _corpus_fact_bytes())),
-            ),
+            os.environ.get("SPARK_GRAFT_INITIAL_PARTITIONS", str(static_partitions)),
         )
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # AQE's RUNTIME broadcast switch sees post-shuffle COMPRESSED

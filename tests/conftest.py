@@ -11,12 +11,22 @@ from mbrainz_importer_spark.session import get_spark  # noqa: E402
 
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_CORRECT = "/root/testdata/sf0.01"
+REFERENCE_SUBSETS = "/root/reference/subsets"
 
 
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark("tests", shuffle_partitions=8)
     yield s
+
+
+@pytest.fixture(scope="session")
+def reference_subsets():
+    """The reference importer's mbrainz subset tree (entities/ and the
+    golden batches/). Tests that read it skip when it is absent."""
+    if not os.path.isdir(REFERENCE_SUBSETS):
+        pytest.skip(f"reference subset tree {REFERENCE_SUBSETS} is absent")
+    return REFERENCE_SUBSETS
 
 
 @pytest.fixture(scope="session")

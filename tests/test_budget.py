@@ -9,10 +9,12 @@ from __future__ import annotations
 from types import SimpleNamespace
 
 import pytest
+from pyspark import StorageLevel
+from pyspark.sql import functions as F
 
 from mbrainz_importer_spark import budget
 from mbrainz_importer_spark.operators import rounds
-from mbrainz_importer_spark.session import _initial_partition_floor
+from mbrainz_importer_spark.session import get_spark
 
 G = 1 << 30
 
@@ -81,8 +83,52 @@ def test_shj_budget_is_a_quarter_heap():
     ((128 << 20) + (4 << 20), 64),
 ])
 def test_aqe_initial_partition_floor(fact_bytes, floor):
-    assert _initial_partition_floor(32, fact_bytes) == floor
+    assert budget.initial_partition_floor(32, fact_bytes) == floor
 
+
+@pytest.mark.parametrize("n_rows, level", [
+    (8 << 20, "MEMORY_AND_DISK"),   # 8 B/row x16 == heap/8 at 8 g
+    ((8 << 20) + 1, "DISK_ONLY"),
+])
+def test_edge_level_prices_the_frame(spark, monkeypatch, n_rows, level):
+    """rounds.edge_level prices its own frame: Range's leaf estimate is
+    8 B per row, and a leaf the frame scans twice counts once."""
+    monkeypatch.setattr(budget, "heap_bytes", lambda spark: 8 * G)
+    df = spark.range(n_rows).select(F.col("id").alias("src"))
+    df = df.unionByName(df.select((F.col("src") + 1).alias("src")))
+    assert rounds.input_bytes(df) == 8 * n_rows
+    assert rounds.edge_level(df) == getattr(StorageLevel, level)
+
+
+def test_edge_level_unsized_leaf_takes_disk(spark, monkeypatch):
+    """A createDataFrame leaf (LogicalRDD) has no size of its own: it
+    reports spark.sql.defaultSizeInBytes, past any heap."""
+    monkeypatch.setattr(budget, "heap_bytes", lambda spark: 1 << 50)
+    df = spark.createDataFrame([(1, 2)], "src long, dst long")
+    assert rounds.edge_level(df) == StorageLevel.DISK_ONLY
+
+
+def test_sf_dir_prices_nothing(spark, monkeypatch, tmp_path):
+    """Neither the edge level nor the session's AQE floor reads the
+    TPC-H corpus directory: a 64 GiB one and a missing one change
+    nothing."""
+    monkeypatch.setattr(budget, "heap_bytes", lambda spark: 8 * G)
+    key = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
+    before = spark.conf.get(key)
+    big = tmp_path / "sf_big"
+    big.mkdir()
+    with open(big / "lineitem.parquet", "wb") as fh:
+        fh.truncate(64 * G)  # sparse: no disk is written
+    df = spark.range(1000)
+    seen = []
+    try:
+        for sf_dir in (big, tmp_path / "absent"):
+            monkeypatch.setenv("SPARK_GRAFT_SF_DIR", str(sf_dir))
+            assert get_spark("tests", shuffle_partitions=8) is spark
+            seen.append((spark.conf.get(key), rounds.edge_level(df)))
+    finally:
+        spark.conf.set(key, before)
+    assert seen == [(before, StorageLevel.MEMORY_AND_DISK)] * 2
 
 
 @pytest.mark.parametrize("wide, n_rows, hinted", [

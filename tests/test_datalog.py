@@ -539,12 +539,12 @@ def test_errors(datoms):
         q({"find": ["?n"], "in": ["?a"], "where": [["?e", "?a", "?n"]]}, datoms)  # no param
 
 
-def test_mbrainz_import_then_datalog(spark, tmp_path_factory):
+def test_mbrainz_import_then_datalog(spark, tmp_path_factory, reference_subsets):
     """End-to-end: import artists via the pipeline, derive EAV, answer the
     reference's 'how many artists per type' in datalog."""
     from mbrainz_importer_spark.pipeline import Importer
 
-    imp = Importer(spark, "/root/reference/subsets")
+    imp = Importer(spark, reference_subsets)
     wh = str(tmp_path_factory.mktemp("wh"))
     imp.load_type("artists", wh)
     artists = spark.read.parquet(f"{wh}/loaded/artists").drop("batch_id")

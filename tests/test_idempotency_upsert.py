@@ -10,12 +10,10 @@ from mbrainz_importer_spark.operators.idempotency import IdempotentParquetSink
 from mbrainz_importer_spark.operators.upsert import attach_many, merge_upsert
 from mbrainz_importer_spark.pipeline import Importer
 
-REF = "/root/reference/subsets"
-
 
 @pytest.fixture(scope="module")
-def importer(spark):
-    return Importer(spark, REF)
+def importer(spark, reference_subsets):
+    return Importer(spark, reference_subsets)
 
 
 def test_double_load_is_noop(importer, spark, tmp_path_factory):

@@ -22,18 +22,16 @@ import pytest
 from mbrainz_importer_spark.edn import iter_forms
 from mbrainz_importer_spark.pipeline import Importer
 
-REF = "/root/reference/subsets"
-
 EXACT_TYPES = ["artists", "areleases", "areleases-artists", "labels", "releases-artists"]
 
 
 @pytest.fixture(scope="module")
-def importer(spark):
-    return Importer(spark, REF)
+def importer(spark, reference_subsets):
+    return Importer(spark, reference_subsets)
 
 
-def load_golden(type_name: str) -> list[dict]:
-    with open(f"{REF}/batches/{type_name}.edn", encoding="utf-8") as f:
+def load_golden(importer, type_name: str) -> list[dict]:
+    with open(f"{importer.basedir}/batches/{type_name}.edn", encoding="utf-8") as f:
         out = []
         for form in iter_forms(f.read()):
             out.append({
@@ -53,7 +51,7 @@ def canon(v):
 
 @pytest.mark.parametrize("type_name", EXACT_TYPES)
 def test_golden_exact(importer, type_name):
-    golden = load_golden(type_name)
+    golden = load_golden(importer, type_name)
     ours = importer.batch_tx_data(type_name)
     assert [b["batch_id"] for b in ours] == [b["batch_id"] for b in golden]
     for g, o in zip(golden, ours):
@@ -69,7 +67,7 @@ def test_golden_enums(importer):
     medium_format map iterates in Clojure hash order, an implementation
     artifact — tx-data within one transaction is an unordered assertion
     set)."""
-    golden = load_golden("enums")
+    golden = load_golden(importer, "enums")
     ours = importer.batch_tx_data("enums")
     assert [b["batch_id"] for b in ours] == [b["batch_id"] for b in golden]
     for g, o in zip(golden, ours):
@@ -77,13 +75,13 @@ def test_golden_enums(importer):
 
 
 def test_golden_schema(importer):
-    golden = load_golden("schema")
+    golden = load_golden(importer, "schema")
     ours = importer.batch_tx_data("schema")
     assert [canon(b) for b in ours] == [canon(b) for b in golden]
 
 
 def test_golden_super_enums_multiset(importer):
-    golden = load_golden("super-enums")
+    golden = load_golden(importer, "super-enums")
     ours = importer.batch_tx_data("super-enums")
     assert [len(b["data"]) for b in ours] == [len(b["data"]) for b in golden]
     g_rows = sorted(canon(e) for b in golden for e in b["data"])

@@ -13,13 +13,11 @@ from mbrainz_importer_spark.plans.metaschema import (
     register_metaschema,
 )
 
-REF = "/root/reference/subsets"
-
 
 @pytest.fixture(scope="module")
-def warehouse(spark, tmp_path_factory):
+def warehouse(spark, tmp_path_factory, reference_subsets):
     wh = str(tmp_path_factory.mktemp("wh"))
-    imp = Importer(spark, REF)
+    imp = Importer(spark, reference_subsets)
     imp.run_import(wh)
     tables = build_entity_tables(spark, wh, imp, f"{wh}/tables")
     return wh, imp, tables

@@ -81,7 +81,7 @@ def test_batch_numbering_invariants(n_rows, batch_size):
 # -- spark end-to-end property (one bigger example set) -------------------
 
 @pytest.mark.parametrize("seed", [0])
-def test_pipeline_invariants_on_generated_entities(spark, tmp_path, seed):
+def test_pipeline_invariants_on_generated_entities(spark, tmp_path, seed, reference_subsets):
     """Ingest generated artists through the real pipeline path and check:
     row preservation, projection totality (no leaked raw columns), enum
     resolution correctness, batch-envelope coverage."""
@@ -104,7 +104,7 @@ def test_pipeline_invariants_on_generated_entities(spark, tmp_path, seed):
     with open(basedir / "entities" / "artists.edn", "w") as f:
         f.write("\n".join(dumps(e) for e in ents))
     for dim in ("enums.edn", "countries.edn", "langs.edn", "scripts.edn"):
-        src = f"/root/reference/subsets/entities/{dim}"
+        src = f"{reference_subsets}/entities/{dim}"
         with open(src) as s, open(basedir / "entities" / dim, "w") as d:
             d.write(s.read())
 

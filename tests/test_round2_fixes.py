@@ -63,10 +63,10 @@ def test_discard_with_nothing_to_discard_raises():
 # batch_size mismatch guard
 # -------------------------------------------------------------------------
 
-def test_batch_size_mismatch_raises(spark, tmp_path_factory):
+def test_batch_size_mismatch_raises(spark, tmp_path_factory, reference_subsets):
     from mbrainz_importer_spark.pipeline import Importer
 
-    imp = Importer(spark, "/root/reference/subsets")
+    imp = Importer(spark, reference_subsets)
     wh = str(tmp_path_factory.mktemp("wh"))
     imp.load_type("labels", wh, batch_size=100)
     with pytest.raises(ValueError, match="batch_size"):

@@ -209,22 +209,24 @@ PROFILES = {
 }
 
 
-def _size_shuffle_partitions(sf_dir: str) -> None:
-    """Single-profile ladder (r10 verdict #4): size
-    spark.sql.shuffle.partitions to the TIER'S fact bytes before the
-    JVM starts — partitions = 2^ceil(log2(fact_bytes / 64 MB)), floor
-    32, cap 512. The sf100 plain fact-fact shapes OOM'd an 8g heap at
-    the flat 32 and previously escaped to a daggered 24g profile; at
-    256 partitions every one of them runs AT 8g (q5 plain 100s, q3
-    plain 47s, SSSP plain 104s — measured r11), so the ladder compares
-    like with like. AQE coalescing folds the extra partitions back for
-    the small queries, which is what makes a per-tier count safe as a
-    blanket session setting. An explicit SPARK_GRAFT_SHUFFLE_PARTITIONS
-    (or a profile that sets one) wins."""
+def _size_partitions(sf_dir: str) -> None:
+    """Size the session's partitions to the TIER'S fact bytes (lineitem
+    + orders parquet) before the JVM starts:
+
+    - spark.sql.shuffle.partitions = 2^ceil(log2(fact_bytes / 64 MB)),
+      cap 512, when that exceeds 32. The sf100 plain fact-fact shapes
+      OOM an 8g heap at a flat 32 and run at 8g at 256; AQE coalescing
+      folds the extra partitions back for the small queries.
+    - the AQE initial partition floor, budget.initial_partition_floor
+      (sf0.1 keeps the static count; sf10g and sf100 start at 256).
+
+    An explicit SPARK_GRAFT_SHUFFLE_PARTITIONS or
+    SPARK_GRAFT_INITIAL_PARTITIONS (or a profile that sets one) wins."""
     import math
 
-    if "SPARK_GRAFT_SHUFFLE_PARTITIONS" in os.environ:
-        return
+    from mbrainz_importer_spark import budget
+    from mbrainz_importer_spark.session import default_parallelism
+
     total = 0
     for name in ("lineitem.parquet", "orders.parquet"):
         p = os.path.join(sf_dir, name)
@@ -238,9 +240,13 @@ def _size_shuffle_partitions(sf_dir: str) -> None:
             total += os.path.getsize(p)
     need = total // (64 << 20)
     if need > 32:
-        os.environ["SPARK_GRAFT_SHUFFLE_PARTITIONS"] = str(
-            min(512, 2 ** math.ceil(math.log2(need)))
+        os.environ.setdefault(
+            "SPARK_GRAFT_SHUFFLE_PARTITIONS", str(min(512, 2 ** math.ceil(math.log2(need))))
         )
+    static = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", default_parallelism()))
+    os.environ.setdefault(
+        "SPARK_GRAFT_INITIAL_PARTITIONS", str(budget.initial_partition_floor(static, total))
+    )
 
 
 def _clean_warehouse(mode: str, sf_dir: str) -> list[str]:
@@ -377,7 +383,7 @@ def main() -> None:
     args = ap.parse_args()
     for k, v in PROFILES[args.profile].items():
         os.environ.setdefault(k, v)
-    _size_shuffle_partitions(args.sf_dir)
+    _size_partitions(args.sf_dir)
     cleaned = _clean_warehouse(args.clean, args.sf_dir)
     if cleaned:
         print(f"# cleaned {len(cleaned)} warehouse tables: "
