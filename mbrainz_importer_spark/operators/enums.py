@@ -3,9 +3,9 @@
 The reference holds enum maps in memory and fails the import on a missed
 lookup (importer.clj:215-224: as-enum / as-super-enum raise
 `could-not-import`). Spark-first: dims are small DataFrames joined with an
-explicit broadcast; the miss check is a left-anti guard that raises with a
-sample of offending rows (runtime check, not an optimizer concern —
-SURVEY.md §4.3).
+explicit broadcast; the miss check raises with a sample of unresolved
+values (eager guard) or the names of the columns that missed (deferred
+guard) — a runtime check, not an optimizer concern (SURVEY.md §4.3).
 """
 
 from __future__ import annotations
@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from .. import schema as SCH
 from ..sources.edn_source import read_edn_forms_local
+from .progress import observed
 
 
 class MissingDimensionValue(ValueError):
@@ -96,20 +97,21 @@ def resolve_enum(
 
 
 def assert_no_misses(df: DataFrame) -> DataFrame:
-    """Single-action validation of every deferred `__miss_*` indicator:
-    raises MissingDimensionValue naming the offending columns, returns the
-    frame with indicators dropped. The one job replaces N per-column guard
-    jobs (each of which re-ran the whole upstream pipeline)."""
+    """Validate every deferred `__miss_*` indicator in one action: a `max`
+    per indicator, observed on a no-op write, so the check runs one job
+    with no exchange. Raise MissingDimensionValue naming every column that
+    missed in any row, else return the frame with the indicators dropped.
+    (A `where(...).limit(n)` sample would rescan a clean multi-partition
+    stage in 1-, 4- and 16-partition jobs.)"""
     miss_cols = [c for c in df.columns if c.startswith(MISS_PREFIX)]
     if not miss_cols:
         return df
-    any_miss = None
-    for c in miss_cols:
-        any_miss = F.col(c) if any_miss is None else (any_miss | F.col(c))
-    sample = df.where(any_miss).select(*miss_cols).limit(5).collect()
-    if sample:
-        bad = sorted({
-            c[len(MISS_PREFIX):] for r in sample for c in miss_cols if r[c]
-        })
-        raise MissingDimensionValue(f"could not resolve dimension column(s): {bad}")
+    checked, obs = observed(
+        df.select(*miss_cols), "enum_misses", **{c: F.max(c) for c in miss_cols}
+    )
+    checked.write.format("noop").mode("overwrite").save()
+    seen = obs.get
+    bad = [c[len(MISS_PREFIX):] for c in miss_cols if seen[c]]
+    if bad:
+        raise MissingDimensionValue(f"could not resolve dimension column(s): {sorted(bad)}")
     return df.drop(*miss_cols)

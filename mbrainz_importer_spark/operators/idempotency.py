@@ -9,19 +9,30 @@ importer.clj:298-316):
      (`(cons batch-ident data)` — same transaction)
   4. a concurrent-duplicate conflict is swallowed as already-applied
 
-Spark-first realization: the batch_id is a COLUMN on every row, so a
-parquet append of a batch carries its id atomically with its data (one
-file-commit per job); restart recomputes the done-set from the sink itself.
-Partial-job failures are handled by Spark's output-committer (uncommitted
-task files are invisible), so the done-set only ever contains fully
-committed batches. This is the canonical `foreachBatch` idempotent-sink
-recipe in batch clothing, and it needs no retry/backoff of its own — task
-retries (`spark.task.maxFailures`) + committer atomicity replace the
-reference's busy/unavailable/429/503 backoff loop (batch.clj:62-91), which
-only exists because its sink is a remote transactor. For sinks that DO
-commit per call (JDBC/REST/transactor via foreachBatch), that loop is
-back in `operators/retry.py` with the same classification and
-conflict-swallow semantics.
+Here the batch_id is a column on every row, so a parquet append carries a
+batch's id atomically with its data, and the done-set is recomputed from
+the sink itself. Spark's default output committer (FileOutputCommitter,
+algorithm 1) moves part files into the sink directory only at job commit
+(uncommitted task files are invisible), so the sink only ever holds fully
+committed batches. As it runs:
+
+  - `committed_files` lists the sink's part files and sizes through the
+    session's Hadoop FileSystem, without a Spark job. A sink with none is
+    cold: `filter_new` returns its input unchanged, with no done-set read
+    or broadcast. Otherwise it broadcast-anti-joins the input against
+    `done_ids`.
+  - `load_envelopes` anti-joins envelopes, one row per batch, and takes
+    `{txes, datoms}` as observed metrics of the write itself, the
+    reference's fold over the transactions it ran (batch.clj:115-135).
+    The write is the one action.
+  - `Importer.load_type` records the committed file listing in its
+    completion marker; a re-run whose listing matches runs no Spark job.
+
+No retry/backoff of its own: task retries (`spark.task.maxFailures`) plus
+committer atomicity replace the reference's busy/unavailable/429/503 loop
+(batch.clj:62-91), which exists because its sink is a remote transactor.
+Sinks that DO commit per call (JDBC/REST/transactor via foreachBatch) get
+that loop from `operators/retry.py`.
 """
 
 from __future__ import annotations
@@ -32,7 +43,24 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.utils import AnalysisException
 
+from .progress import observed
+
 BATCH_ID_COL = "batch_id"
+
+
+def committed_files(spark: SparkSession, path: str) -> dict[str, int]:
+    """{name: bytes} of the `part-*` files committed under `path`, listed
+    through the session's Hadoop FileSystem: no Spark job, any scheme the
+    sink accepts. A missing path lists as empty."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    fs = jpath.getFileSystem(spark._jsparkSession.sessionState().newHadoopConf())
+    if not fs.exists(jpath):
+        return {}
+    return {
+        st.getPath().getName(): st.getLen()
+        for st in fs.listStatus(jpath)
+        if st.isFile() and st.getPath().getName().startswith("part-")
+    }
 
 
 @dataclass
@@ -51,15 +79,17 @@ class IdempotentParquetSink:
 
     def filter_new(self, batches: DataFrame, spark: SparkSession) -> DataFrame:
         """filter-batches (batch.clj:42-44): drop already-loaded batches.
-        The done-set is small (one id per 100 entities) — broadcast anti."""
-        done = self.done_ids(spark)
+        A cold sink has nothing to drop; otherwise the done-set is small
+        (one id per 100 entities) — broadcast anti."""
+        if not committed_files(spark, self.path):
+            return batches
         return batches.join(
-            F.broadcast(done), on=BATCH_ID_COL, how="left_anti"
+            F.broadcast(self.done_ids(spark)), on=BATCH_ID_COL, how="left_anti"
         )
 
     def load(self, batches: DataFrame, spark: SparkSession) -> dict:
-        """load-parallel analog (batch.clj:115-135): write all not-yet-done
-        batches; parallelism is partition-level. Returns
+        """load-parallel analog (batch.clj:115-135) over member rows: write
+        all not-yet-done batches; parallelism is partition-level. Returns
         {'txes': n_batches_written, 'datoms': n_rows_written} — the
         reference's result fold (G8)."""
         todo = self.filter_new(batches, spark)
@@ -75,12 +105,24 @@ class IdempotentParquetSink:
 def load_envelopes(
     sink: IdempotentParquetSink, envelopes: DataFrame, spark: SparkSession
 ) -> dict:
-    """Load envelope-shaped batches (batch_id, data array<struct>) by
-    exploding members back to rows with the batch_id column attached."""
-    rows = envelopes.select(
+    """Load envelope-shaped batches (batch_id, data array<struct>) in one
+    action. The anti-join runs on envelopes, so it touches batches, not
+    datoms; `{txes, datoms}` are observed on the surviving envelopes in
+    the write's result stage, then members are exploded back to rows
+    with the batch_id column attached and appended. A write that finds
+    nothing new reports {0, 0} and still appends one schema-only part
+    file."""
+    todo, obs = observed(
+        sink.filter_new(envelopes, spark), "load_envelopes",
+        txes=F.count(F.lit(1)),
+        datoms=F.coalesce(F.sum(F.size("data")), F.lit(0)),
+    )
+    rows = todo.select(
         F.col(BATCH_ID_COL), F.explode("data").alias("m")
     ).select(BATCH_ID_COL, "m.*")
-    return sink.load(rows, spark)
+    rows.write.mode("append").parquet(sink.path)
+    stats = obs.get
+    return {"txes": stats["txes"], "datoms": stats["datoms"]}
 
 
 @dataclass

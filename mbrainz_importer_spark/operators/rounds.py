@@ -47,13 +47,22 @@ from .. import budget
 def input_bytes(df: DataFrame) -> int:
     """Catalyst's size estimate summed over the distinct leaves of `df`'s
     optimized plan: a relation a self-join or union scans twice counts
-    once. A leaf without statistics (a createDataFrame or checkpoint
-    LogicalRDD) reports spark.sql.defaultSizeInBytes."""
-    leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
+    once. A cached input (`InMemoryRelation`) is priced by the leaves of
+    the plan it caches, so it prices the same before and after the cache
+    materializes. A leaf without statistics (a createDataFrame or
+    checkpoint LogicalRDD) reports spark.sql.defaultSizeInBytes."""
     sizes = {}
-    for i in range(leaves.size()):
-        leaf = leaves.apply(i)
-        sizes[leaf.semanticHash()] = int(str(leaf.stats().sizeInBytes()))
+
+    def walk(plan) -> None:
+        leaves = plan.collectLeaves()
+        for i in range(leaves.size()):
+            leaf = leaves.apply(i)
+            if leaf.nodeName() == "InMemoryRelation":
+                walk(leaf.cacheBuilder().logicalPlan())
+            else:
+                sizes[leaf.semanticHash()] = int(str(leaf.stats().sizeInBytes()))
+
+    walk(df._jdf.queryExecution().optimizedPlan())
     return sum(sizes.values())
 
 

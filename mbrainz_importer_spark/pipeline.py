@@ -106,9 +106,9 @@ class Importer:
     def stage(self) -> Iterator[None]:
         """Scope of one entity stage. Inside it, `transformed` persists the
         parsed source and the transformed frame, so every action of the
-        stage (miss guard, batching, load stats, write) reads each file's
-        parse once; on exit, by any path, both are released. Outside a
-        stage `transformed` returns the plain lazy plan."""
+        stage (miss guard, batching, write) reads each file's parse once;
+        on exit, by any path, both are released. Outside a stage
+        `transformed` returns the plain lazy plan."""
         self._held = held = []
         try:
             yield
@@ -155,11 +155,13 @@ class Importer:
         batches -> anti-join against already-loaded ids -> append with
         batch_id atomic-with-data. Re-running is a no-op ({'txes': 0}).
 
-        Fast path: a completed load writes a marker with its batch count;
-        a re-run whose sink still matches the marker skips source parsing
-        and transformation entirely (the reference's already-transacted
-        gate, batch.clj:46-60, applied before any work). A crashed run
-        leaves no marker, so restart takes the full anti-join path.
+        Fast path: a completed load writes a marker listing the sink's
+        committed part files and their sizes. A re-run whose listing
+        equals the marker's returns {'txes': 0, 'datoms': 0} without a
+        Spark job (the reference's already-transacted gate, batch.clj:46-60,
+        applied before any work). Any other listing (a crashed run, a
+        missing, added or resized file, a marker without `files`) takes
+        the anti-join path, and the marker is rewritten after its write.
 
         Batch-size guard: batch ids like 'artists-1' denote different row
         sets at different batch sizes, so loading into a sink that was
@@ -175,7 +177,11 @@ class Importer:
         import json as _json
         import os
 
-        from .operators.idempotency import IdempotentParquetSink, load_envelopes
+        from .operators.idempotency import (
+            IdempotentParquetSink,
+            committed_files,
+            load_envelopes,
+        )
 
         sink_path = f"{warehouse}/loaded/{type_name}"
         marker = f"{sink_path}/_IMPORT_COMPLETE.json"
@@ -197,9 +203,8 @@ class Importer:
             )
         if os.path.exists(marker):
             with open(marker, encoding="utf-8") as fh:
-                expected = _json.load(fh)
-            done = sink.done_ids(self.spark).count()
-            if done == expected["n_batches"]:
+                files = _json.load(fh).get("files")
+            if files == committed_files(self.spark, sink_path):
                 return {"txes": 0, "datoms": 0}
 
         os.makedirs(sink_path, exist_ok=True)
@@ -210,9 +215,9 @@ class Importer:
         with self.stage():
             env = self.create_batches(type_name, batch_size).drop("__first_rn")
             result = load_envelopes(sink, env, self.spark)
-        n_batches = sink.done_ids(self.spark).count()
+        files = committed_files(self.spark, sink_path)
         with open(marker, "w", encoding="utf-8") as fh:
-            _json.dump({"n_batches": n_batches, "batch_size": batch_size}, fh)
+            _json.dump({"batch_size": batch_size, "files": files}, fh)
         return result
 
     def run_import(

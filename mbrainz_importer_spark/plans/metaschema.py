@@ -61,7 +61,10 @@ def build_entity_tables(
     spark: SparkSession, warehouse: str, importer, out_dir: str
 ) -> dict[str, DataFrame]:
     """Assemble and persist the metaschema tables from loaded batches.
-    Returns the table dict (also written to {out_dir}/{table})."""
+    Returns the table dict (also written to {out_dir}/{table}), read back
+    with each written frame's schema, so no table pays a schema-inference
+    job; a file source reads every column nullable, which is what the
+    parquet writer stored."""
     tables: dict[str, DataFrame] = {}
 
     artists = _loaded(spark, warehouse, "artists")
@@ -110,7 +113,10 @@ def build_entity_tables(
 
     for name, df in tables.items():
         df.write.mode("overwrite").parquet(f"{out_dir}/{name}")
-    return {name: spark.read.parquet(f"{out_dir}/{name}") for name in tables}
+    return {
+        name: spark.read.schema(df.schema).parquet(f"{out_dir}/{name}")
+        for name, df in tables.items()
+    }
 
 
 def register_metaschema(spark: SparkSession, out_dir: str) -> list[str]:

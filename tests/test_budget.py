@@ -108,6 +108,26 @@ def test_edge_level_unsized_leaf_takes_disk(spark, monkeypatch):
     assert rounds.edge_level(df) == StorageLevel.DISK_ONLY
 
 
+def test_cached_input_prices_what_it_caches(spark):
+    """A cached frame is priced by the leaves of the plan it caches: the
+    same before and after the cache materializes, and the same as the
+    uncached plan (Range leaves at 8 B per row), not the join's root
+    product."""
+    def edges():
+        big = spark.range(1_000_000).select(F.col("id").alias("src"))
+        small = spark.range(1000).select(F.col("id").alias("dst"))
+        return big.join(small, F.col("src") == F.col("dst"))
+
+    cached = edges().cache()
+    try:
+        before = rounds.input_bytes(cached.select("src"))
+        cached.count()
+        after = rounds.input_bytes(cached.select("src"))
+    finally:
+        cached.unpersist()
+    assert before == after == rounds.input_bytes(edges()) == 8_000_000 + 8_000
+
+
 def test_sf_dir_prices_nothing(spark, monkeypatch, tmp_path):
     """Neither the edge level nor the session's AQE floor reads the
     TPC-H corpus directory: a 64 GiB one and a missing one change

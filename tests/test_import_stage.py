@@ -1,14 +1,25 @@
 """Entity-stage import over a tiny inline corpus (no reference tree needed):
-loaded counts, no-op re-runs, the stage's Spark job budget, release of the
-frames a stage persists, and the driver-side POSIX file listing."""
+loaded counts, no-op re-runs, the restart protocol, the stage's Spark job
+budget, release of the frames a stage persists, and the driver-side POSIX
+file listing."""
 
 from __future__ import annotations
 
+import json
+import os
+
 import pytest
 from pyspark.errors import AnalysisException
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from mbrainz_importer_spark.operators.enums import MissingDimensionValue
+from mbrainz_importer_spark.operators.enums import MissingDimensionValue, assert_no_misses
+from mbrainz_importer_spark.operators.idempotency import (
+    BATCH_ID_COL,
+    IdempotentParquetSink,
+    committed_files,
+    load_envelopes,
+)
 from mbrainz_importer_spark.pipeline import Importer
 from mbrainz_importer_spark.sources.edn_source import (
     _file_ranks,
@@ -136,21 +147,128 @@ def test_run_import_cold_then_noop(importer, tmp_path):
     }
 
 
-def test_cold_load_job_budget(importer, spark, tmp_path):
-    """The file list costs no Spark job and persisting the stage's frames
-    adds at most their own materialization. 25 jobs here; 26 before the
-    stage persisted its frames and listed files on the driver."""
+def _jobs(spark, group, fn):
+    """(fn(), number of Spark jobs it ran), counted by job group."""
     sc = spark.sparkContext
-    group = "test-import-stage-cold-labels"
-    sc.setJobGroup(group, "cold load_type(labels)")
+    sc.setJobGroup(group, group)
     try:
-        assert importer.load_type("labels", str(tmp_path / "wh"), BATCH) == EXPECTED["labels"]
+        out = fn()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     sc._jsc.sc().listenerBus().waitUntilEmpty()
-    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
-    assert 0 < jobs <= 25
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _marker(wh, type_name):
+    with open(f"{wh}/loaded/{type_name}/_IMPORT_COMPLETE.json", encoding="utf-8") as fh:
+        return json.load(fh)
+
+
+def test_cold_load_job_budget(importer, spark, tmp_path):
+    """The enum guard is one action, the load stats are observed on the
+    write, and a cold sink has no done-set to read or broadcast: 14 jobs
+    (the miss guard 4, batching 7, the write 3)."""
+    out, jobs = _jobs(spark, "test-import-stage-cold-labels",
+                      lambda: importer.load_type("labels", str(tmp_path / "wh"), BATCH))
+    assert out == EXPECTED["labels"]
+    assert 0 < jobs <= 14
+
+
+def test_marker_valid_reload_runs_no_job(importer, spark, tmp_path):
+    wh = str(tmp_path / "wh")
+    importer.load_type("media", wh, BATCH)
+    out, jobs = _jobs(spark, "test-import-stage-noop-media",
+                      lambda: importer.load_type("media", wh, BATCH))
+    assert out == {"txes": 0, "datoms": 0}
+    assert jobs == 0
+
+
+def test_partial_restart_loads_only_missing(importer, spark, tmp_path):
+    """A crashed run left a prefix of the batches and no marker: the
+    restart loads exactly the rest (filter-batches, J5)."""
+    wh = str(tmp_path / "wh")
+    sink = IdempotentParquetSink(f"{wh}/loaded/labels")
+    env = importer.create_batches("labels", BATCH).drop("__first_rn")
+    first = load_envelopes(sink, env.where(F.col(BATCH_ID_COL) == "labels-1"), spark)
+    assert first == {"txes": 1, "datoms": 2}
+    assert importer.load_type("labels", wh, BATCH) == {"txes": 1, "datoms": 1}
+    loaded = spark.read.parquet(sink.path)
+    assert loaded.count() == 3
+    assert sorted(r[0] for r in loaded.select(BATCH_ID_COL).distinct().collect()) == [
+        "labels-1", "labels-2"
+    ]
+
+
+def test_lost_part_file_reloads_its_batches(importer, spark, tmp_path):
+    """A committed file that disappears after a complete load no longer
+    matches the marker: the next load re-writes exactly its batches and
+    lists the new files in the marker."""
+    wh = str(tmp_path / "wh")
+    sink = IdempotentParquetSink(f"{wh}/loaded/labels")
+    env = importer.create_batches("labels", BATCH).drop("__first_rn")
+    load_envelopes(sink, env.where(F.col(BATCH_ID_COL) == "labels-1"), spark)
+    [lost] = committed_files(spark, sink.path)  # labels-1 alone
+    importer.load_type("labels", wh, BATCH)
+    assert lost in _marker(wh, "labels")["files"]
+    os.remove(f"{sink.path}/{lost}")
+    assert importer.load_type("labels", wh, BATCH) == {"txes": 1, "datoms": 2}
+    files = committed_files(spark, sink.path)
+    assert lost not in files and _marker(wh, "labels")["files"] == files
+    assert spark.read.parquet(sink.path).count() == 3
+    assert importer.load_type("labels", wh, BATCH) == {"txes": 0, "datoms": 0}
+
+
+@pytest.mark.parametrize("marker", [None, {"n_batches": 2, "batch_size": BATCH}],
+                         ids=["crash-before-marker", "count-only-marker"])
+def test_reload_without_file_list_takes_anti_join(importer, spark, tmp_path, marker):
+    """A loaded sink whose marker is absent (a crash before the marker
+    write) or lists no files: the anti-join finds nothing new, and the
+    marker is (re)written with the committed files."""
+    wh = str(tmp_path / "wh")
+    importer.load_type("labels", wh, BATCH)
+    path = f"{wh}/loaded/labels/_IMPORT_COMPLETE.json"
+    os.remove(path)
+    if marker is not None:
+        with open(path, "w", encoding="utf-8") as fh:
+            json.dump(marker, fh)
+    out, jobs = _jobs(spark, f"test-import-stage-{marker is None}",
+                      lambda: importer.load_type("labels", wh, BATCH))
+    assert out == {"txes": 0, "datoms": 0} and jobs > 0
+    assert _marker(wh, "labels") == {
+        "batch_size": BATCH, "files": committed_files(spark, f"{wh}/loaded/labels")
+    }
+    assert spark.read.parquet(f"{wh}/loaded/labels").count() == 3
+
+
+@pytest.mark.parametrize("rows", [
+    [("x", True, True), ("y", False, False)],
+    [("x", True, False), ("y", False, True)],
+    [("x", True, False)] * 5 + [("y", False, True)],
+], ids=["one-row", "separate-rows", "past-a-sample"])
+def test_miss_guard_names_every_column(spark, rows):
+    df = spark.createDataFrame(rows, "v string, __miss_type boolean, __miss_country boolean")
+    df = df.coalesce(1)  # one partition: the country miss comes sixth
+    with pytest.raises(MissingDimensionValue, match=r"\['country', 'type'\]"):
+        assert_no_misses(df)
+    clean = spark.createDataFrame([("x", False, None)], df.schema)
+    assert assert_no_misses(clean).columns == ["v"]
+
+
+def test_cold_sink_skips_done_set(spark, tmp_path, monkeypatch):
+    """A sink with no committed file neither reads nor broadcasts a
+    done-set; once it has one, the anti-join drops loaded batches."""
+    sink = IdempotentParquetSink(str(tmp_path / "sink"))
+    rows = spark.createDataFrame([("b-1", 1), ("b-1", 2), ("b-2", 3)], f"{BATCH_ID_COL} string, x long")
+    reads = []
+    real = IdempotentParquetSink.done_ids
+    monkeypatch.setattr(IdempotentParquetSink, "done_ids",
+                        lambda self, spark: reads.append(1) or real(self, spark))
+    assert sink.filter_new(rows, spark) is rows
+    assert sink.load(rows, spark) == {"txes": 2, "datoms": 3}
+    assert reads == []
+    assert sink.load(rows, spark) == {"txes": 0, "datoms": 0}
+    assert reads == [1]
 
 
 def test_stage_persists_source_and_transformed(importer, spark):

@@ -74,3 +74,25 @@ def test_expand_ref_helper(warehouse, spark):
     assert joined.where(joined["artist__name"].isNotNull()).count() > 0
     with pytest.raises(KeyError):
         expand_ref(spark, f"{wh}/tables", "artist", "releases")
+
+
+def test_returned_tables_carry_the_stored_schema(spark, tmp_path):
+    """Each returned table reads back with the schema parquet stored (no
+    inference job) and the written contents; inline corpus, no reference
+    tree needed."""
+    from tests.test_import_stage import BATCH, _write_corpus
+
+    imp = Importer(spark, _write_corpus(tmp_path / "corpus"))
+    wh = str(tmp_path / "wh")
+    imp.run_import(wh, batch_size=BATCH)
+    try:
+        tables = build_entity_tables(spark, wh, imp, f"{wh}/tables")
+    finally:
+        imp.enums.unpersist()
+        imp.supers.unpersist()
+    assert len(tables) == 10
+    for name, df in tables.items():
+        stored = spark.read.parquet(f"{wh}/tables/{name}")
+        assert df.schema == stored.schema, name
+        assert sorted(df.collect(), key=repr) == sorted(stored.collect(), key=repr), name
+    assert tables["release"].where("size(media) > 0").count() == 2
