@@ -155,22 +155,19 @@ def stable_row_number(
     df: DataFrame,
     order_cols: list[str],
     out_col: str = "rn",
-    num_buckets: int | None = None,
-    boundary_strategy: str = "auto",
 ) -> DataFrame:
     """Global 1-based row numbers by `order_cols`, no single-partition
     window. Ties order by the remaining `order_cols`; rows identical on all
     of them get an arbitrary-but-deterministic relative order within a
     bucket.
 
-    `boundary_strategy`: 'auto' (default) tries min/max interpolation and
-    falls back to approxQuantile when the buckets come back skewed;
-    'interpolate' / 'quantile' force one path."""
-    spark = df.sparkSession
-    k = num_buckets or spark.sparkContext.defaultParallelism
+    One bucket per default-parallelism slot: numeric keys try min/max
+    interpolation and fall back to approxQuantile when the buckets come
+    back skewed; other keys take sampled quantiles."""
+    k = df.sparkSession.sparkContext.defaultParallelism
     lead = order_cols[0]
     numeric = isinstance(df.schema[lead].dataType, _NUMERIC)
-    bucketed, rows = _bucketed_with_stats(df, lead, k, numeric, boundary_strategy, None)
+    bucketed, rows = _bucketed_with_stats(df, lead, k, numeric, "auto", None)
     offset_expr = _bucket_offsets({r["__bkt"]: r["cnt"] for r in rows}, 0)
     w = Window.partitionBy("__bkt").orderBy(*[F.col(c) for c in order_cols])
     return (
@@ -184,8 +181,6 @@ def stable_cumsum(
     order_cols: list[str],
     value_col: str,
     out_col: str = "cumsum",
-    num_buckets: int | None = None,
-    boundary_strategy: str = "auto",
 ) -> DataFrame:
     """Inclusive running sum of `value_col` in `order_cols` order, with the
     same value-bucketed two-phase plan as stable_row_number: parallel
@@ -195,17 +190,14 @@ def stable_cumsum(
     The sum is typed by the input: integral `value_col` accumulates as
     long, anything else (float/double/decimal) as double — fractional
     values are never silently truncated."""
-    spark = df.sparkSession
-    k = num_buckets or spark.sparkContext.defaultParallelism
+    k = df.sparkSession.sparkContext.defaultParallelism
     lead = order_cols[0]
     numeric = isinstance(df.schema[lead].dataType, _NUMERIC)
     integral = isinstance(df.schema[value_col].dataType, _INTEGRAL)
     sum_type = "long" if integral else "double"
     value_expr = F.col(value_col).cast(sum_type)
 
-    bucketed, rows = _bucketed_with_stats(
-        df, lead, k, numeric, boundary_strategy, value_expr
-    )
+    bucketed, rows = _bucketed_with_stats(df, lead, k, numeric, "auto", value_expr)
     offset_expr = _bucket_offsets(
         {r["__bkt"]: r["s"] for r in rows}, 0 if integral else 0.0, sum_type
     )
@@ -239,24 +231,3 @@ def assign_batch_ids(
         F.concat_ws("-", F.lit(prefix), (F.floor((F.col(rn_col) - 1) / batch_size) + 1)),
     )
 
-
-def to_envelopes(
-    df: DataFrame,
-    data_cols: list[str],
-    id_col: str = "batch_id",
-    rn_col: str = "rn",
-) -> DataFrame:
-    """Collapse batch members into the envelope shape
-    {batch_id, data: array<struct<...>>} with members ordered by `rn_col`
-    (batch.clj:31-40 envelope; observed subsets/batches/*.edn)."""
-    member = F.struct(F.col(rn_col).alias("__rn"), *[F.col(c) for c in data_cols])
-    return (
-        df.groupBy(id_col)
-        .agg(F.array_sort(F.collect_list(member)).alias("__members"),
-             F.min(rn_col).alias("__first_rn"))
-        .select(
-            id_col,
-            F.transform(F.col("__members"), lambda m: m.dropFields("__rn")).alias("data"),
-            F.col("__first_rn"),
-        )
-    )

@@ -3,9 +3,10 @@
 The reference holds enum maps in memory and fails the import on a missed
 lookup (importer.clj:215-224: as-enum / as-super-enum raise
 `could-not-import`). Spark-first: dims are small DataFrames joined with an
-explicit broadcast; the miss check raises with a sample of unresolved
-values (eager guard) or the names of the columns that missed (deferred
-guard) — a runtime check, not an optimizer concern (SURVEY.md §4.3).
+explicit broadcast. Each resolution adds a `__miss_<col>` indicator
+column, and `assert_no_misses` checks every indicator of a frame in one
+action, raising with the names of the columns that missed — a runtime
+check, not an optimizer concern (SURVEY.md §4.3).
 """
 
 from __future__ import annotations
@@ -62,42 +63,28 @@ def resolve_enum(
     dim: DataFrame,
     dim_value_col: str,
     dim_ident_col: str,
-    out_col: str | None = None,
-    guard: bool = True,
-    defer_guard: bool = False,
 ) -> DataFrame:
     """Replace `value_col` with its dimension ident via broadcast join.
 
-    Null fact values pass through as null (optional keys). Non-null values
-    that miss the dim raise MissingDimensionValue — eagerly when `guard`,
-    or (with `defer_guard`) recorded in a `__miss_{col}` indicator column
-    so a whole stage validates every dimension in ONE action
-    (assert_no_misses) instead of one Spark job per enum column.
+    Null fact values pass through as null (optional keys). A non-null value
+    that misses the dim sets the row's `__miss_{value_col}` indicator, so
+    one `assert_no_misses` action validates every dimension of a frame
+    instead of one Spark job per enum column.
     """
-    out_col = out_col or value_col
     d = F.broadcast(dim.select(
         F.col(dim_value_col).alias("__dim_v"), F.col(dim_ident_col).alias("__dim_ident")
     ))
     joined = fact.join(d, fact[value_col] == d["__dim_v"], "left")
     miss = F.col(value_col).isNotNull() & F.col("__dim_ident").isNull()
-    if guard and not defer_guard:
-        sample = joined.where(miss).select(value_col).limit(5).collect()
-        if sample:
-            raise MissingDimensionValue(
-                f"could not resolve {value_col!r}: sample unresolved values "
-                f"{[r[0] for r in sample]}"
-            )
     cols = [
-        F.col("__dim_ident").alias(out_col) if c == value_col else F.col(c)
+        F.col("__dim_ident").alias(value_col) if c == value_col else F.col(c)
         for c in fact.columns
     ]
-    if guard and defer_guard:
-        cols.append(miss.alias(f"{MISS_PREFIX}{out_col}"))
-    return joined.select(*cols)
+    return joined.select(*cols, miss.alias(f"{MISS_PREFIX}{value_col}"))
 
 
 def assert_no_misses(df: DataFrame) -> DataFrame:
-    """Validate every deferred `__miss_*` indicator in one action: a `max`
+    """Validate every `__miss_*` indicator in one action: a `max`
     per indicator, observed on a no-op write, so the check runs one job
     with no exchange. Raise MissingDimensionValue naming every column that
     missed in any row, else return the frame with the indicators dropped.

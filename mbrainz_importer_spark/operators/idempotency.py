@@ -21,10 +21,10 @@ committed batches. As it runs:
     cold: `filter_new` returns its input unchanged, with no done-set read
     or broadcast. Otherwise it broadcast-anti-joins the input against
     `done_ids`.
-  - `load_envelopes` anti-joins envelopes, one row per batch, and takes
-    `{txes, datoms}` as observed metrics of the write itself, the
-    reference's fold over the transactions it ran (batch.clj:115-135).
-    The write is the one action.
+  - `load_envelopes` anti-joins the batched rows and takes `{txes,
+    datoms}` as observed metrics of the append itself, the reference's
+    fold over the transactions it ran (batch.clj:115-135). The write is
+    the one action.
   - `Importer.load_type` records the committed file listing in its
     completion marker; a re-run whose listing matches runs no Spark job.
 
@@ -103,24 +103,21 @@ class IdempotentParquetSink:
 
 
 def load_envelopes(
-    sink: IdempotentParquetSink, envelopes: DataFrame, spark: SparkSession
+    sink: IdempotentParquetSink, rows: DataFrame, spark: SparkSession
 ) -> dict:
-    """Load envelope-shaped batches (batch_id, data array<struct>) in one
-    action. The anti-join runs on envelopes, so it touches batches, not
-    datoms; `{txes, datoms}` are observed on the surviving envelopes in
-    the write's result stage, then members are exploded back to rows
-    with the batch_id column attached and appended. A write that finds
-    nothing new reports {0, 0} and still appends one schema-only part
-    file."""
+    """Load batched rows (batch_id, data columns) in one action: the rows
+    of not-yet-loaded batches are appended, and `{txes, datoms}` are
+    observed on them in the write's result stage. Observed metrics reject
+    DISTINCT, so `txes` is the size of the collected batch-id set: one
+    entry per batch, as many as the done-set the anti-join broadcasts. A
+    write that finds nothing new reports {0, 0} and still appends one
+    schema-only part file."""
     todo, obs = observed(
-        sink.filter_new(envelopes, spark), "load_envelopes",
-        txes=F.count(F.lit(1)),
-        datoms=F.coalesce(F.sum(F.size("data")), F.lit(0)),
+        sink.filter_new(rows, spark), "load_envelopes",
+        txes=F.size(F.collect_set(BATCH_ID_COL)),
+        datoms=F.count(F.lit(1)),
     )
-    rows = todo.select(
-        F.col(BATCH_ID_COL), F.explode("data").alias("m")
-    ).select(BATCH_ID_COL, "m.*")
-    rows.write.mode("append").parquet(sink.path)
+    todo.write.mode("append").parquet(sink.path)
     stats = obs.get
     return {"txes": stats["txes"], "datoms": stats["datoms"]}
 

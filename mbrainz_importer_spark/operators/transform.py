@@ -14,6 +14,11 @@ batch files (subsets/batches/*.edn) were produced with them:
 Output is columnar (one table per entity type, metaschema/mbrainz.edn
 layout); `to_tx_data` projects a row into the reference's nested tx-map
 shape for golden comparison and EDN export.
+
+A transform does not check its dim lookups: every resolved column comes
+with its `__miss_<col>` indicator (operators/enums.resolve_enum), and the
+stage runs `assert_no_misses` once, on the frame it persists
+(pipeline.Importer.transformed), so each dim is broadcast once per stage.
 """
 
 from __future__ import annotations
@@ -21,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .enums import assert_no_misses, resolve_enum
+from .enums import MISS_PREFIX, resolve_enum
 
 
 def _keep_idx(df: DataFrame, cols: list) -> list:
@@ -30,12 +35,12 @@ def _keep_idx(df: DataFrame, cols: list) -> list:
 
 def _enum(df: DataFrame, col: str, enums_dim: DataFrame, enum_type: str) -> DataFrame:
     dim = enums_dim.where(F.col("enum_type") == enum_type)
-    return resolve_enum(df, col, dim, "value", "ident", defer_guard=True)
+    return resolve_enum(df, col, dim, "value", "ident")
 
 
 def _super(df: DataFrame, col: str, super_dim: DataFrame, table: str) -> DataFrame:
     dim = super_dim.where(F.col("table") == table)
-    return resolve_enum(df, col, dim, "code", "ident", defer_guard=True)
+    return resolve_enum(df, col, dim, "code", "ident")
 
 
 def transform_artists(df: DataFrame, enums_dim: DataFrame, super_dim: DataFrame) -> DataFrame:
@@ -54,8 +59,7 @@ def transform_artists(df: DataFrame, enums_dim: DataFrame, super_dim: DataFrame)
     ]))
     out = _enum(out, "type", enums_dim, "artist_type")
     out = _enum(out, "gender", enums_dim, "gender")
-    out = _super(out, "country", super_dim, "countries")
-    return assert_no_misses(out)
+    return _super(out, "country", super_dim, "countries")
 
 
 def transform_areleases(df: DataFrame, enums_dim: DataFrame, super_dim: DataFrame) -> DataFrame:
@@ -66,7 +70,7 @@ def transform_areleases(df: DataFrame, enums_dim: DataFrame, super_dim: DataFram
         F.col("type"),
         F.col("artist_credit").alias("artistCredit"),
     ]))
-    return assert_no_misses(_enum(out, "type", enums_dim, "release_group_type"))
+    return _enum(out, "type", enums_dim, "release_group_type")
 
 
 def transform_releases(df: DataFrame, enums_dim: DataFrame, super_dim: DataFrame) -> DataFrame:
@@ -92,8 +96,7 @@ def transform_releases(df: DataFrame, enums_dim: DataFrame, super_dim: DataFrame
     out = _enum(out, "packaging", enums_dim, "release_packaging")
     out = _super(out, "country", super_dim, "countries")
     out = _super(out, "language", super_dim, "langs")
-    out = _super(out, "script", super_dim, "scripts")
-    return assert_no_misses(out)
+    return _super(out, "script", super_dim, "scripts")
 
 
 def transform_labels(df: DataFrame, enums_dim: DataFrame, super_dim: DataFrame) -> DataFrame:
@@ -112,8 +115,7 @@ def transform_labels(df: DataFrame, enums_dim: DataFrame, super_dim: DataFrame) 
         F.col("end_date_day").alias("endDay"),
     ]))
     out = _enum(out, "type", enums_dim, "label_type")
-    out = _super(out, "country", super_dim, "countries")
-    return assert_no_misses(out)
+    return _super(out, "country", super_dim, "countries")
 
 
 def transform_releases_artists(df: DataFrame, *_dims) -> DataFrame:
@@ -148,7 +150,7 @@ def transform_media(df: DataFrame, enums_dim: DataFrame, super_dim: DataFrame) -
     Track order inside a medium is by position — recoverable, unlike the
     reference's incidental reversed-conj list order.
     """
-    mt = assert_no_misses(_enum(df, "format", enums_dim, "medium_format"))
+    mt = _enum(df, "format", enums_dim, "medium_format")
     tracks = (
         mt.groupBy("id", "tracknum")
         .agg(
@@ -166,6 +168,7 @@ def transform_media(df: DataFrame, enums_dim: DataFrame, super_dim: DataFrame) -
         F.first("position").alias("position"),
         F.first("track_count").alias("trackCount"),
         F.first("format").alias("format"),
+        F.max(f"{MISS_PREFIX}format").alias(f"{MISS_PREFIX}format"),
     ]
     if "_row_idx" in mt.columns:
         # order key for batching: a medium appears where its first track does

@@ -7,16 +7,19 @@ The reference's entry point A: sequential stages in `import-order`
   like the reference's slurp (importer.clj:257-269), then broadcast.
 
   entity stages — distributed: EDN source -> per-type transform (broadcast
-  dim resolution with zero-miss guards) -> deterministic batching ->
-  envelope DataFrame -> idempotent sink.
+  dim resolution) -> one zero-miss guard on the persisted frame ->
+  deterministic batching -> rows with their batch_id -> idempotent sink.
 
 The intermediate "batch file" of the reference (subsets/batches/*.edn) is
-an envelope DataFrame here, persisted as Parquet; EDN export exists for
-golden-format parity only.
+the sink itself here: each row carries its batch_id column. Only
+`batch_tx_data` regroups rows into the envelope shape {batch_id, data},
+for golden-format parity.
 """
 
 from __future__ import annotations
 
+import json
+import os
 from collections.abc import Iterator
 from contextlib import contextmanager
 from dataclasses import dataclass, field
@@ -25,8 +28,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import schema as SCH
-from .operators.batching import assign_batch_ids, to_envelopes
-from .operators.enums import enums_dim, super_enums_dim
+from .operators.batching import assign_batch_ids
+from .operators.enums import assert_no_misses, enums_dim, super_enums_dim
 from .operators.transform import TRANSFORMS, to_tx_data
 from .sources.edn_source import read_edn_entities, read_edn_forms_local
 
@@ -39,6 +42,17 @@ BATCH_ID_ATTR = ":mbrainz.initial-import/batch-id"  # importer.clj:277
 DEFAULT_BATCH_SIZE = 100  # importer/batch.clj:14 "suggest 100"
 
 DIM_STAGES = frozenset({"schema", "enums", "super-enums"})
+
+IMPORT_MARKER = "_IMPORT_COMPLETE.json"
+
+
+def read_marker(sink_path: str) -> dict | None:
+    """The completion marker `load_type` wrote under `sink_path`, or None."""
+    path = f"{sink_path}/{IMPORT_MARKER}"
+    if not os.path.exists(path):
+        return None
+    with open(path, encoding="utf-8") as fh:
+        return json.load(fh)
 
 
 @dataclass
@@ -124,44 +138,48 @@ class Importer:
         return df.persist()
 
     def transformed(self, type_name: str) -> DataFrame:
-        """EDN source -> per-type transform with dim resolution. Inside a
-        `stage()` both frames are persisted; a transform's miss guard, where
-        it has one, is the stage's first action and materializes the
-        source."""
+        """EDN source -> per-type transform with dim resolution -> the miss
+        guard over the transform's `__miss_*` indicators, which are dropped.
+        Inside a `stage()` both frames are persisted, and the guard, where
+        the type resolves a dim, is the stage's first action: it fills both
+        caches, so the dims are broadcast once per stage."""
         raw = self._keep(self.read_entities(type_name))
-        return self._keep(TRANSFORMS[type_name](raw, self.enums, self.supers))
+        return assert_no_misses(
+            self._keep(TRANSFORMS[type_name](raw, self.enums, self.supers))
+        )
 
     def create_batches(
         self, type_name: str, batch_size: int = DEFAULT_BATCH_SIZE
     ) -> DataFrame:
         """Entry point B (create-batch-file, importer.clj:279-296):
-        transform + deterministic batching + envelope assembly.
-        Returns DataFrame[batch_id, data array<struct>, __first_rn]."""
+        transform + deterministic batching.
+        Returns DataFrame[batch_id, <data cols>, _rn], the sink's rows."""
         t = self.transformed(type_name)
         data_cols = [c for c in t.columns if c != "_row_idx"]
         batched = assign_batch_ids(t, batch_size, type_name, ["_row_idx"])
-        # carry the global row number into the envelope as `_rn`: the load
-        # phase persists it so unique-identity upserts (J2) have Datomic's
-        # later-assertion-wins order available (duplicate gids in a stream
-        # merge in stream order; see plans.metaschema compaction)
-        batched = batched.withColumn("_rn", F.col("rn"))
-        return to_envelopes(batched, data_cols + ["_rn"])
+        # carry the global row number as `_rn`: the load phase persists it
+        # so unique-identity upserts (J2) have Datomic's later-assertion-wins
+        # order available (duplicate gids in a stream merge in stream order;
+        # see plans.metaschema compaction)
+        return batched.select("batch_id", *data_cols, F.col("rn").alias("_rn"))
 
     # -- load phase (entry point C, importer.clj:298-316) ------------------
     def load_type(
         self, type_name: str, warehouse: str, batch_size: int = DEFAULT_BATCH_SIZE
     ) -> dict:
         """Idempotent load of one entity stage into the warehouse:
-        batches -> anti-join against already-loaded ids -> append with
+        batched rows -> anti-join against already-loaded ids -> append with
         batch_id atomic-with-data. Re-running is a no-op ({'txes': 0}).
 
         Fast path: a completed load writes a marker listing the sink's
-        committed part files and their sizes. A re-run whose listing
-        equals the marker's returns {'txes': 0, 'datoms': 0} without a
-        Spark job (the reference's already-transacted gate, batch.clj:46-60,
-        applied before any work). Any other listing (a crashed run, a
-        missing, added or resized file, a marker without `files`) takes
-        the anti-join path, and the marker is rewritten after its write.
+        committed part files and their sizes, and the `schema` of the rows
+        it wrote (`plans.metaschema` reads the sink with it). A re-run whose
+        listing equals the marker's returns {'txes': 0, 'datoms': 0} without
+        a Spark job (the reference's already-transacted gate,
+        batch.clj:46-60, applied before any work). Any other listing (a
+        crashed run, a missing, added or resized file) or a marker without
+        `files` or `schema` takes the anti-join path, and the marker is
+        rewritten after its write.
 
         Batch-size guard: batch ids like 'artists-1' denote different row
         sets at different batch sizes, so loading into a sink that was
@@ -171,12 +189,10 @@ class Importer:
         recorded at load START (so crashed runs are covered too) and any
         mismatch raises instead of proceeding.
 
-        A cold load runs in one `stage()`: it persists the parsed source
-        and the transformed, guarded frame, and releases both when the
+        A cold load is one frame from source to sink, run in one `stage()`:
+        transform, guard the persisted transformed frame once, number its
+        rows, append them. Both persisted frames are released when the
         write returns or anything raises (an enum miss included)."""
-        import json as _json
-        import os
-
         from .operators.idempotency import (
             IdempotentParquetSink,
             committed_files,
@@ -184,16 +200,15 @@ class Importer:
         )
 
         sink_path = f"{warehouse}/loaded/{type_name}"
-        marker = f"{sink_path}/_IMPORT_COMPLETE.json"
         size_file = f"{sink_path}/_BATCH_SIZE.json"
         sink = IdempotentParquetSink(sink_path)
+        marker = read_marker(sink_path)
         recorded = None
         if os.path.exists(size_file):
             with open(size_file, encoding="utf-8") as fh:
-                recorded = _json.load(fh)["batch_size"]
-        elif os.path.exists(marker):  # sinks predating the size file
-            with open(marker, encoding="utf-8") as fh:
-                recorded = _json.load(fh)["batch_size"]
+                recorded = json.load(fh)["batch_size"]
+        elif marker is not None:  # sinks predating the size file
+            recorded = marker["batch_size"]
         if recorded is not None and recorded != batch_size:
             raise ValueError(
                 f"{type_name}: sink {sink_path} was loaded with "
@@ -201,23 +216,26 @@ class Importer:
                 f"{batch_size} would corrupt batch identity — use a fresh "
                 "warehouse or the original batch size"
             )
-        if os.path.exists(marker):
-            with open(marker, encoding="utf-8") as fh:
-                files = _json.load(fh).get("files")
-            if files == committed_files(self.spark, sink_path):
-                return {"txes": 0, "datoms": 0}
+        if (
+            marker is not None and "schema" in marker
+            and marker.get("files") == committed_files(self.spark, sink_path)
+        ):
+            return {"txes": 0, "datoms": 0}
 
         os.makedirs(sink_path, exist_ok=True)
         if not os.path.exists(size_file):
             with open(size_file, "w", encoding="utf-8") as fh:
-                _json.dump({"batch_size": batch_size}, fh)
+                json.dump({"batch_size": batch_size}, fh)
 
         with self.stage():
-            env = self.create_batches(type_name, batch_size).drop("__first_rn")
-            result = load_envelopes(sink, env, self.spark)
-        files = committed_files(self.spark, sink_path)
-        with open(marker, "w", encoding="utf-8") as fh:
-            _json.dump({"batch_size": batch_size, "files": files}, fh)
+            rows = self.create_batches(type_name, batch_size)
+            result = load_envelopes(sink, rows, self.spark)
+        with open(f"{sink_path}/{IMPORT_MARKER}", "w", encoding="utf-8") as fh:
+            json.dump({
+                "batch_size": batch_size,
+                "files": committed_files(self.spark, sink_path),
+                "schema": rows.schema.jsonValue(),
+            }, fh)
         return result
 
     def run_import(
@@ -229,8 +247,6 @@ class Importer:
         file is absent (media in the stripped reference) are skipped with a
         marker. Dim/config stages are metadata, not fact loads — recorded
         with driver-side row counts."""
-        import os
-
         order = import_order or IMPORT_ORDER
         unknown = [t for t in order if t not in DIM_STAGES and t not in TRANSFORMS]
         if unknown:
@@ -254,13 +270,12 @@ class Importer:
         if type_name in DIM_STAGES:
             return self.dim_batches(type_name, batch_size)
         with self.stage():
-            env = self.create_batches(type_name, batch_size).orderBy("__first_rn").collect()
-        return [
-            {
-                "batch_id": r["batch_id"],
-                "data": [
-                    to_tx_data(type_name, m.asDict(recursive=True)) for m in r["data"]
-                ],
-            }
-            for r in env
-        ]
+            rows = self.create_batches(type_name, batch_size).orderBy("_rn").collect()
+        out: list[dict] = []
+        for r in rows:  # consecutive in `_rn` order: one batch after another
+            member = r.asDict(recursive=True)
+            batch_id = member.pop("batch_id")
+            if not out or out[-1]["batch_id"] != batch_id:
+                out.append({"batch_id": batch_id, "data": []})
+            out[-1]["data"].append(to_tx_data(type_name, member))
+        return out

@@ -27,8 +27,10 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..operators.upsert import attach_many, compact_by_key
+from ..pipeline import read_marker
 
 # ref-attr -> (link table, parent key, value col, target table)
 # mirror of metaschema/mbrainz.edn :joins
@@ -46,10 +48,19 @@ JOINS = {
 
 
 def _loaded(spark: SparkSession, warehouse: str, name: str) -> DataFrame | None:
+    """The loaded sink of entity type `name`, read with the schema its
+    completion marker records (no schema-inference job); None when the
+    type was never loaded."""
     path = f"{warehouse}/loaded/{name}"
     if not os.path.exists(path):
         return None
-    df = spark.read.parquet(path).drop("batch_id")
+    schema = (read_marker(path) or {}).get("schema")
+    if schema is None:
+        raise ValueError(
+            f"{name}: {path} holds an unfinished load (no completion marker "
+            "with a schema); re-run run_import to complete it"
+        )
+    df = spark.read.schema(T.StructType.fromJson(schema)).parquet(path).drop("batch_id")
     if "gid" in df.columns and "_rn" in df.columns:
         # unique-identity merge: duplicate gids in the entity stream collapse,
         # later non-null assertions winning (Datomic upsert, J2)

@@ -100,7 +100,7 @@ def zero_miss_guard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P2/P3 miss guard: enum values that fail to resolve must be surfaced
     (importer.clj:215-219 raises `could-not-import`). Expressed as the
     left-anti probe — on clean data the result is empty, and the engine
-    raises iff count > 0 (see operators.guards).
+    raises iff count > 0 (see operators/enums.assert_no_misses).
     """
     li = load(spark, sf_dir, "lineitem").select("l_partkey").distinct()
     part = load(spark, sf_dir, "part").select("p_partkey")

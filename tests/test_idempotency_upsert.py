@@ -31,7 +31,7 @@ def test_partial_restart_loads_only_missing(importer, spark, tmp_path_factory):
     """Simulate a crashed run: preload a prefix of batches, then run the
     full load — only the missing batches are written (filter-batches J5)."""
     wh = str(tmp_path_factory.mktemp("wh"))
-    env = importer.create_batches("labels").drop("__first_rn")
+    env = importer.create_batches("labels")
     first_half = env.where(F.col("batch_id").isin([f"labels-{i}" for i in range(1, 8)]))
     sink = IdempotentParquetSink(f"{wh}/loaded/labels")
     from mbrainz_importer_spark.operators.idempotency import load_envelopes

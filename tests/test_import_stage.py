@@ -1,6 +1,7 @@
 """Entity-stage import over a tiny inline corpus (no reference tree needed):
 loaded counts, no-op re-runs, the restart protocol, the stage's Spark job
-budget, release of the frames a stage persists, and the driver-side POSIX
+budget, the one miss guard over the persisted frame, the golden batch
+shape, release of the frames a stage persists, and the driver-side POSIX
 file listing."""
 
 from __future__ import annotations
@@ -166,13 +167,13 @@ def _marker(wh, type_name):
 
 
 def test_cold_load_job_budget(importer, spark, tmp_path):
-    """The enum guard is one action, the load stats are observed on the
-    write, and a cold sink has no done-set to read or broadcast: 14 jobs
-    (the miss guard 4, batching 7, the write 3)."""
+    """The enum guard is one action over the persisted transformed frame,
+    the load stats are observed on the write, and a cold sink has no
+    done-set to read or broadcast: 11 jobs."""
     out, jobs = _jobs(spark, "test-import-stage-cold-labels",
                       lambda: importer.load_type("labels", str(tmp_path / "wh"), BATCH))
     assert out == EXPECTED["labels"]
-    assert 0 < jobs <= 14
+    assert 0 < jobs <= 11
 
 
 def test_marker_valid_reload_runs_no_job(importer, spark, tmp_path):
@@ -189,7 +190,7 @@ def test_partial_restart_loads_only_missing(importer, spark, tmp_path):
     restart loads exactly the rest (filter-batches, J5)."""
     wh = str(tmp_path / "wh")
     sink = IdempotentParquetSink(f"{wh}/loaded/labels")
-    env = importer.create_batches("labels", BATCH).drop("__first_rn")
+    env = importer.create_batches("labels", BATCH)
     first = load_envelopes(sink, env.where(F.col(BATCH_ID_COL) == "labels-1"), spark)
     assert first == {"txes": 1, "datoms": 2}
     assert importer.load_type("labels", wh, BATCH) == {"txes": 1, "datoms": 1}
@@ -206,7 +207,7 @@ def test_lost_part_file_reloads_its_batches(importer, spark, tmp_path):
     lists the new files in the marker."""
     wh = str(tmp_path / "wh")
     sink = IdempotentParquetSink(f"{wh}/loaded/labels")
-    env = importer.create_batches("labels", BATCH).drop("__first_rn")
+    env = importer.create_batches("labels", BATCH)
     load_envelopes(sink, env.where(F.col(BATCH_ID_COL) == "labels-1"), spark)
     [lost] = committed_files(spark, sink.path)  # labels-1 alone
     importer.load_type("labels", wh, BATCH)
@@ -219,15 +220,19 @@ def test_lost_part_file_reloads_its_batches(importer, spark, tmp_path):
     assert importer.load_type("labels", wh, BATCH) == {"txes": 0, "datoms": 0}
 
 
-@pytest.mark.parametrize("marker", [None, {"n_batches": 2, "batch_size": BATCH}],
-                         ids=["crash-before-marker", "count-only-marker"])
+@pytest.mark.parametrize("marker", [None, {"n_batches": 2, "batch_size": BATCH}, "files"],
+                         ids=["crash-before-marker", "count-only-marker",
+                              "files-without-schema"])
 def test_reload_without_file_list_takes_anti_join(importer, spark, tmp_path, marker):
     """A loaded sink whose marker is absent (a crash before the marker
-    write) or lists no files: the anti-join finds nothing new, and the
-    marker is (re)written with the committed files."""
+    write), lists no files, or lists them but records no schema: the
+    anti-join finds nothing new, and the marker is (re)written with the
+    committed files and the written rows' schema."""
     wh = str(tmp_path / "wh")
     importer.load_type("labels", wh, BATCH)
     path = f"{wh}/loaded/labels/_IMPORT_COMPLETE.json"
+    if marker == "files":
+        marker = {"batch_size": BATCH, "files": _marker(wh, "labels")["files"]}
     os.remove(path)
     if marker is not None:
         with open(path, "w", encoding="utf-8") as fh:
@@ -235,10 +240,14 @@ def test_reload_without_file_list_takes_anti_join(importer, spark, tmp_path, mar
     out, jobs = _jobs(spark, f"test-import-stage-{marker is None}",
                       lambda: importer.load_type("labels", wh, BATCH))
     assert out == {"txes": 0, "datoms": 0} and jobs > 0
-    assert _marker(wh, "labels") == {
+    written = _marker(wh, "labels")
+    schema = T.StructType.fromJson(written.pop("schema"))
+    assert written == {
         "batch_size": BATCH, "files": committed_files(spark, f"{wh}/loaded/labels")
     }
-    assert spark.read.parquet(f"{wh}/loaded/labels").count() == 3
+    loaded = spark.read.parquet(f"{wh}/loaded/labels")
+    assert schema.fieldNames() == loaded.columns
+    assert loaded.count() == 3
 
 
 @pytest.mark.parametrize("rows", [
@@ -274,9 +283,75 @@ def test_cold_sink_skips_done_set(spark, tmp_path, monkeypatch):
 def test_stage_persists_source_and_transformed(importer, spark):
     before = _persisted(spark)
     with importer.stage():
-        assert importer.create_batches("labels", BATCH).count() == 2
+        assert importer.create_batches("labels", BATCH).count() == 3
         assert _persisted(spark) == before + 2
     assert _persisted(spark) == before
+
+
+def test_stage_guard_fills_transformed_cache(importer, spark):
+    """The miss guard runs over the frame the stage persists, so right
+    after `transformed` every partition of that frame is cached: batching
+    and the write read it, and the dims are not broadcast again."""
+    sc = spark.sparkContext
+    with importer.stage():
+        importer.transformed("labels")
+        held = importer._held[-1]
+        cached = spark._jsparkSession.sharedState().cacheManager().lookupCachedData(held._jdf)
+        builder = cached.get().cachedRepresentation().cacheBuilder()
+        assert builder.isCachedColumnBuffersLoaded()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        info = sc._jsc.sc().statusStore().rdd(builder.cachedColumnBuffers().id())
+        assert 0 < info.numPartitions() == info.numCachedPartitions()
+
+
+def _keys(batches):
+    return [[list(m) for m in b["data"]] for b in batches]
+
+
+def test_batch_tx_data_golden_shape(importer):
+    """Batch ids, member order and tx-map keys of the reference's batch-file
+    shape (subsets/batches/*.edn), on the inline corpus."""
+    artist = {":artist/gid": A1}, {":artist/gid": A2}
+    labels = [
+        {"batch_id": "labels-1", "data": [
+            {":label/gid": L1, ":label/name": "One",
+             ":label/type": ":label.type/publisher", ":label/country": ":country/GB"},
+            {":label/gid": L2, ":label/name": "Two", ":label/sortName": "two"},
+        ]},
+        {"batch_id": "labels-2", "data": [
+            {":label/gid": L3, ":label/name": "Three", ":label/startYear": 1999},
+        ]},
+    ]
+    media = [
+        {"batch_id": "media-1", "data": [
+            {":release/_media": [":release/gid", R1], ":medium/position": 1,
+             ":medium/trackCount": 2, ":medium/format": ":medium.format/cd",
+             ":medium/tracks": [
+                 {":db/id": "track-1-1", ":track/name": "T1", ":track/position": 1,
+                  ":track/duration": 1000, ":track/artists": list(artist)},
+                 {":db/id": "track-1-2", ":track/name": "T2", ":track/position": 2,
+                  ":track/artists": [artist[0]]},
+             ]},
+            {":release/_media": [":release/gid", R1], ":medium/position": 2,
+             ":medium/trackCount": 1,
+             ":medium/tracks": [
+                 {":db/id": "track-2-1", ":track/name": "T3", ":track/position": 1,
+                  ":track/artists": [artist[0]]},
+             ]},
+        ]},
+        {"batch_id": "media-2", "data": [
+            {":release/_media": [":release/gid", R2], ":medium/position": 1,
+             ":medium/trackCount": 1,
+             ":medium/tracks": [
+                 {":db/id": "track-3-1", ":track/name": "T4", ":track/position": 1,
+                  ":track/artists": [artist[1]]},
+             ]},
+        ]},
+    ]
+    for type_name, expected in (("labels", labels), ("media", media)):
+        got = importer.batch_tx_data(type_name, BATCH)
+        assert got == expected, type_name
+        assert _keys(got) == _keys(expected), type_name
 
 
 def test_stage_frames_released_after_load(importer, spark, tmp_path):
@@ -300,6 +375,21 @@ def test_stage_frames_released_on_enum_miss(spark, tmp_path):
     before = _persisted(spark)
     with pytest.raises(MissingDimensionValue, match="type"):
         imp.load_type("labels", str(tmp_path / "wh"), BATCH)
+    assert _persisted(spark) == before
+    imp.enums.unpersist()
+    imp.supers.unpersist()
+
+
+def test_unknown_medium_format_raises_through_load_type(spark, tmp_path):
+    """A medium's `format` miss survives the header aggregation as its
+    indicator's max, and the stage's one guard names it."""
+    media = CORPUS["media.edn"].replace(':format "CD"', ':format "Wax Cylinder"', 1)
+    imp = Importer(spark, _write_corpus(tmp_path / "corpus", {"media.edn": media}))
+    imp.enums.count()
+    imp.supers.count()
+    before = _persisted(spark)
+    with pytest.raises(MissingDimensionValue, match=r"\['format'\]"):
+        imp.load_type("media", str(tmp_path / "wh"), BATCH)
     assert _persisted(spark) == before
     imp.enums.unpersist()
     imp.supers.unpersist()

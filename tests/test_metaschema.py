@@ -8,6 +8,7 @@ import pytest
 
 from mbrainz_importer_spark.pipeline import Importer
 from mbrainz_importer_spark.plans.metaschema import (
+    _loaded,
     build_entity_tables,
     expand_ref,
     register_metaschema,
@@ -96,3 +97,55 @@ def test_returned_tables_carry_the_stored_schema(spark, tmp_path):
         assert df.schema == stored.schema, name
         assert sorted(df.collect(), key=repr) == sorted(stored.collect(), key=repr), name
     assert tables["release"].where("size(media) > 0").count() == 2
+
+
+@pytest.fixture
+def inline_importer(spark, tmp_path):
+    from tests.test_import_stage import _write_corpus
+
+    imp = Importer(spark, _write_corpus(tmp_path / "corpus"))
+    yield imp
+    imp.enums.unpersist()
+    imp.supers.unpersist()
+
+
+def test_loaded_reads_the_marker_schema_without_a_job(spark, tmp_path, inline_importer):
+    """Each loaded sink is read with the schema its completion marker
+    records: no schema-inference job, the columns parquet stored."""
+    from tests.test_import_stage import BATCH, EXPECTED, _jobs
+
+    wh = str(tmp_path / "wh")
+    inline_importer.run_import(wh, batch_size=BATCH)
+    for name in EXPECTED:
+        df, jobs = _jobs(spark, f"test-metaschema-loaded-{name}",
+                         lambda: _loaded(spark, wh, name))
+        assert jobs == 0, name
+        stored = spark.read.parquet(f"{wh}/loaded/{name}").drop("batch_id", "_rn")
+        assert sorted(df.columns) == sorted(stored.columns), name
+    assert _loaded(spark, wh, "no-such-type") is None
+
+
+@pytest.mark.parametrize("marker", ["absent", "without-schema"])
+def test_loaded_refuses_an_unfinished_load(spark, tmp_path, inline_importer, marker):
+    """A sink without a marker, or with one that records no schema, is an
+    unfinished load: `_loaded` names the type and asks for `run_import`,
+    whose re-run completes the load and rewrites the marker."""
+    import json
+    import os
+
+    from tests.test_import_stage import BATCH
+
+    wh = str(tmp_path / "wh")
+    inline_importer.run_import(wh, batch_size=BATCH, import_order=["labels"])
+    path = f"{wh}/loaded/labels/_IMPORT_COMPLETE.json"
+    with open(path, encoding="utf-8") as fh:
+        written = json.load(fh)
+    os.remove(path)
+    if marker == "without-schema":
+        del written["schema"]
+        with open(path, "w", encoding="utf-8") as fh:
+            json.dump(written, fh)
+    with pytest.raises(ValueError, match=r"^labels: .*re-run run_import"):
+        _loaded(spark, wh, "labels")
+    inline_importer.run_import(wh, batch_size=BATCH, import_order=["labels"])
+    assert _loaded(spark, wh, "labels").count() == 3
