@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 
 from .. import schema as SCH
 from ..sources.edn_source import read_edn_forms_local
-from .progress import observed
+from .progress import observe_metrics
 
 
 class MissingDimensionValue(ValueError):
@@ -93,11 +93,9 @@ def assert_no_misses(df: DataFrame) -> DataFrame:
     miss_cols = [c for c in df.columns if c.startswith(MISS_PREFIX)]
     if not miss_cols:
         return df
-    checked, obs = observed(
+    seen = observe_metrics(
         df.select(*miss_cols), "enum_misses", **{c: F.max(c) for c in miss_cols}
     )
-    checked.write.format("noop").mode("overwrite").save()
-    seen = obs.get
     bad = [c[len(MISS_PREFIX):] for c in miss_cols if seen[c]]
     if bad:
         raise MissingDimensionValue(f"could not resolve dimension column(s): {sorted(bad)}")

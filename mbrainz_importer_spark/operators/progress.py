@@ -29,8 +29,18 @@ def observed(
     return out, obs
 
 
+def observe_metrics(df: DataFrame, name: str, **metrics: Column) -> dict:
+    """Compute named aggregate metrics over `df` now, in one job with no
+    exchange: observed on a no-op write of the frame. Returns
+    {metric: value}."""
+    out, obs = observed(df, name, **metrics)
+    out.write.format("noop").mode("overwrite").save()
+    return obs.get
+
+
 def observed_counter(df: DataFrame, name: str = "progress") -> tuple[DataFrame, Observation]:
     """The `dot`-analog: row count of the next action over this frame.
-    (Observed metrics forbid DISTINCT aggregates and non-deterministic
-    expressions like spark_partition_id — row/sum/min/max metrics only.)"""
+    (Any aggregate can be observed — collect_set and percentile_approx
+    included — except a DISTINCT one, over deterministic expressions
+    only: spark_partition_id, rand and the like are rejected.)"""
     return observed(df, name, rows=F.count(F.lit(1)))

@@ -397,9 +397,10 @@ def batch_numbering(spark: SparkSession, sf_dir: str) -> DataFrame:
     we make it explicit with a stable sort key. batch_id = 'orders-N'.
 
     Routed through the scale-safe two-phase numbering
-    (operators.batching.assign_batch_ids): value-bucketed parallel windows
-    plus driver-side prefix offsets — no 1-partition global window, so the
-    same plan holds at 100 TB.
+    (operators.batching.assign_batch_ids): parallel windows over buckets
+    split at the key's approximate quantiles, plus driver-side prefix
+    offsets — no 1-partition global window, so the same plan holds at
+    100 TB.
     """
     orders = load(spark, sf_dir, "orders")
     numbered = assign_batch_ids(orders.select("o_orderkey"), 100, "orders", ["o_orderkey"])

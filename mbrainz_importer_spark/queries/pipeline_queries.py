@@ -56,9 +56,10 @@ def curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         hashed.withColumn("__canon", F.min("doc_id").over(w))
         .where(F.col("doc_id") == F.col("__canon"))
         .select("doc_id", "__n")
-        # materialize once: stable_cumsum makes two bounded driver passes
-        # (bucket boundaries + prefix sums) plus the final job — without
-        # this the whole filter+dedup subplan would run three times
+        # materialize once: stable_cumsum makes two bounded passes (the
+        # observed boundary quantiles, the per-bucket sums) plus the final
+        # job — without this the whole filter+dedup subplan would run
+        # three times
         .localCheckpoint()
     )
     packed = C.pack_sequences(

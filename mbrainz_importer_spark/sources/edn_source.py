@@ -173,7 +173,10 @@ def _list_uri_files(path: str, mode: str) -> list[str]:
     glob) WITHOUT reading content; returns full URIs (scheme kept, so
     each task re-resolves its own filesystem handle). Basename globs
     only under 'arrow' (pyarrow.fs has no glob; wildcards elsewhere in
-    the path need fsspec)."""
+    the path need fsspec). Under 'arrow' the files are those of
+    `_local_file_ranks`: a directory or a matched directory gives its
+    direct non-hidden files, and a missing path or a glob that matches
+    nothing raises FileNotFoundError."""
     if mode == "fsspec":
         import fsspec
 
@@ -202,17 +205,26 @@ def _list_uri_files(path: str, mode: str) -> list[str]:
         import fnmatch
 
         fs, inner = _arrow_fs(head)
-        infos = fs.get_file_info(pafs.FileSelector(inner))
-        return [
-            f"{scheme}://{i.path}" for i in infos
-            if i.is_file and fnmatch.fnmatch(i.path.rsplit("/", 1)[-1], tail)
+        matches = [
+            i for i in fs.get_file_info(pafs.FileSelector(inner, allow_not_found=True))
+            if not _hidden(i.base_name) and fnmatch.fnmatch(i.base_name, tail)
         ]
-    fs, inner = _arrow_fs(path)
-    info = fs.get_file_info(inner)
-    if info.type == pafs.FileType.Directory:
-        infos = fs.get_file_info(pafs.FileSelector(inner, recursive=True))
-        return [f"{scheme}://{i.path}" for i in infos if i.is_file]
-    return [path]
+    else:
+        fs, inner = _arrow_fs(path)
+        info = fs.get_file_info(inner)
+        matches = [] if info.type == pafs.FileType.NotFound else [info]
+    if not matches:
+        raise FileNotFoundError(f"Path does not exist: {path}")
+    files = []
+    for m in matches:
+        if m.type == pafs.FileType.Directory:
+            files.extend(
+                i.path for i in fs.get_file_info(pafs.FileSelector(m.path))
+                if i.is_file and not _hidden(i.base_name)
+            )
+        elif not _hidden(m.base_name):
+            files.append(m.path)
+    return [f"{scheme}://{p}" for p in files]
 
 
 def _iter_text_chunks(fname: str, mode: str):

@@ -2,12 +2,13 @@
 loaded counts, no-op re-runs, the restart protocol, the stage's Spark job
 budget, the one miss guard over the persisted frame, the golden batch
 shape, release of the frames a stage persists, and the driver-side POSIX
-file listing."""
+and object-store file listings."""
 
 from __future__ import annotations
 
 import json
 import os
+from functools import partial
 
 import pytest
 from pyspark.errors import AnalysisException
@@ -24,7 +25,9 @@ from mbrainz_importer_spark.operators.idempotency import (
 from mbrainz_importer_spark.pipeline import Importer
 from mbrainz_importer_spark.sources.edn_source import (
     _file_ranks,
+    _list_uri_files,
     _local_file_ranks,
+    _norm_path,
     read_edn_entities,
 )
 
@@ -168,12 +171,16 @@ def _marker(wh, type_name):
 
 def test_cold_load_job_budget(importer, spark, tmp_path):
     """The enum guard is one action over the persisted transformed frame,
-    the load stats are observed on the write, and a cold sink has no
-    done-set to read or broadcast: 11 jobs."""
-    out, jobs = _jobs(spark, "test-import-stage-cold-labels",
-                      lambda: importer.load_type("labels", str(tmp_path / "wh"), BATCH))
-    assert out == EXPECTED["labels"]
-    assert 0 < jobs <= 11
+    the numbering's boundaries are one observed quantile pass, the load
+    stats are observed on the write, and a cold sink has no done-set to
+    read or broadcast: 10 jobs for labels, 5 for a link stage."""
+    for type_name, budget in (("labels", 10), ("areleases-artists", 5)):
+        out, jobs = _jobs(
+            spark, f"test-import-stage-cold-{type_name}",
+            partial(importer.load_type, type_name, str(tmp_path / "wh"), BATCH),
+        )
+        assert out == EXPECTED[type_name]
+        assert 0 < jobs <= budget, type_name
 
 
 def test_marker_valid_reload_runs_no_job(importer, spark, tmp_path):
@@ -419,6 +426,18 @@ def test_local_listing_matches_binaryfile(spark, edn_dir, form):
     assert _local_file_ranks(path) == _file_ranks(spark, path)
 
 
+@pytest.mark.parametrize("form", [
+    "file://{d}/a.edn", "file://{d}/*.edn", "file://{d}/[ab].edn",
+    "file://{d}/*", "file://{d}",
+])
+def test_arrow_listing_matches_binaryfile(spark, edn_dir, form):
+    """The object-store listing keeps the POSIX listing's rules: no
+    hidden files, a directory's direct files, a matched directory's too."""
+    path = form.format(d=edn_dir)
+    listed = sorted(_norm_path(u) for u in _list_uri_files(path, "arrow"))
+    assert listed == sorted(_file_ranks(spark, path))
+
+
 @pytest.mark.parametrize("form", ["{d}/missing.edn", "{d}/*.zzz"])
 def test_local_listing_missing_path_raises(spark, edn_dir, form):
     path = form.format(d=edn_dir)
@@ -426,6 +445,8 @@ def test_local_listing_missing_path_raises(spark, edn_dir, form):
         _file_ranks(spark, path)
     with pytest.raises(FileNotFoundError):
         _local_file_ranks(path)
+    with pytest.raises(FileNotFoundError):
+        _list_uri_files(f"file://{path}", "arrow")
 
 
 def test_stream_read_missing_path_raises(spark, edn_dir):

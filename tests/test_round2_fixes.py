@@ -14,6 +14,8 @@
 
 from __future__ import annotations
 
+import math
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -63,16 +65,28 @@ def test_discard_with_nothing_to_discard_raises():
 # batch_size mismatch guard
 # -------------------------------------------------------------------------
 
-def test_batch_size_mismatch_raises(spark, tmp_path_factory, reference_subsets):
+def test_batch_size_mismatch_raises(spark, tmp_path_factory):
     from mbrainz_importer_spark.pipeline import Importer
+    from perfbench.corpus import make_corpus
 
-    imp = Importer(spark, reference_subsets)
+    corpus = make_corpus(1, 0.02)
+    base = str(tmp_path_factory.mktemp("corpus"))
+    corpus.write(base)
+    imp = Importer(spark, base)
     wh = str(tmp_path_factory.mktemp("wh"))
-    imp.load_type("labels", wh, batch_size=100)
+    n, bs = corpus.loaded_rows["labels"], 5
+    assert imp.load_type("labels", wh, batch_size=bs) == {
+        "txes": math.ceil(n / bs), "datoms": n,
+    }
+    loaded = spark.read.parquet(f"{wh}/loaded/labels").collect()
+    assert {r["batch_id"] for r in loaded} == {
+        f"labels-{i}" for i in range(1, math.ceil(n / bs) + 1)
+    }
+    assert sorted(r["_rn"] for r in loaded) == list(range(1, n + 1))
     with pytest.raises(ValueError, match="batch_size"):
-        imp.load_type("labels", wh, batch_size=50)
+        imp.load_type("labels", wh, batch_size=2 * bs)
     # same size is still the no-op fast path
-    assert imp.load_type("labels", wh, batch_size=100) == {"txes": 0, "datoms": 0}
+    assert imp.load_type("labels", wh, batch_size=bs) == {"txes": 0, "datoms": 0}
 
 
 # -------------------------------------------------------------------------

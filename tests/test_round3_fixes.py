@@ -1,13 +1,18 @@
-"""Regression tests for the round-3 ADVICE items: skew-adaptive bucket
-boundaries, typed (non-truncating) stable_cumsum, zero-token pack ids,
+"""Regression tests for the round-3 ADVICE items: quantile bucket
+boundaries on a skewed key, the bucket comparison tree, numbering edge
+cases, typed (non-truncating) stable_cumsum, zero-token pack ids,
 excision audit entity, and the foreachBatch tx-report envelope helper."""
 
 from __future__ import annotations
 
+import bisect
+
+import pytest
 from pyspark.sql import functions as F
 
 from mbrainz_importer_spark.operators import curation as C
 from mbrainz_importer_spark.operators.batching import (
+    _bucket_expr,
     _bucketed_with_stats,
     stable_cumsum,
     stable_row_number,
@@ -19,32 +24,64 @@ from mbrainz_importer_spark.streaming.tx_watch import (
 )
 
 
-# -- skew-adaptive boundaries ----------------------------------------------
+# -- quantile boundaries ---------------------------------------------------
 
 def _skewed_df(spark, n=2000):
     """Dense values 0..n-1 plus one extreme outlier: min/max interpolation
-    puts every dense row in bucket 0."""
+    would put every dense row in bucket 0."""
     rows = [(float(i), i) for i in range(n)] + [(1.0e12, n)]
     return spark.createDataFrame(rows, "k double, payload long")
 
 
-def test_auto_boundaries_rebucket_on_skew(spark):
+def test_quantile_boundaries_balance_a_skewed_key(spark):
     df = _skewed_df(spark)
-    bucketed, rows = _bucketed_with_stats(df, "k", 16, True, "auto", None)
+    bucketed, rows = _bucketed_with_stats(df, "k", 16, None)
     counts = sorted(r["cnt"] for r in rows)
     total = sum(counts)
-    # quantile fallback spreads the dense mass over many buckets; the
-    # interpolated bucketing would have put 2000/2001 rows in one.
+    # the quantiles spread the dense mass over many buckets; interpolated
+    # [min, max] boundaries would have put 2000/2001 rows in one.
     assert len(counts) >= 8
     assert max(counts) < total / 2
 
 
-def test_interpolate_strategy_still_degenerates(spark):
-    # the forced fast path shows the skew the auto mode fixes
-    df = _skewed_df(spark)
-    _, rows = _bucketed_with_stats(df, "k", 16, True, "interpolate", None)
-    counts = {r["cnt"] for r in rows}
-    assert max(counts) >= 2000
+@pytest.mark.parametrize("k", [1, 2, 5, 256])
+def test_bucket_tree_equals_bisect(spark, k):
+    bounds = [10 * i for i in range(k - 1)]
+    values = sorted({b + d for b in bounds for d in (-1, 0, 1)} | {-(10 ** 6), 10 ** 6})
+    df = spark.createDataFrame([(v,) for v in values] + [(None,)], "v long")
+    got = dict(df.select("v", _bucket_expr(F.col("v"), bounds).alias("b")).collect())
+    assert got == {v: bisect.bisect_left(bounds, v) for v in values} | {None: -1}
+
+
+def _ranks_and_sums(keys):
+    """Python's sorted ranks and running sums of v = 1 + |key| % 7, by key
+    (nulls first, as Spark sorts them) and then the row's index."""
+    rows = sorted(enumerate(keys), key=lambda r: (r[1] is not None, r[1], r[0]))
+    ranks, sums, acc = {}, {}, 0
+    for rank, (i, key) in enumerate(rows, start=1):
+        acc += 1 + abs(key or 0) % 7
+        ranks[i], sums[i] = rank, acc
+    return ranks, sums
+
+
+@pytest.mark.parametrize("keys", [
+    [],
+    [None, None, None],
+    [42],
+    [7] * 5,
+    [-5, 3, -(2 ** 40), 0, -1, 2 ** 40, -5],
+    [rank * 2 ** 40 + i for rank in (2, 0, 1) for i in range(4)],
+], ids=["empty", "all-null", "one-row", "one-value", "negative", "file-strided"])
+def test_numbering_edge_cases(spark, keys):
+    df = spark.createDataFrame(
+        [(k, i, 1 + abs(k or 0) % 7) for i, k in enumerate(keys)],
+        "k long, i long, v long",
+    )
+    ranks, sums = _ranks_and_sums(keys)
+    numbered = stable_row_number(df, ["k", "i"], out_col="rn").collect()
+    assert {r["i"]: r["rn"] for r in numbered} == ranks
+    summed = stable_cumsum(df, ["k", "i"], "v", out_col="c").collect()
+    assert {r["i"]: r["c"] for r in summed} == sums
 
 
 def test_stable_row_number_correct_on_skewed_key(spark):
