@@ -12,21 +12,26 @@ importer.clj:298-316):
 Here the batch_id is a column on every row, so a parquet append carries a
 batch's id atomically with its data, and the done-set is recomputed from
 the sink itself. Spark's default output committer (FileOutputCommitter,
-algorithm 1) moves part files into the sink directory only at job commit
-(uncommitted task files are invisible), so the sink only ever holds fully
-committed batches. As it runs:
+algorithm 1) renames part files into the sink directory only at job
+commit, so the sink only ever holds fully committed batches. That
+rename is atomic on a local filesystem, which is what the protocol
+relies on.
 
-  - `committed_files` lists the sink's part files and sizes through the
-    session's Hadoop FileSystem, without a Spark job. A sink with none is
-    cold: `filter_new` returns its input unchanged, with no done-set read
-    or broadcast. Otherwise it broadcast-anti-joins the input against
-    `done_ids`.
-  - `load_envelopes` anti-joins the batched rows and takes `{txes,
-    datoms}` as observed metrics of the append itself, the reference's
-    fold over the transactions it ran (batch.clj:115-135). The write is
-    the one action.
-  - `Importer.load_type` records the committed file listing in its
-    completion marker; a re-run whose listing matches runs no Spark job.
+There is one write path, `load_envelopes`, used by `Importer.load_type`
+and by every streaming `foreachBatch` sink: it anti-joins the batched
+rows against the done-set and appends the rest in one action, with
+`{txes, datoms}` observed on the append itself, the reference's fold
+over the transactions it ran (batch.clj:115-135). A sink with no
+committed part file is cold: the anti-join is skipped, with no done-set
+read or broadcast.
+
+`committed_files` lists those part files on the driver with
+`os.scandir`, as `load_type` reads and writes its completion marker and
+batch-size file with `open()`: the sink is a local directory. The
+marker records the listing, so a re-run whose listing matches runs no
+Spark job. A path with a remote scheme is refused, not listed as empty,
+because an empty listing reads as a cold sink and would drop the dedup
+on replay.
 
 No retry/backoff of its own: task retries (`spark.task.maxFailures`) plus
 committer atomicity replace the reference's busy/unavailable/429/503 loop
@@ -37,30 +42,36 @@ that loop from `operators/retry.py`.
 
 from __future__ import annotations
 
+import os
 from dataclasses import dataclass
+from urllib.parse import urlsplit
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.utils import AnalysisException
 
+from ..sources import local_path
 from .progress import observed
 
 BATCH_ID_COL = "batch_id"
 
 
-def committed_files(spark: SparkSession, path: str) -> dict[str, int]:
-    """{name: bytes} of the `part-*` files committed under `path`, listed
-    through the session's Hadoop FileSystem: no Spark job, any scheme the
-    sink accepts. A missing path lists as empty."""
-    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsparkSession.sessionState().newHadoopConf())
-    if not fs.exists(jpath):
+def committed_files(path: str) -> dict[str, int]:
+    """{name: bytes} of the `part-*` files committed under the local sink
+    `path` (a plain path or a `file:` URI), listed on the driver with no
+    Spark job. A missing path lists as empty; any other scheme raises
+    `ValueError`."""
+    local = local_path(path)
+    if urlsplit(local).scheme:
+        raise ValueError(f"sink {path!r} is not a local path")
+    try:
+        with os.scandir(local) as entries:
+            return {
+                e.name: e.stat().st_size
+                for e in entries
+                if e.name.startswith("part-") and e.is_file()
+            }
+    except FileNotFoundError:
         return {}
-    return {
-        st.getPath().getName(): st.getLen()
-        for st in fs.listStatus(jpath)
-        if st.isFile() and st.getPath().getName().startswith("part-")
-    }
 
 
 @dataclass
@@ -71,35 +82,19 @@ class IdempotentParquetSink:
 
     def done_ids(self, spark: SparkSession) -> DataFrame:
         """already-transacted (batch.clj:46-60): distinct batch ids present
-        in the sink. Column-pruned scan — only batch_id pages are read."""
-        try:
-            return spark.read.parquet(self.path).select(BATCH_ID_COL).distinct()
-        except AnalysisException:  # sink does not exist yet
-            return spark.createDataFrame([], f"{BATCH_ID_COL} string")
+        in the sink, which holds at least one committed part file.
+        Column-pruned scan — only batch_id pages are read."""
+        return spark.read.parquet(self.path).select(BATCH_ID_COL).distinct()
 
     def filter_new(self, batches: DataFrame, spark: SparkSession) -> DataFrame:
         """filter-batches (batch.clj:42-44): drop already-loaded batches.
         A cold sink has nothing to drop; otherwise the done-set is small
         (one id per 100 entities) — broadcast anti."""
-        if not committed_files(spark, self.path):
+        if not committed_files(self.path):
             return batches
         return batches.join(
             F.broadcast(self.done_ids(spark)), on=BATCH_ID_COL, how="left_anti"
         )
-
-    def load(self, batches: DataFrame, spark: SparkSession) -> dict:
-        """load-parallel analog (batch.clj:115-135) over member rows: write
-        all not-yet-done batches; parallelism is partition-level. Returns
-        {'txes': n_batches_written, 'datoms': n_rows_written} — the
-        reference's result fold (G8)."""
-        todo = self.filter_new(batches, spark)
-        stats = todo.agg(
-            F.countDistinct(BATCH_ID_COL).alias("txes"),
-            F.count(F.lit(1)).alias("datoms"),
-        ).collect()[0]
-        if stats["txes"]:
-            todo.write.mode("append").parquet(self.path)
-        return {"txes": stats["txes"], "datoms": stats["datoms"]}
 
 
 def load_envelopes(
@@ -120,83 +115,3 @@ def load_envelopes(
     todo.write.mode("append").parquet(sink.path)
     stats = obs.get
     return {"txes": stats["txes"], "datoms": stats["datoms"]}
-
-
-@dataclass
-class TxMetadataParquetSink(IdempotentParquetSink):
-    """IdempotentParquetSink + a transaction-metadata table — the faithful
-    model of the reference asserting the batch-id ON the transaction
-    entity itself (`{:db/id "datomic.tx" tx-attr "prefix-N"}`,
-    cognitect/xform/batch.clj:36-37): one tx row per committed batch,
-    in its own table, not just a column on the facts.
-
-    Scale win: the done-set query reads the TX table — O(batches) rows —
-    instead of column-scanning batch_id over the whole fact sink
-    (O(datoms) pages at 100 TB).
-
-    Commit protocol (parquet has no cross-table transaction):
-      1. `heal`: any batch present in DATA but missing from TX was
-         committed by a run that crashed between the two appends (each
-         append is committer-atomic, so its presence means ALL its rows
-         are there) — register it in TX. One column-pruned data scan per
-         RESTART, not per batch.
-      2. anti-join incoming batches against the TX done-set;
-      3. append data (commit point for the facts);
-      4. append tx rows (commit point for the done-set).
-    A crash at any step re-runs to the same final state: between 3 and 4
-    the next heal registers; before 3 nothing is visible."""
-
-    tx_path: str = ""
-
-    def __post_init__(self):
-        if not self.tx_path:
-            self.tx_path = self.path.rstrip("/") + "_tx"
-
-    def tx_table(self, spark: SparkSession) -> DataFrame:
-        try:
-            return spark.read.parquet(self.tx_path)
-        except AnalysisException:
-            return spark.createDataFrame(
-                [], f"{BATCH_ID_COL} string, n_datoms long"
-            )
-
-    def done_ids(self, spark: SparkSession) -> DataFrame:
-        """Done-set from the tx table (tiny), NOT the fact sink."""
-        return self.tx_table(spark).select(BATCH_ID_COL).distinct()
-
-    def data_ids(self, spark: SparkSession) -> DataFrame:
-        """Batch ids actually present in the fact sink (column-pruned)."""
-        return super().done_ids(spark)
-
-    def heal(self, spark: SparkSession) -> int:
-        """Register data-committed batches missing from the tx table
-        (crash between data append and tx append). Returns #healed."""
-        missing = self.data_ids(spark).join(
-            F.broadcast(self.done_ids(spark)), on=BATCH_ID_COL, how="left_anti"
-        )
-        if missing.isEmpty():
-            return 0
-        rows = (
-            spark.read.parquet(self.path)
-            .join(F.broadcast(missing), on=BATCH_ID_COL)
-            .groupBy(BATCH_ID_COL)
-            .agg(F.count(F.lit(1)).alias("n_datoms"))
-        )
-        n = rows.count()
-        rows.write.mode("append").parquet(self.tx_path)
-        return n
-
-    def load(self, batches: DataFrame, spark: SparkSession) -> dict:
-        self.heal(spark)
-        todo = self.filter_new(batches, spark)
-        stats = todo.agg(
-            F.countDistinct(BATCH_ID_COL).alias("txes"),
-            F.count(F.lit(1)).alias("datoms"),
-        ).collect()[0]
-        if stats["txes"]:
-            todo.write.mode("append").parquet(self.path)
-            tx_rows = todo.groupBy(BATCH_ID_COL).agg(
-                F.count(F.lit(1)).alias("n_datoms")
-            )
-            tx_rows.write.mode("append").parquet(self.tx_path)
-        return {"txes": stats["txes"], "datoms": stats["datoms"]}

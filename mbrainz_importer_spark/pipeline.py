@@ -31,6 +31,7 @@ from . import schema as SCH
 from .operators.batching import assign_batch_ids
 from .operators.enums import assert_no_misses, enums_dim, super_enums_dim
 from .operators.transform import TRANSFORMS, to_tx_data
+from .sources import local_path
 from .sources.edn_source import read_edn_entities, read_edn_forms_local
 
 IMPORT_ORDER = [
@@ -48,7 +49,7 @@ IMPORT_MARKER = "_IMPORT_COMPLETE.json"
 
 def read_marker(sink_path: str) -> dict | None:
     """The completion marker `load_type` wrote under `sink_path`, or None."""
-    path = f"{sink_path}/{IMPORT_MARKER}"
+    path = f"{local_path(sink_path)}/{IMPORT_MARKER}"
     if not os.path.exists(path):
         return None
     with open(path, encoding="utf-8") as fh:
@@ -199,7 +200,7 @@ class Importer:
             load_envelopes,
         )
 
-        sink_path = f"{warehouse}/loaded/{type_name}"
+        sink_path = local_path(f"{warehouse}/loaded/{type_name}")
         size_file = f"{sink_path}/_BATCH_SIZE.json"
         sink = IdempotentParquetSink(sink_path)
         marker = read_marker(sink_path)
@@ -218,7 +219,7 @@ class Importer:
             )
         if (
             marker is not None and "schema" in marker
-            and marker.get("files") == committed_files(self.spark, sink_path)
+            and marker.get("files") == committed_files(sink_path)
         ):
             return {"txes": 0, "datoms": 0}
 
@@ -233,7 +234,7 @@ class Importer:
         with open(f"{sink_path}/{IMPORT_MARKER}", "w", encoding="utf-8") as fh:
             json.dump({
                 "batch_size": batch_size,
-                "files": committed_files(self.spark, sink_path),
+                "files": committed_files(sink_path),
                 "schema": rows.schema.jsonValue(),
             }, fh)
         return result

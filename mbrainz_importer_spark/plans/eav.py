@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .. import budget
+from ..sources import local_path
 
 
 def table_datoms(df: DataFrame, table: str, id_col: str) -> DataFrame:
@@ -183,11 +184,7 @@ def _warehouse_table_dir(spark, table: str) -> str:
     exists in the (in-memory) catalog. For a live table, prefer
     `_table_location`."""
     wh = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
-    for prefix in ("file://", "file:"):
-        if wh.startswith(prefix):
-            wh = wh[len(prefix):]
-            break
-    return os.path.join(wh, table.lower())
+    return os.path.join(local_path(wh), table.lower())
 
 
 def _drop_stale_table(spark, table: str) -> None:
@@ -937,10 +934,7 @@ def _table_location(spark, table: str) -> str:
         .where("col_name = 'Location'")
         .first()[1]
     )
-    for prefix in ("file://", "file:"):
-        if loc.startswith(prefix):
-            return loc[len(prefix):]
-    return loc
+    return local_path(loc)
 
 
 def compact_store(spark, table: str, n_buckets: int | None = None) -> None:

@@ -20,6 +20,7 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame, SparkSession
 
 from .. import budget
+from . import local_path
 
 # written LAST after a successful bucketed write, next to the data —
 # the on-disk twin of the catalog's bucket spec. A crash mid-write
@@ -51,21 +52,13 @@ def table_location(spark: SparkSession, table: str) -> str:
                     f"DESCRIBE TABLE EXTENDED `{table}`"
                 ).collect()
             }
-            loc = detail.get("Location", "")
-            for prefix in ("file://", "file:"):
-                if loc.startswith(prefix):
-                    loc = loc[len(prefix):]
-                    break
+            loc = local_path(detail.get("Location", ""))
             if loc:
                 return loc
     except Exception:
         pass  # fall back to the warehouse convention
     wh = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
-    for prefix in ("file://", "file:"):
-        if wh.startswith(prefix):
-            wh = wh[len(prefix):]
-            break
-    return os.path.join(wh, table.lower())
+    return os.path.join(local_path(wh), table.lower())
 
 
 def _schema_ddl(schema, partition_col: str | None) -> str:

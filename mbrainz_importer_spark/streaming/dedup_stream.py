@@ -22,7 +22,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.dedup import incremental_near_dups, lsh_bands, shingle_rows
-from ..operators.idempotency import BATCH_ID_COL, IdempotentParquetSink
+from ..operators.idempotency import (
+    BATCH_ID_COL, IdempotentParquetSink, load_envelopes,
+)
 
 
 def dedup_foreach_batch(
@@ -56,7 +58,7 @@ def dedup_foreach_batch(
             ).withColumn(
                 BATCH_ID_COL, F.concat_ws("-", F.lit(prefix), F.lit(epoch_id))
             )
-            sink.load(verdicts, batch_df.sparkSession)
+            load_envelopes(sink, verdicts, batch_df.sparkSession)
         finally:
             n_sh.unpersist()
 

@@ -2,11 +2,15 @@
 
 The reference's protocol — batch-id asserted atomically with the data,
 restart skips present ids, duplicate delivery swallowed
-(cognitect/xform/batch.clj:93-101) — is precisely Structured Streaming's
-canonical idempotent `foreachBatch` recipe. We reuse the batch-mode
-IdempotentParquetSink: the micro-batch id becomes the batch_id column, so
-a retried/replayed micro-batch (same epoch id) is filtered out by the
-anti-join and the write is a no-op.
+(cognitect/xform/batch.clj:93-101) — is Structured Streaming's
+idempotent `foreachBatch` recipe. Every sink under streaming/ writes
+through the batch import's one write path, `load_envelopes`: the epoch
+id becomes the batch_id column, and each micro-batch is one append with
+its `{txes, datoms}` observed on the write. A cold sink appends without
+reading a done-set. A retried or replayed epoch is dropped by the
+anti-join against the ids already in the sink. Like the import, a
+micro-batch with nothing new still appends one schema-only part file,
+so a sink whose every epoch was empty exists with its schema.
 """
 
 from __future__ import annotations
@@ -15,7 +19,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from ..operators.idempotency import BATCH_ID_COL, IdempotentParquetSink
+from ..operators.idempotency import (
+    BATCH_ID_COL, IdempotentParquetSink, load_envelopes,
+)
 
 
 def idempotent_foreach_batch(sink: IdempotentParquetSink, prefix: str = "epoch"):
@@ -26,7 +32,7 @@ def idempotent_foreach_batch(sink: IdempotentParquetSink, prefix: str = "epoch")
         with_id = batch_df.withColumn(
             BATCH_ID_COL, F.concat_ws("-", F.lit(prefix), F.lit(epoch_id))
         )
-        sink.load(with_id, batch_df.sparkSession)
+        load_envelopes(sink, with_id, batch_df.sparkSession)
 
     return write
 

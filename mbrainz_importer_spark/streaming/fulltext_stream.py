@@ -30,7 +30,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.fulltext import build_fulltext_index
-from ..operators.idempotency import BATCH_ID_COL, IdempotentParquetSink
+from ..operators.idempotency import (
+    BATCH_ID_COL, IdempotentParquetSink, load_envelopes,
+)
 
 
 def indexing_foreach_batch(
@@ -46,7 +48,7 @@ def indexing_foreach_batch(
         delta = build_fulltext_index(batch_df, id_col, text_col).withColumn(
             BATCH_ID_COL, F.concat_ws("-", F.lit(prefix), F.lit(epoch_id))
         )
-        sink.load(delta, batch_df.sparkSession)
+        load_envelopes(sink, delta, batch_df.sparkSession)
 
     return write
 

@@ -24,7 +24,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from ..operators.idempotency import BATCH_ID_COL, IdempotentParquetSink
+from ..operators.idempotency import (
+    BATCH_ID_COL, IdempotentParquetSink, load_envelopes,
+)
 from ..operators.pca import integer_moments
 from ..operators.quantize import sq8_code
 
@@ -60,12 +62,10 @@ def start_moments_ingest(
 
     def fold(batch_df: DataFrame, epoch_id: int) -> None:
         summary = moments_epoch_summary(batch_df, vec_col, dim, lo, hi)
-        sink.load(
-            summary.withColumn(
-                BATCH_ID_COL, F.concat_ws("-", F.lit(prefix), F.lit(epoch_id))
-            ),
-            batch_df.sparkSession,
+        tagged = summary.withColumn(
+            BATCH_ID_COL, F.concat_ws("-", F.lit(prefix), F.lit(epoch_id))
         )
+        load_envelopes(sink, tagged, batch_df.sparkSession)
 
     return (
         vec_stream.writeStream.foreachBatch(fold)

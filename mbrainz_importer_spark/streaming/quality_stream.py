@@ -23,7 +23,9 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.classifier import linear_text_scores
 from ..operators.compress import compression_ratios
-from ..operators.idempotency import BATCH_ID_COL, IdempotentParquetSink
+from ..operators.idempotency import (
+    BATCH_ID_COL, IdempotentParquetSink, load_envelopes,
+)
 
 
 def score_batch(
@@ -64,12 +66,10 @@ def quality_foreach_batch(
 
     def write(batch_df: DataFrame, epoch_id: int) -> None:
         verdicts = score_batch(batch_df, id_col, text_col, threshold)
-        sink.load(
-            verdicts.withColumn(
-                BATCH_ID_COL, F.concat_ws("-", F.lit(prefix), F.lit(epoch_id))
-            ),
-            batch_df.sparkSession,
+        tagged = verdicts.withColumn(
+            BATCH_ID_COL, F.concat_ws("-", F.lit(prefix), F.lit(epoch_id))
         )
+        load_envelopes(sink, tagged, batch_df.sparkSession)
 
     return write
 

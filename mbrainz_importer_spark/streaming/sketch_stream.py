@@ -18,7 +18,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from ..operators.idempotency import BATCH_ID_COL, IdempotentParquetSink
+from ..operators.idempotency import (
+    BATCH_ID_COL, IdempotentParquetSink, load_envelopes,
+)
 from ..operators.sketch import mg_partials
 
 
@@ -51,12 +53,10 @@ def sketch_foreach_batch(
 ):
     def write(batch_df: DataFrame, epoch_id: int) -> None:
         summary = mg_epoch_summary(batch_df, text_col, capacity)
-        sink.load(
-            summary.withColumn(
-                BATCH_ID_COL, F.concat_ws("-", F.lit(prefix), F.lit(epoch_id))
-            ),
-            batch_df.sparkSession,
+        tagged = summary.withColumn(
+            BATCH_ID_COL, F.concat_ws("-", F.lit(prefix), F.lit(epoch_id))
         )
+        load_envelopes(sink, tagged, batch_df.sparkSession)
 
     return write
 

@@ -30,7 +30,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from ..operators.idempotency import BATCH_ID_COL, IdempotentParquetSink
+from ..operators.idempotency import (
+    BATCH_ID_COL, IdempotentParquetSink, load_envelopes,
+)
 
 LOG_COLS = ["e", "a", "v_num", "tx", "added"]
 
@@ -40,7 +42,7 @@ def tx_foreach_batch(sink: IdempotentParquetSink, prefix: str = "tx"):
         ops = batch_df.select(*LOG_COLS).withColumn(
             BATCH_ID_COL, F.concat_ws("-", F.lit(prefix), F.lit(epoch_id))
         )
-        sink.load(ops, batch_df.sparkSession)
+        load_envelopes(sink, ops, batch_df.sparkSession)
 
     return write
 

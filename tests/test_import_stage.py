@@ -23,6 +23,7 @@ from mbrainz_importer_spark.operators.idempotency import (
     load_envelopes,
 )
 from mbrainz_importer_spark.pipeline import Importer
+from mbrainz_importer_spark.sources import local_path
 from mbrainz_importer_spark.sources.edn_source import (
     _file_ranks,
     _list_uri_files,
@@ -30,6 +31,7 @@ from mbrainz_importer_spark.sources.edn_source import (
     _norm_path,
     read_edn_entities,
 )
+from tests.conftest import count_jobs
 
 NAME = T.StructType([T.StructField("name", T.StringType())])
 
@@ -151,19 +153,6 @@ def test_run_import_cold_then_noop(importer, tmp_path):
     }
 
 
-def _jobs(spark, group, fn):
-    """(fn(), number of Spark jobs it ran), counted by job group."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def _marker(wh, type_name):
     with open(f"{wh}/loaded/{type_name}/_IMPORT_COMPLETE.json", encoding="utf-8") as fh:
         return json.load(fh)
@@ -175,7 +164,7 @@ def test_cold_load_job_budget(importer, spark, tmp_path):
     stats are observed on the write, and a cold sink has no done-set to
     read or broadcast: 10 jobs for labels, 5 for a link stage."""
     for type_name, budget in (("labels", 10), ("areleases-artists", 5)):
-        out, jobs = _jobs(
+        out, jobs = count_jobs(
             spark, f"test-import-stage-cold-{type_name}",
             partial(importer.load_type, type_name, str(tmp_path / "wh"), BATCH),
         )
@@ -186,8 +175,8 @@ def test_cold_load_job_budget(importer, spark, tmp_path):
 def test_marker_valid_reload_runs_no_job(importer, spark, tmp_path):
     wh = str(tmp_path / "wh")
     importer.load_type("media", wh, BATCH)
-    out, jobs = _jobs(spark, "test-import-stage-noop-media",
-                      lambda: importer.load_type("media", wh, BATCH))
+    out, jobs = count_jobs(spark, "test-import-stage-noop-media",
+                           lambda: importer.load_type("media", wh, BATCH))
     assert out == {"txes": 0, "datoms": 0}
     assert jobs == 0
 
@@ -216,12 +205,12 @@ def test_lost_part_file_reloads_its_batches(importer, spark, tmp_path):
     sink = IdempotentParquetSink(f"{wh}/loaded/labels")
     env = importer.create_batches("labels", BATCH)
     load_envelopes(sink, env.where(F.col(BATCH_ID_COL) == "labels-1"), spark)
-    [lost] = committed_files(spark, sink.path)  # labels-1 alone
+    [lost] = committed_files(sink.path)  # labels-1 alone
     importer.load_type("labels", wh, BATCH)
     assert lost in _marker(wh, "labels")["files"]
     os.remove(f"{sink.path}/{lost}")
     assert importer.load_type("labels", wh, BATCH) == {"txes": 1, "datoms": 2}
-    files = committed_files(spark, sink.path)
+    files = committed_files(sink.path)
     assert lost not in files and _marker(wh, "labels")["files"] == files
     assert spark.read.parquet(sink.path).count() == 3
     assert importer.load_type("labels", wh, BATCH) == {"txes": 0, "datoms": 0}
@@ -244,17 +233,30 @@ def test_reload_without_file_list_takes_anti_join(importer, spark, tmp_path, mar
     if marker is not None:
         with open(path, "w", encoding="utf-8") as fh:
             json.dump(marker, fh)
-    out, jobs = _jobs(spark, f"test-import-stage-{marker is None}",
-                      lambda: importer.load_type("labels", wh, BATCH))
+    out, jobs = count_jobs(spark, f"test-import-stage-{marker is None}",
+                           lambda: importer.load_type("labels", wh, BATCH))
     assert out == {"txes": 0, "datoms": 0} and jobs > 0
     written = _marker(wh, "labels")
     schema = T.StructType.fromJson(written.pop("schema"))
     assert written == {
-        "batch_size": BATCH, "files": committed_files(spark, f"{wh}/loaded/labels")
+        "batch_size": BATCH, "files": committed_files(f"{wh}/loaded/labels")
     }
     loaded = spark.read.parquet(f"{wh}/loaded/labels")
     assert schema.fieldNames() == loaded.columns
     assert loaded.count() == 3
+
+
+def test_file_uri_warehouse_keeps_markers_beside_the_sink(importer, tmp_path, monkeypatch):
+    """A `file:` warehouse is the same local directory: the marker and the
+    batch-size file sit beside the part files, not under a relative
+    `file:` directory, and a re-load through `file://` is a no-op."""
+    monkeypatch.chdir(tmp_path)
+    wh = tmp_path / "wh"
+    assert importer.load_type("labels", f"file:{wh}", BATCH) == EXPECTED["labels"]
+    assert not os.path.exists(tmp_path / "file:")
+    assert os.path.exists(wh / "loaded" / "labels" / "_BATCH_SIZE.json")
+    assert _marker(str(wh), "labels")["files"] == committed_files(f"{wh}/loaded/labels")
+    assert importer.load_type("labels", f"file://{wh}", BATCH) == {"txes": 0, "datoms": 0}
 
 
 @pytest.mark.parametrize("rows", [
@@ -281,10 +283,57 @@ def test_cold_sink_skips_done_set(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(IdempotentParquetSink, "done_ids",
                         lambda self, spark: reads.append(1) or real(self, spark))
     assert sink.filter_new(rows, spark) is rows
-    assert sink.load(rows, spark) == {"txes": 2, "datoms": 3}
+    assert load_envelopes(sink, rows, spark) == {"txes": 2, "datoms": 3}
     assert reads == []
-    assert sink.load(rows, spark) == {"txes": 0, "datoms": 0}
+    assert load_envelopes(sink, rows, spark) == {"txes": 0, "datoms": 0}
     assert reads == [1]
+
+
+def _hadoop_part_files(spark, path):
+    """The reference listing: `part-*` files through the session's Hadoop
+    FileSystem."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    fs = jpath.getFileSystem(spark._jsparkSession.sessionState().newHadoopConf())
+    return {
+        st.getPath().getName(): st.getLen()
+        for st in fs.listStatus(jpath)
+        if st.isFile() and st.getPath().getName().startswith("part-")
+    }
+
+
+def test_committed_files_lists_local_part_files(spark, tmp_path):
+    """The sink listing sees exactly the committed part files Hadoop
+    lists: not `_SUCCESS`, checksums, markers or `_temporary/`. A `file:`
+    URI lists the same, a missing path lists nothing, and a remote scheme
+    is refused rather than read as a cold sink."""
+    sink = IdempotentParquetSink(str(tmp_path / "sink"))
+    rows = spark.createDataFrame([("b-1", 1), ("b-2", 2)], f"{BATCH_ID_COL} string, x long")
+    load_envelopes(sink, rows.repartition(2), spark)
+    load_envelopes(sink, rows.withColumn(BATCH_ID_COL, F.lit("b-3")), spark)
+    pending = tmp_path / "sink" / "_temporary" / "0"
+    pending.mkdir(parents=True)
+    (pending / "part-99999.parquet").write_bytes(b"x")
+    for marker in ("_IMPORT_COMPLETE.json", "_BATCH_SIZE.json"):
+        (tmp_path / "sink" / marker).write_text("{}")
+    names = os.listdir(sink.path)
+    assert "_SUCCESS" in names and any(n.endswith(".crc") for n in names)
+
+    files = committed_files(sink.path)
+    assert len(files) >= 2 and files == _hadoop_part_files(spark, sink.path)
+    assert committed_files(f"file:{sink.path}") == files
+    assert committed_files(f"file://{sink.path}") == files
+    assert committed_files(str(tmp_path / "missing")) == {}
+    with pytest.raises(ValueError, match="not a local path"):
+        committed_files("s3a://bucket/loaded/labels")
+
+
+@pytest.mark.parametrize("path, local", [
+    ("file:///tmp/wh", "/tmp/wh"), ("file:/tmp/wh", "/tmp/wh"),
+    ("/tmp/wh", "/tmp/wh"), ("spark-warehouse", "spark-warehouse"),
+    ("s3a://bucket/wh", "s3a://bucket/wh"),
+])
+def test_local_path_strips_only_a_file_scheme(path, local):
+    assert local_path(path) == local
 
 
 def test_stage_persists_source_and_transformed(importer, spark):

@@ -112,13 +112,14 @@ def inline_importer(spark, tmp_path):
 def test_loaded_reads_the_marker_schema_without_a_job(spark, tmp_path, inline_importer):
     """Each loaded sink is read with the schema its completion marker
     records: no schema-inference job, the columns parquet stored."""
-    from tests.test_import_stage import BATCH, EXPECTED, _jobs
+    from tests.conftest import count_jobs
+    from tests.test_import_stage import BATCH, EXPECTED
 
     wh = str(tmp_path / "wh")
     inline_importer.run_import(wh, batch_size=BATCH)
     for name in EXPECTED:
-        df, jobs = _jobs(spark, f"test-metaschema-loaded-{name}",
-                         lambda: _loaded(spark, wh, name))
+        df, jobs = count_jobs(spark, f"test-metaschema-loaded-{name}",
+                              lambda: _loaded(spark, wh, name))
         assert jobs == 0, name
         stored = spark.read.parquet(f"{wh}/loaded/{name}").drop("batch_id", "_rn")
         assert sorted(df.columns) == sorted(stored.columns), name

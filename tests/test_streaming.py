@@ -6,9 +6,14 @@ from __future__ import annotations
 
 import pytest
 
-from mbrainz_importer_spark.streaming.exactly_once import start_exactly_once
+from mbrainz_importer_spark.operators.idempotency import IdempotentParquetSink
+from mbrainz_importer_spark.streaming.exactly_once import (
+    idempotent_foreach_batch,
+    start_exactly_once,
+)
 from mbrainz_importer_spark.streaming.windows import session_counts, tumbling_counts
 from mbrainz_importer_spark.tables import load
+from tests.conftest import count_jobs
 
 SF = "/root/testdata/sf0.001"
 
@@ -83,6 +88,41 @@ def test_exactly_once_sink_restart_and_replay(spark, events_dir, events_stream_s
     q3 = start_exactly_once(stream3, sink_path, ckpt2)
     q3.awaitTermination(120)
     assert spark.read.parquet(sink_path).count() == n1
+
+
+def test_exactly_once_micro_batch_job_budget(spark, tmp_path):
+    """Each micro-batch is one observed append: a cold epoch runs the
+    write alone, a warm one adds the done-set read and broadcast, and a
+    replayed one writes nothing new."""
+    src = tmp_path / "src"
+    for i in range(3):
+        spark.createDataFrame([(i, j) for j in range(10)], "f int, x long") \
+            .coalesce(1).write.parquet(str(src / f"f{i}"))
+    sink = IdempotentParquetSink(str(tmp_path / "sink"))
+    write = idempotent_foreach_batch(sink)
+    jobs = []
+
+    def counted(batch_df, epoch_id):
+        group = f"test-streaming-budget-{len(jobs)}"
+        jobs.append(count_jobs(spark, group, lambda: write(batch_df, epoch_id))[1])
+
+    def run(ckpt):
+        stream = (
+            spark.readStream.schema("f int, x long")
+            .option("maxFilesPerTrigger", 1)
+            .parquet(f"{src}/*/")
+        )
+        stream.writeStream.foreachBatch(counted).option(
+            "checkpointLocation", str(tmp_path / ckpt)
+        ).trigger(availableNow=True).start().awaitTermination(120)
+
+    run("ckpt")
+    n = spark.read.parquet(sink.path).count()
+    run("ckpt-replay")  # fresh checkpoint: every epoch id is delivered again
+    cold, *warm = jobs[:3]
+    assert len(jobs) == 6 and n == 30
+    assert cold == 1 and max(warm) <= 3 and max(jobs[3:]) <= 4, jobs
+    assert spark.read.parquet(sink.path).count() == n
 
 
 def test_streaming_dim_enriched_equals_batch(spark, events_dir, events_stream_schema):
