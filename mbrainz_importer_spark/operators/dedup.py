@@ -527,7 +527,7 @@ def incremental_near_dups(
     verify join, sizes). When `new_shingles` is None they are computed
     and cached HERE and the cache lives until LRU eviction — fine for a
     one-shot call, a leak if called in a loop. Repeated callers (the
-    foreachBatch wrapper, streaming/dedup_stream.py) pass `new_shingles`
+    foreachBatch fold, streaming/dedup_stream.py) pass `new_shingles`
     cached by the caller and unpersist it once the batch's result is
     materialized."""
     if corpus is None and (corpus_bands is None or corpus_shingles is None):

@@ -17,13 +17,14 @@ commit, so the sink only ever holds fully committed batches. That
 rename is atomic on a local filesystem, which is what the protocol
 relies on.
 
-There is one write path, `load_envelopes`, used by `Importer.load_type`
-and by every streaming `foreachBatch` sink: it anti-joins the batched
-rows against the done-set and appends the rest in one action, with
+There is one write, `IdempotentParquetSink.append`: one action, with
 `{txes, datoms}` observed on the append itself, the reference's fold
-over the transactions it ran (batch.clj:115-135). A sink with no
-committed part file is cold: the anti-join is skipped, with no done-set
-read or broadcast.
+over the transactions it ran (batch.clj:115-135). `Importer.load_type`
+reaches it through `load_envelopes`, which first anti-joins the batched
+rows against the done-set. A streaming epoch carries one batch id, so
+its ledger (streaming/exactly_once.py) asks `holds` instead and skips
+the epoch whole. A sink with no committed part file is cold: neither
+check reads it.
 
 `committed_files` lists those part files on the driver with
 `os.scandir`, as `load_type` reads and writes its completion marker and
@@ -50,7 +51,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources import local_path
-from .progress import observed
+from .progress import observe_metrics, observed
 
 BATCH_ID_COL = "batch_id"
 
@@ -80,11 +81,23 @@ class IdempotentParquetSink:
 
     path: str
 
+    def _batch_ids(self, spark: SparkSession) -> DataFrame:
+        # one known column: no schema-inference job
+        return spark.read.schema(f"{BATCH_ID_COL} string").parquet(self.path)
+
     def done_ids(self, spark: SparkSession) -> DataFrame:
         """already-transacted (batch.clj:46-60): distinct batch ids present
         in the sink, which holds at least one committed part file.
         Column-pruned scan — only batch_id pages are read."""
-        return spark.read.parquet(self.path).select(BATCH_ID_COL).distinct()
+        return self._batch_ids(spark).distinct()
+
+    def holds(self, spark: SparkSession, batch_id: str) -> bool:
+        """Whether a committed part file carries `batch_id`: no job on a
+        cold sink, else one scan with no exchange."""
+        if not committed_files(self.path):
+            return False
+        hits = self._batch_ids(spark).where(F.col(BATCH_ID_COL) == batch_id)
+        return observe_metrics(hits, "holds", rows=F.count(F.lit(1)))["rows"] > 0
 
     def filter_new(self, batches: DataFrame, spark: SparkSession) -> DataFrame:
         """filter-batches (batch.clj:42-44): drop already-loaded batches.
@@ -96,22 +109,27 @@ class IdempotentParquetSink:
             F.broadcast(self.done_ids(spark)), on=BATCH_ID_COL, how="left_anti"
         )
 
+    def append(self, rows: DataFrame) -> dict:
+        """Append batched rows (batch_id, data columns) in one action, with
+        `{txes, datoms}` observed in the write's result stage. Observed
+        metrics reject DISTINCT, so `txes` is the size of the collected
+        batch-id set: one entry per batch. An empty frame reports {0, 0}
+        and still appends a schema-only part file."""
+        todo, obs = observed(
+            rows, "load_envelopes",
+            txes=F.size(F.collect_set(BATCH_ID_COL)),
+            datoms=F.count(F.lit(1)),
+        )
+        todo.write.mode("append").parquet(self.path)
+        stats = obs.get
+        return {"txes": stats["txes"], "datoms": stats["datoms"]}
+
 
 def load_envelopes(
     sink: IdempotentParquetSink, rows: DataFrame, spark: SparkSession
 ) -> dict:
-    """Load batched rows (batch_id, data columns) in one action: the rows
-    of not-yet-loaded batches are appended, and `{txes, datoms}` are
-    observed on them in the write's result stage. Observed metrics reject
-    DISTINCT, so `txes` is the size of the collected batch-id set: one
-    entry per batch, as many as the done-set the anti-join broadcasts. A
-    write that finds nothing new reports {0, 0} and still appends one
-    schema-only part file."""
-    todo, obs = observed(
-        sink.filter_new(rows, spark), "load_envelopes",
-        txes=F.size(F.collect_set(BATCH_ID_COL)),
-        datoms=F.count(F.lit(1)),
-    )
-    todo.write.mode("append").parquet(sink.path)
-    stats = obs.get
-    return {"txes": stats["txes"], "datoms": stats["datoms"]}
+    """Load batched rows (batch_id, data columns): the rows of
+    not-yet-loaded batches are appended in one action, which returns
+    `{txes, datoms}`. A load that finds nothing new reports {0, 0} and
+    still appends one schema-only part file."""
+    return sink.append(sink.filter_new(rows, spark))

@@ -81,7 +81,7 @@ def stream_covariance_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     out as 4 parquet drops and drained through Trigger.AvailableNow with
     maxFilesPerTrigger=1 (≥4 data-carrying epochs), each epoch SQ8-coded
     with the corpus-trained grid (the fixed artifact) and reduced to its
-    bounded moments summary through the idempotent epoch sink
+    bounded moments summary through the epoch ledger
     (streaming/moments_ingest.py). The merged history must hash-equal
     the SAME corpus-wide DuckDB oracle as the batch face — the stream,
     the incremental merge, and the single pass are one certified

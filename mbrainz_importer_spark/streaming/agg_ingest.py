@@ -1,21 +1,17 @@
-"""Streaming aggregation into the maintained view — the fourth ingest
-face (datoms, vectors, docs, now grouped aggregates): each micro-batch
+"""Streaming aggregation into the maintained view: each micro-batch
 partial-aggregates and folds into the stored state through
-merge_agg_increment (operators/matview.py).
-
-Exactly-once comes from composing Structured Streaming's replay with
-the view's ledger: foreachBatch re-delivers a batch with the SAME
-epoch id after a failure, the epoch id IS the ledger batch id, so the
-replayed delta is skipped whole — the canonical idempotent-sink recipe
-(checkpoint gives at-least-once, the target dedupes on batch id), and
-the view's stamped-stage crash protocol covers a crash inside the
-merge itself.
+merge_agg_increment (operators/matview.py), whose ledger takes the
+epoch id as its batch id (replay contract: streaming/exactly_once.py).
+The view's stamped-stage crash protocol covers a crash inside the merge
+itself.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
+
+from .exactly_once import drain
 
 
 def start_agg_ingest(
@@ -36,9 +32,4 @@ def start_agg_ingest(
             weight_col=weight_col,
         )
 
-    return (
-        row_stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return drain(row_stream, checkpoint, fold)

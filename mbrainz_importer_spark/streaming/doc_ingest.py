@@ -1,14 +1,11 @@
-"""Streaming document ingest into the materialized fulltext index —
-the third ingest face next to tx_ingest.start_store_indexing (datom
-store) and vector_ingest.start_ivf_ingest (IVF lists): arriving
-document micro-batches fold through merge_fulltext_increment
+"""Streaming document ingest into the materialized fulltext index:
+arriving document micro-batches fold through merge_fulltext_increment
 (operators/fulltext.py), so the postings stay query-fresh per epoch
 while each batch rewrites only the term-hash partitions it touches.
 
-Replay-safe without a batch-id sink: the merge's membership probe
-(doc-hash-pruned doclen anti-join) dissolves redelivered docs, so a
-re-delivered epoch re-merges to the same index content and the same
-stats. Tombstoned (excised) ids are dropped by the merge itself — the
+The merge's membership probe (doc-hash-pruned doclen anti-join)
+dissolves redelivered docs, which makes the fold content-idempotent.
+Tombstoned (excised) ids are dropped by the merge itself — the
 delete-then-readd contract holds under streaming too.
 """
 
@@ -16,6 +13,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
+
+from .exactly_once import drain
 
 
 def start_fulltext_ingest(
@@ -36,9 +35,4 @@ def start_fulltext_ingest(
             text_col=text_col,
         )
 
-    return (
-        doc_stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return drain(doc_stream, checkpoint, fold)

@@ -5,9 +5,8 @@ The batch path builds the postings (term, doc, tf) in one shot
 arrive continuously, and rebuilding the index per arrival is O(corpus).
 This module maintains the SAME postings table incrementally: each
 micro-batch tokenizes only its own documents and appends its postings
-delta through the idempotent epoch sink — a retried or replayed
-micro-batch no-ops on the batch-id anti-join, the exactly-once recipe
-of streaming/exactly_once.py, so the index never double-counts a term.
+delta through the epoch ledger (streaming/exactly_once.py), so a
+retried or replayed micro-batch never double-counts a term.
 
 No read-side compaction is needed: a document's postings land entirely
 within its own micro-batch (tf is aggregated per batch over whole
@@ -26,31 +25,11 @@ micro-batch, never a touch of the existing index.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.fulltext import build_fulltext_index
-from ..operators.idempotency import (
-    BATCH_ID_COL, IdempotentParquetSink, load_envelopes,
-)
-
-
-def indexing_foreach_batch(
-    sink: IdempotentParquetSink,
-    id_col: str,
-    text_col: str,
-    prefix: str = "ft",
-):
-    """The (batch_df, epoch_id) function for foreachBatch: tokenize the
-    micro-batch into its postings delta and load it idempotently."""
-
-    def write(batch_df: DataFrame, epoch_id: int) -> None:
-        delta = build_fulltext_index(batch_df, id_col, text_col).withColumn(
-            BATCH_ID_COL, F.concat_ws("-", F.lit(prefix), F.lit(epoch_id))
-        )
-        load_envelopes(sink, delta, batch_df.sparkSession)
-
-    return write
+from ..operators.idempotency import IdempotentParquetSink
+from .exactly_once import drain, idempotent_foreach_batch
 
 
 def start_fulltext_indexing(
@@ -60,18 +39,13 @@ def start_fulltext_indexing(
     index_path: str,
     checkpoint: str,
 ) -> StreamingQuery:
-    """Wire a document stream into the incrementally-maintained postings
-    index (availableNow: drain everything pending, then stop — the
-    bounded-stream mode used throughout streaming/)."""
-    sink = IdempotentParquetSink(index_path)
-    return (
-        doc_stream.writeStream.foreachBatch(
-            indexing_foreach_batch(sink, id_col, text_col)
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    """Drain a document stream into the incrementally-maintained
+    postings index at `index_path`: each micro-batch appends its
+    tokenized postings delta."""
+    return drain(doc_stream, checkpoint, idempotent_foreach_batch(
+        IdempotentParquetSink(index_path), "ft",
+        lambda df: build_fulltext_index(df, id_col, text_col),
+    ))
 
 
 def read_postings(spark: SparkSession, index_path: str) -> DataFrame:

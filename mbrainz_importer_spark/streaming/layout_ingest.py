@@ -1,21 +1,18 @@
-"""Streaming ingest into the bucketed fact layout — the fifth ingest
-face (datoms, vectors, docs, aggregates, now the layout itself): each
-micro-batch folds into the bucketed table through the exactly-once
-append (`sources/bucketed.py:append_bucketed_once` — staged
-bucket-spec'd files, manifest-committed moves, epoch ledger), and the
-compaction cadence runs INSIDE the sink: when the census flags the
-accumulated append files, `compact_bucketed` collapses every bucket
-back to its single sorted file before the next epoch lands.
+"""Streaming ingest into the bucketed fact layout: each micro-batch
+folds into the bucketed table through the exactly-once append
+(`sources/bucketed.py:append_bucketed_once` — staged bucket-spec'd
+files, manifest-committed moves, epoch ledger), and the compaction
+cadence runs INSIDE the sink: when the census flags the accumulated
+append files, `compact_bucketed` collapses every bucket back to its
+single sorted file before the next epoch lands.
 
-Exactly-once is the same composition as the other ingest faces:
-Structured Streaming replays a failed batch with the SAME epoch id,
-the epoch id is the ledger batch id, so a replayed epoch is skipped
-whole (or its half-moved files are completed from the manifest — see
-append_bucketed_once's crash table). The ledger survives compaction
-because `compact_bucketed` moves only bucket DATA files and never
-rewrites the table location wholesale — underscore-prefixed files
-(`_append_ledger.json` among them) are skipped by its file census and
-left in place. Any future compaction strategy that drops/rebuilds the
+The append's ledger takes the epoch id as its batch id (replay
+contract: streaming/exactly_once.py); a replayed epoch's half-moved
+files are completed from the manifest (append_bucketed_once's crash
+table). The ledger survives compaction because `compact_bucketed`
+moves only bucket DATA files and never rewrites the table location
+wholesale — underscore-prefixed files (`_append_ledger.json` among
+them) are skipped by its file census and left in place. Any future compaction strategy that drops/rebuilds the
 location must re-record the ledger explicitly, or a replayed epoch
 could re-append after a rewrite.
 """
@@ -24,6 +21,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
+
+from .exactly_once import drain
 
 
 def start_layout_ingest(
@@ -55,9 +54,4 @@ def start_layout_ingest(
         ):
             compact_bucketed(spark, table)
 
-    return (
-        row_stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return drain(row_stream, checkpoint, fold)

@@ -1,16 +1,15 @@
 """Streaming covariance-moment maintenance — the PCA tier's ingest
 path, the same mergeable-summaries recipe as sketch_stream: each
 micro-batch reduces to its bounded moments frame (d(d+1)/2 rows of
-exact sums — operators/pca.integer_moments), appends through the
-idempotent epoch sink, and the READ side merges epochs by addition
-(operators/pca.merge_integer_moments semantics, inlined as one
+exact sums — operators/pca.integer_moments), appends through the epoch
+ledger (streaming/exactly_once.py), and the READ side merges epochs by
+addition (operators/pca.merge_integer_moments semantics, inlined as one
 groupBy). The raw vector stream is never re-seen; the covariance /
 PCA fit over the whole history is always one tiny aggregation away.
 
-Replay safety matters MORE here than for the index ingests: ANN merges
-dedupe by vector id, but moment sums are not idempotent — a replayed
-epoch would double-count silently. The batch-id anti-join sink is the
-correctness mechanism, and the replay test pins it.
+Moment sums are not idempotent — a replayed epoch would double-count
+silently — so the ledger is the correctness mechanism, and the replay
+test pins it.
 
 Quantization contract: pass the SQ8 grid (lo, hi) trained offline to
 run the certified integer regime (the fixed-artifact rule — a grid
@@ -24,11 +23,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from ..operators.idempotency import (
-    BATCH_ID_COL, IdempotentParquetSink, load_envelopes,
-)
+from ..operators.idempotency import IdempotentParquetSink
 from ..operators.pca import integer_moments
 from ..operators.quantize import sq8_code
+from .exactly_once import drain, idempotent_foreach_batch
 
 
 def moments_epoch_summary(
@@ -58,21 +56,10 @@ def start_moments_ingest(
     hi: list[float] | None = None,
     prefix: str = "mom",
 ) -> StreamingQuery:
-    sink = IdempotentParquetSink(sink_path)
-
-    def fold(batch_df: DataFrame, epoch_id: int) -> None:
-        summary = moments_epoch_summary(batch_df, vec_col, dim, lo, hi)
-        tagged = summary.withColumn(
-            BATCH_ID_COL, F.concat_ws("-", F.lit(prefix), F.lit(epoch_id))
-        )
-        load_envelopes(sink, tagged, batch_df.sparkSession)
-
-    return (
-        vec_stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return drain(vec_stream, checkpoint, idempotent_foreach_batch(
+        IdempotentParquetSink(sink_path), prefix,
+        lambda df: moments_epoch_summary(df, vec_col, dim, lo, hi),
+    ))
 
 
 def read_merged_moments(spark: SparkSession, sink_path: str) -> DataFrame:

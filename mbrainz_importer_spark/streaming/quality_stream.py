@@ -1,10 +1,9 @@
 """Streaming quality scoring — the foreachBatch face of the per-row
 quality signals (hashed-linear classifier score + zlib compression
 ratio + keep verdict): a document stream is scored micro-batch by
-micro-batch and the verdicts append through the idempotent epoch sink,
-so a replayed or retried batch never duplicates a verdict row — the
-same exactly-once recipe as streaming/dedup_stream.py and
-streaming/fulltext_stream.py.
+micro-batch and the verdicts append through the epoch ledger
+(streaming/exactly_once.py), so a replayed or retried batch never
+duplicates a verdict row.
 
 Both signals are pure per-row projections (no state, no shuffle), so
 per-batch cost is O(batch) with nothing carried between epochs — the
@@ -23,9 +22,8 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.classifier import linear_text_scores
 from ..operators.compress import compression_ratios
-from ..operators.idempotency import (
-    BATCH_ID_COL, IdempotentParquetSink, load_envelopes,
-)
+from ..operators.idempotency import IdempotentParquetSink
+from .exactly_once import drain, idempotent_foreach_batch
 
 
 def score_batch(
@@ -55,25 +53,6 @@ def score_batch(
     )
 
 
-def quality_foreach_batch(
-    sink: IdempotentParquetSink,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    threshold: float = 0.0,
-    prefix: str = "qs",
-):
-    """The (batch_df, epoch_id) function for foreachBatch."""
-
-    def write(batch_df: DataFrame, epoch_id: int) -> None:
-        verdicts = score_batch(batch_df, id_col, text_col, threshold)
-        tagged = verdicts.withColumn(
-            BATCH_ID_COL, F.concat_ws("-", F.lit(prefix), F.lit(epoch_id))
-        )
-        load_envelopes(sink, tagged, batch_df.sparkSession)
-
-    return write
-
-
 def start_quality_scoring(
     doc_stream: DataFrame,
     out_path: str,
@@ -82,17 +61,11 @@ def start_quality_scoring(
     text_col: str = "text",
     threshold: float = 0.0,
 ) -> StreamingQuery:
-    """Wire a document stream into the scorer (availableNow: drain
-    pending input, then stop)."""
-    sink = IdempotentParquetSink(out_path)
-    return (
-        doc_stream.writeStream.foreachBatch(
-            quality_foreach_batch(sink, id_col, text_col, threshold)
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    """Drain a document stream through the scorer into `out_path`."""
+    return drain(doc_stream, checkpoint, idempotent_foreach_batch(
+        IdempotentParquetSink(out_path), "qs",
+        lambda df: score_batch(df, id_col, text_col, threshold),
+    ))
 
 
 def read_verdicts(spark: SparkSession, out_path: str) -> DataFrame:

@@ -1,12 +1,10 @@
 """Streaming heavy hitters — Misra–Gries over micro-batches, the
 mergeable-summaries property doing exactly what it was invented for:
 each epoch's bounded summary (≤ capacity × partitions rows) appends
-through the idempotent epoch sink, and the READ side merges summaries
+through the epoch ledger, and the READ side merges summaries
 across every epoch — additive counts, additive error bounds — without
-ever re-seeing the raw stream.
-
-Replay safety is the usual batch-id recipe; because a replayed epoch is
-dropped by the sink's anti-join, the merged estimate never double
+ever re-seeing the raw stream. A replayed epoch is skipped by the
+ledger (streaming/exactly_once.py), so the merged estimate never double
 counts. In the exact regime (capacity ≥ per-partition vocabulary) every
 epoch error is 0 and the merged result EQUALS the batch count — the
 property tests/test_sketch_stream.py pins.
@@ -18,10 +16,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from ..operators.idempotency import (
-    BATCH_ID_COL, IdempotentParquetSink, load_envelopes,
-)
+from ..operators.idempotency import BATCH_ID_COL, IdempotentParquetSink
 from ..operators.sketch import mg_partials
+from .exactly_once import drain, idempotent_foreach_batch
 
 
 def mg_epoch_summary(
@@ -45,22 +42,6 @@ def mg_epoch_summary(
     )
 
 
-def sketch_foreach_batch(
-    sink: IdempotentParquetSink,
-    text_col: str = "text",
-    capacity: int = 64,
-    prefix: str = "mg",
-):
-    def write(batch_df: DataFrame, epoch_id: int) -> None:
-        summary = mg_epoch_summary(batch_df, text_col, capacity)
-        tagged = summary.withColumn(
-            BATCH_ID_COL, F.concat_ws("-", F.lit(prefix), F.lit(epoch_id))
-        )
-        load_envelopes(sink, tagged, batch_df.sparkSession)
-
-    return write
-
-
 def start_heavy_hitters(
     doc_stream: DataFrame,
     out_path: str,
@@ -68,15 +49,10 @@ def start_heavy_hitters(
     text_col: str = "text",
     capacity: int = 64,
 ) -> StreamingQuery:
-    sink = IdempotentParquetSink(out_path)
-    return (
-        doc_stream.writeStream.foreachBatch(
-            sketch_foreach_batch(sink, text_col, capacity)
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return drain(doc_stream, checkpoint, idempotent_foreach_batch(
+        IdempotentParquetSink(out_path), "mg",
+        lambda df: mg_epoch_summary(df, text_col, capacity),
+    ))
 
 
 def read_heavy_hitters(

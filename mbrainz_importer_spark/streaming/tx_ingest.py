@@ -8,9 +8,9 @@ Shape:
 - the incoming stream carries (e, a, v_num, tx, added) ops — a
   transaction id stamped upstream (the import pipeline's batch ids, or
   any monotonic epoch counter);
-- each micro-batch appends through the idempotent epoch sink, so a
-  replayed epoch never double-writes ops (exactly-once, the same
-  batch-id recipe as every sink here);
+- each micro-batch appends through the epoch ledger
+  (streaming/exactly_once.py), so a replayed epoch never double-writes
+  ops;
 - the accumulated parquet IS a history log: read_tx_log hands it to
   as_of / since / history / tx_range unchanged, so a query at any t
   sees exactly the transactions ingested up to t — stream==batch
@@ -30,21 +30,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from ..operators.idempotency import (
-    BATCH_ID_COL, IdempotentParquetSink, load_envelopes,
-)
+from ..operators.idempotency import IdempotentParquetSink
+from .exactly_once import drain, idempotent_foreach_batch
 
 LOG_COLS = ["e", "a", "v_num", "tx", "added"]
-
-
-def tx_foreach_batch(sink: IdempotentParquetSink, prefix: str = "tx"):
-    def write(batch_df: DataFrame, epoch_id: int) -> None:
-        ops = batch_df.select(*LOG_COLS).withColumn(
-            BATCH_ID_COL, F.concat_ws("-", F.lit(prefix), F.lit(epoch_id))
-        )
-        load_envelopes(sink, ops, batch_df.sparkSession)
-
-    return write
 
 
 def start_tx_ingest(
@@ -52,14 +41,10 @@ def start_tx_ingest(
     out_path: str,
     checkpoint: str,
 ) -> StreamingQuery:
-    """Wire an op stream into the durable log (availableNow)."""
-    sink = IdempotentParquetSink(out_path)
-    return (
-        op_stream.writeStream.foreachBatch(tx_foreach_batch(sink))
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    """Drain an op stream into the durable log at `out_path`."""
+    return drain(op_stream, checkpoint, idempotent_foreach_batch(
+        IdempotentParquetSink(out_path), "tx", lambda df: df.select(*LOG_COLS)
+    ))
 
 
 def read_tx_log(spark: SparkSession, out_path: str) -> DataFrame:
@@ -92,11 +77,9 @@ def start_store_indexing(
     the current-state attribute-partitioned store
     (plans/eav.merge_datoms_increment) — the streaming face of the
     background index job, for deployments that want the store fresh
-    per micro-batch instead of on a compaction cadence. Replay-safe
-    WITHOUT a batch-id sink: the merge is content-idempotent (set
-    semantics + max-tx displacement), so a re-delivered epoch re-merges
-    to the same store. Each batch rewrites only the attribute
-    partitions it touches."""
+    per micro-batch instead of on a compaction cadence. The merge is
+    content-idempotent (set semantics + max-tx displacement). Each
+    batch rewrites only the attribute partitions it touches."""
     from ..plans.eav import merge_datoms_increment
 
     def index(batch_df: DataFrame, epoch_id: int) -> None:
@@ -107,12 +90,7 @@ def start_store_indexing(
             card_many,
         )
 
-    return (
-        op_stream.writeStream.foreachBatch(index)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return drain(op_stream, checkpoint, index)
 
 
 DATOM_OP_COLS = ["e", "a", "v", "v_num", "tx", "added"]
@@ -139,11 +117,8 @@ def start_datom_ingest(
     healthy store is never due and the census is the only per-epoch
     price.
 
-    Replay-safe WITHOUT an epoch ledger: the merge is
-    content-idempotent (set semantics + max-tx displacement), so a
-    redelivered epoch re-merges to the same store — the same contract
-    `start_store_indexing` documents for the path-based store, plus
-    the swap manifest for crash windows inside a single merge.
+    The merge is content-idempotent, as in `start_store_indexing`;
+    the swap manifest covers crash windows inside a single merge.
 
     Reader contract: foreachBatch runs on a CLONED session, whose
     refreshTable cannot invalidate another session's relation cache —
@@ -165,12 +140,7 @@ def start_datom_ingest(
             spark, table, max_files_per_bucket=max_files_per_bucket
         )
 
-    return (
-        op_stream.writeStream.foreachBatch(index)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return drain(op_stream, checkpoint, index)
 
 
 def compact_log(spark: SparkSession, out_path: str, store_path: str) -> None:

@@ -1,9 +1,8 @@
-"""Streaming embedding ingest into the materialized IVF index — the
-vector twin of tx_ingest.start_store_indexing: arrival micro-batches
-fold through merge_ivf_increment (operators/ann.py), so the inverted
-lists stay fresh per epoch and only the cells each batch lands in
-rewrite. Replay-safe without a batch-id sink: the merge dedupes by
-vector id, so a re-delivered epoch re-merges to the same index.
+"""Streaming embedding ingest into the materialized IVF index: arrival
+micro-batches fold through merge_ivf_increment (operators/ann.py), so
+the inverted lists stay fresh per epoch and only the cells each batch
+lands in rewrite. The merge dedupes by vector id, which makes the fold
+content-idempotent.
 
 The centroids are plan literals (trained offline, the IVF contract) —
 a re-train cadence swaps them and re-materializes, exactly the
@@ -13,6 +12,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
+
+from .exactly_once import drain
 
 
 def start_ivf_ingest(
@@ -32,12 +33,7 @@ def start_ivf_ingest(
             id_col=id_col, vec_col=vec_col,
         )
 
-    return (
-        vec_stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return drain(vec_stream, checkpoint, fold)
 
 
 def start_ivf_pq_ingest(
@@ -64,12 +60,7 @@ def start_ivf_pq_ingest(
             id_col=id_col, vec_col=vec_col,
         )
 
-    return (
-        vec_stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return drain(vec_stream, checkpoint, fold)
 
 
 def start_ivf_pq_refine_ingest(
@@ -99,9 +90,4 @@ def start_ivf_pq_refine_ingest(
             lo, hi, dim, id_col=id_col, vec_col=vec_col,
         )
 
-    return (
-        vec_stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return drain(vec_stream, checkpoint, fold)

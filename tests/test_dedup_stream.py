@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import pytest
 
+from mbrainz_importer_spark.operators.idempotency import committed_files
 from mbrainz_importer_spark.operators.dedup import incremental_near_dups
 from mbrainz_importer_spark.streaming.dedup_stream import (
     read_verdicts,
@@ -65,9 +66,10 @@ def test_stream_verdicts_equal_batch_and_replay_safe(spark, stream_dirs, tmp_pat
     assert (3, 1) in got and (2, 1) in got
     assert not any(d == 5 for (d, _) in got)
 
-    # replayed delivery with a fresh checkpoint: batch-id anti-join
-    # swallows the duplicates, the verdict table does not grow
+    # replayed delivery with a fresh checkpoint: every epoch id is held,
+    # so the verdict table gains no row and no part file
     n = streamed.count()
+    files = committed_files(out_path)
     stream2 = (
         spark.readStream.schema("doc_id long, text string")
         .option("maxFilesPerTrigger", 1)
@@ -79,6 +81,7 @@ def test_stream_verdicts_equal_batch_and_replay_safe(spark, stream_dirs, tmp_pat
     )
     q2.awaitTermination(120)
     assert read_verdicts(spark, out_path).count() == n
+    assert committed_files(out_path) == files
 
 
 def test_operator_requires_corpus_or_index(spark):

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import pytest
 
+from mbrainz_importer_spark.operators.idempotency import committed_files
 from mbrainz_importer_spark.operators.fulltext import (
     build_fulltext_index,
     fulltext_bm25_topk,
@@ -81,8 +82,9 @@ def test_stream_index_equals_batch_and_replay_safe(spark, docs_dir, tmp_path_fac
     q2.awaitTermination(120)
     assert read_postings(spark, index_path).count() == n
 
-    # replayed delivery (fresh checkpoint, same epoch ids): the batch-id
-    # anti-join swallows it — the index never double-counts a term
+    # replayed delivery (fresh checkpoint, same epoch ids): every epoch
+    # id is held — the index never double-counts a term
+    files = committed_files(index_path)
     ckpt2 = str(base / "ckpt2")
     stream3 = (
         spark.readStream.schema("doc_id int, text string")
@@ -92,3 +94,4 @@ def test_stream_index_equals_batch_and_replay_safe(spark, docs_dir, tmp_path_fac
     q3 = start_fulltext_indexing(stream3, "doc_id", "text", index_path, ckpt2)
     q3.awaitTermination(120)
     assert read_postings(spark, index_path).count() == n
+    assert committed_files(index_path) == files

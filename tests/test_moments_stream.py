@@ -1,11 +1,12 @@
 """Streaming covariance moments (streaming/moments_ingest.py): drained
 stream == single batch pass; replays never double-count (moment sums
-are NOT idempotent, so the epoch sink is the correctness mechanism)."""
+are NOT idempotent, so the epoch ledger is the correctness mechanism)."""
 
 from __future__ import annotations
 
 import pytest
 
+from mbrainz_importer_spark.operators.idempotency import committed_files
 from mbrainz_importer_spark.operators.pca import integer_moments
 from mbrainz_importer_spark.streaming.moments_ingest import (
     read_merged_moments, start_moments_ingest,
@@ -47,11 +48,13 @@ def test_drained_stream_equals_batch_and_replay_safe(spark, drops, tmp_path_fact
     got = _key(read_merged_moments(spark, out).collect())
     assert got == want
 
-    # full replay with a fresh checkpoint: same epoch ids, anti-joined
-    # away — sums unchanged (addition is not idempotent; the sink is)
+    # full replay with a fresh checkpoint: same epoch ids, skipped —
+    # sums unchanged (addition is not idempotent; the ledger is)
+    files = committed_files(out)
     q2 = start_moments_ingest(stream(), out, str(base / "ckpt2"), dim=2)
     q2.awaitTermination(120)
     assert _key(read_merged_moments(spark, out).collect()) == want
+    assert committed_files(out) == files
 
 
 def test_grid_args_must_come_together(spark):

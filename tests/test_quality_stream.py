@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import pytest
 
+from mbrainz_importer_spark.operators.idempotency import committed_files
 from mbrainz_importer_spark.streaming.quality_stream import (
     read_verdicts,
     score_batch,
@@ -62,7 +63,8 @@ def test_stream_equals_batch_and_replay_safe(spark, stream_dirs, tmp_path_factor
     verdicts = {r["doc_id"]: r["keep"] for r in streamed.collect()}
     assert verdicts[2] is False
 
-    # replay with a fresh checkpoint: epoch batch-ids dedupe, no growth
+    # replay with a fresh checkpoint: every epoch id is held, no growth
+    files = committed_files(out_path)
     stream2 = (
         spark.readStream.schema("doc_id long, text string")
         .option("maxFilesPerTrigger", 1)
@@ -72,3 +74,4 @@ def test_stream_equals_batch_and_replay_safe(spark, stream_dirs, tmp_path_factor
                                threshold=-1.0)
     q2.awaitTermination(120)
     assert read_verdicts(spark, out_path).count() == 4
+    assert committed_files(out_path) == files

@@ -8,6 +8,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from mbrainz_importer_spark.operators.idempotency import committed_files
 from mbrainz_importer_spark.streaming.sketch_stream import (
     read_heavy_hitters,
     start_heavy_hitters,
@@ -48,7 +49,9 @@ def test_stream_merge_exact_regime_and_replay(spark, stream_dirs, tmp_path_facto
         "apple": (4, 4), "banana": (3, 3), "cherry": (1, 1), "date": (1, 1),
     }
 
-    # replay with a fresh checkpoint: epoch ids dedupe, counts unchanged
+    # replay with a fresh checkpoint: every epoch id is held, so nothing
+    # is computed or appended, and counts are unchanged
+    files = committed_files(out)
     stream2 = (
         spark.readStream.schema("doc_id long, text string")
         .option("maxFilesPerTrigger", 1)
@@ -56,6 +59,7 @@ def test_stream_merge_exact_regime_and_replay(spark, stream_dirs, tmp_path_facto
     )
     q2 = start_heavy_hitters(stream2, out, str(base / "ckpt2"), capacity=64)
     q2.awaitTermination(120)
+    assert committed_files(out) == files
     again = {r["token"]: r["count_lower"]
              for r in read_heavy_hitters(spark, out, k=10).collect()}
     assert again["apple"] == 4 and again["banana"] == 3

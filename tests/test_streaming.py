@@ -4,9 +4,15 @@ foreachBatch sink must survive restarts and replays."""
 
 from __future__ import annotations
 
+import ast
+from pathlib import Path
+
 import pytest
 
-from mbrainz_importer_spark.operators.idempotency import IdempotentParquetSink
+from mbrainz_importer_spark.operators.idempotency import (
+    IdempotentParquetSink,
+    committed_files,
+)
 from mbrainz_importer_spark.streaming.exactly_once import (
     idempotent_foreach_batch,
     start_exactly_once,
@@ -82,24 +88,26 @@ def test_exactly_once_sink_restart_and_replay(spark, events_dir, events_stream_s
     assert spark.read.parquet(sink_path).count() == n1
 
     # simulate a replayed micro-batch (fresh checkpoint, same epoch ids):
-    # the anti-join on batch_id swallows the duplicate delivery
+    # the sink holds every epoch id, so the delivery appends nothing
+    files = committed_files(sink_path)
     ckpt2 = str(base / "ckpt2")
     stream3 = spark.readStream.schema(events_stream_schema).parquet(events_dir)
     q3 = start_exactly_once(stream3, sink_path, ckpt2)
     q3.awaitTermination(120)
     assert spark.read.parquet(sink_path).count() == n1
+    assert committed_files(sink_path) == files
 
 
 def test_exactly_once_micro_batch_job_budget(spark, tmp_path):
     """Each micro-batch is one observed append: a cold epoch runs the
-    write alone, a warm one adds the done-set read and broadcast, and a
-    replayed one writes nothing new."""
+    write alone, a warm one adds the ledger check, and a replayed one
+    runs the check alone and appends no part file."""
     src = tmp_path / "src"
     for i in range(3):
         spark.createDataFrame([(i, j) for j in range(10)], "f int, x long") \
             .coalesce(1).write.parquet(str(src / f"f{i}"))
     sink = IdempotentParquetSink(str(tmp_path / "sink"))
-    write = idempotent_foreach_batch(sink)
+    write = idempotent_foreach_batch(sink, "epoch", lambda df: df)
     jobs = []
 
     def counted(batch_df, epoch_id):
@@ -118,11 +126,39 @@ def test_exactly_once_micro_batch_job_budget(spark, tmp_path):
 
     run("ckpt")
     n = spark.read.parquet(sink.path).count()
+    files = committed_files(sink.path)
     run("ckpt-replay")  # fresh checkpoint: every epoch id is delivered again
     cold, *warm = jobs[:3]
     assert len(jobs) == 6 and n == 30
-    assert cold == 1 and max(warm) <= 3 and max(jobs[3:]) <= 4, jobs
+    assert cold == 1 and max(warm) <= 3 and max(jobs[3:]) <= 2, jobs
     assert spark.read.parquet(sink.path).count() == n
+    assert committed_files(sink.path) == files
+
+
+def test_one_stream_tail_and_one_epoch_tag():
+    """Only `exactly_once.py` starts a foreachBatch stream (`drain`) and
+    tags rows with a batch id (`idempotent_foreach_batch`); every other
+    streaming module states only what its epoch computes."""
+    exempt = {
+        # a memory sink in complete mode, not a foreachBatch fold
+        ("backpressure.py", "replay_counts_available_now", "trigger"),
+        # returns the foreachBatch writer: its caller adds the trigger and
+        # checkpoint by contract
+        ("tx_watch.py", "watch_summaries", "foreachBatch"),
+    }
+    pkg = Path(__file__).resolve().parents[1] / "mbrainz_importer_spark" / "streaming"
+    found = []
+    for path in sorted(pkg.glob("*.py")):
+        if path.name == "exactly_once.py":
+            continue
+        for top in ast.parse(path.read_text()).body:
+            for node in ast.walk(top):
+                name = getattr(node, "attr", None) or getattr(node, "id", None)
+                if name in ("trigger", "foreachBatch", "concat_ws") and (
+                    path.name, getattr(top, "name", None), name
+                ) not in exempt:
+                    found.append(f"{path.name}:{node.lineno} {name}")
+    assert not found, found
 
 
 def test_streaming_dim_enriched_equals_batch(spark, events_dir, events_stream_schema):

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import pytest
 
+from mbrainz_importer_spark.operators.idempotency import committed_files
 from mbrainz_importer_spark.plans.history import as_of, read_log, tx_range
 from mbrainz_importer_spark.streaming.tx_ingest import (
     compact_log,
@@ -56,11 +57,13 @@ def test_ingest_asof_equals_batch_and_replay(spark, op_dirs, tmp_path_factory):
         map(tuple, tx_range(batch_log, 2, 3).collect())
     )
 
-    # replay with a fresh checkpoint: batch-id anti-join, no growth
+    # replay with a fresh checkpoint: every epoch id is held, no growth
     n = log.count()
+    files = committed_files(out)
     q2 = start_tx_ingest(_stream(spark, op_dirs), out, str(base / "ckpt2"))
     q2.awaitTermination(120)
     assert read_tx_log(spark, out).count() == n == 4
+    assert committed_files(out) == files
 
     # compaction: same log content, attribute-partitioned layout
     store = str(base / "store")
